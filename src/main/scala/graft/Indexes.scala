@@ -23,10 +23,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Cross-JVM adoption works because artifact identity is carried on
   * disk, not in the in-memory catalog: the table directory holds a
   * `_GRAFT_SPEC` marker recording the bucket layout, and the table
-  * name folds in a fingerprint of the INPUT data (file names, sizes,
-  * mtimes under sfDir), so regenerated testdata or a changed bucket
-  * spec can never be served a stale artifact — the name or the marker
-  * stops matching and the artifact rebuilds.
+  * name folds in the [[Memo.fingerprint]] of the INPUT data (every
+  * file's path, size and mtime under sfDir), taken afresh on each
+  * call — so regenerated testdata, in place or not, or a changed
+  * bucket spec is never served a stale artifact: the name or the
+  * marker stops matching and the artifact rebuilds (IndexesSpec's
+  * in-place regen test pins this within one JVM).
   *
   * Correctness contract: reading the persisted artifact must be
   * result-identical to inlining its build plan — all builds here are
@@ -55,49 +57,20 @@ object Indexes {
   private val buildLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Fingerprint of the input data under `sfDir`: every top-level entry's
-    * (name, length, mtime), plus one level of children for directories
-    * (the `<table>.parquet` dirs). Regenerated inputs → different
-    * fingerprint → different artifact name; the stale artifact is simply
-    * never looked at again (ADVICE r06: the old sfDir-only slug would
-    * have served stale results). Missing dir → constant, so tableName
-    * stays usable in tests pointing at fixtures. */
-  private def fingerprint(sfDir: String): String = {
-    val root = java.nio.file.Paths.get(sfDir)
-    if (!java.nio.file.Files.isDirectory(root)) "nofp"
-    else {
-      val sb = new StringBuilder
-      def stamp(p: java.nio.file.Path): Unit = {
-        sb.append(p.getFileName.toString).append(':')
-          .append(java.nio.file.Files.size(p)).append(':')
-          .append(java.nio.file.Files.getLastModifiedTime(p).toMillis).append(';')
-      }
-      val top = java.nio.file.Files.list(root)
-      try top.sorted.forEach { p =>
-        stamp(p)
-        if (java.nio.file.Files.isDirectory(p)) {
-          val kids = java.nio.file.Files.list(p)
-          try kids.sorted.forEach(stamp) finally kids.close()
-        }
-      } finally top.close()
-      sb.toString
-    }
+  /** Visible-for-tests: the catalog name an artifact lands under. It
+    * folds in [[Memo.fingerprint]] of `sfDir`, recomputed on every call
+    * (one directory walk), so an in-place regen of the inputs — even
+    * under the same file names — yields a new name and a fresh build;
+    * the stale artifact is simply never looked at again. */
+  private[graft] def tableName(sfDir: String, name: String): String = {
+    val slug = java.security.MessageDigest.getInstance("MD5")
+      .digest((sfDir + "\u0000" + Memo.fingerprint(Seq(sfDir))).getBytes("UTF-8"))
+      .take(4).map("%02x".format(_)).mkString
+    s"graft_idx_${slug}_$name"
   }
 
-  private def slug(sfDir: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest((sfDir + "\u0000" + fingerprint(sfDir)).getBytes("UTF-8"))
-      .take(4).map("%02x".format(_)).mkString
-
-  /** Visible-for-tests: the catalog name an artifact lands under.
-    * Memoized per sfDir — the fingerprint walk is two directory
-    * listings, but tableName is called on every query construction. */
-  private val slugMemo = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] def tableName(sfDir: String, name: String): String =
-    s"graft_idx_${slugMemo.computeIfAbsent(sfDir, slug)}_$name"
-
-  /** Artifact names requested since the last [[resetTouched]] — lets
-    * IndexWarmSpec detect queries that build/adopt an artifact at
+  /** Whether any artifact was requested since the last [[resetTouched]] —
+    * lets IndexWarmSpec detect queries that build/adopt an artifact at
     * CONSTRUCTION time behind a localCheckpoint (invisible in the final
     * plan string). Diagnostic surface only.
     *
@@ -106,12 +79,11 @@ object Indexes {
     * forked test suites sequentially (default testForkedParallel :=
     * false) and IndexWarmSpec probes queries one at a time (r17
     * ADVICE: enabling parallel forked tests or concurrent construction
-    * would cross-contaminate the set and flake the spec; if that ever
+    * would cross-contaminate the flag and flake the spec; if that ever
     * changes, scope this per-thread instead). */
-  private val touched =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private[graft] def resetTouched(): Unit = touched.clear()
-  private[graft] def touchedNonEmpty: Boolean = !touched.isEmpty
+  private val touched = new java.util.concurrent.atomic.AtomicBoolean(false)
+  private[graft] def resetTouched(): Unit = touched.set(false)
+  private[graft] def anyTouched: Boolean = touched.get
 
   /** The bucket-layout marker an adoptable directory must match. */
   private def specJson(bucketKeys: Seq[String], nBuckets: Int): String =
@@ -129,7 +101,7 @@ object Indexes {
             bucketKeys: Seq[String], nBuckets: Int = 32)
            (build: => DataFrame): DataFrame = {
     val tbl = tableName(sfDir, name)
-    touched.add(tbl)
+    touched.set(true)
     val perSession = memo.synchronized {
       memo.computeIfAbsent(s,
         _ => scala.collection.mutable.Map.empty[String, DataFrame])

@@ -43,18 +43,6 @@ import org.apache.spark.sql.functions._
   */
 object Clustering {
 
-  /** Dev-only phase timing (`-Dgraft.cc.debug`): stderr per-phase wall
-    * times for the iterative loop — the cost here is round overhead, not
-    * data volume, so tuning needs job-level visibility. */
-  private def timed[T](tag: String)(f: => T): T =
-    if (!sys.props.contains("graft.cc.debug")) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(f"[cc] $tag%-18s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      r
-    }
-
   /** (doc_id, bucket) membership: bucket = band ':' band-min shingle md5 —
     * identical band arithmetic to `doc_fingerprint` (TextAnalysis). */
   def fingerprintBuckets(docs: DataFrame): DataFrame = {
@@ -107,12 +95,10 @@ object Clustering {
       // InMemoryRelation's real byte size (see the Spark 4 hazard
       // above), and the single action both populates it and cuts
       // lineage.
-      changed = timed("jump ckpt+count") {
-        val obs = org.apache.spark.sql.Observation()
-        cur = c.observe(obs, sum(when(col("moved"), 1L).otherwise(0L)).as("n"))
-          .drop("moved").localCheckpoint()
-        Option(obs.get("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      }
+      val obs = org.apache.spark.sql.Observation()
+      cur = c.observe(obs, sum(when(col("moved"), 1L).otherwise(0L)).as("n"))
+        .drop("moved").localCheckpoint()
+      changed = Option(obs.get("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
       c.unpersist(false)
       jumps += 1
     }
@@ -208,16 +194,11 @@ object Clustering {
         // an observed metric on the checkpoint job (VERDICT r04 task 4
         // — previously a separate filter-count ran before the compress
         // chain re-scanned the cache).
-        val candCk = timed("stepA ckpt+count") {
-          val obs = org.apache.spark.sql.Observation()
-          val ck = cand.observe(obs, sum(when(col("moved"), 1L).otherwise(0L)).as("n"))
-            .drop("moved").localCheckpoint()
-          changed = Option(obs.get("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
-          ck
-        }
-        if (sys.props.contains("graft.cc.debug"))
-          System.err.println(s"[cc] round $round changed=$changed")
-        if (changed > 0) lab = timed("compress")(compress(candCk, maxJumps = 40))
+        val obs = org.apache.spark.sql.Observation()
+        val candCk = cand.observe(obs, sum(when(col("moved"), 1L).otherwise(0L)).as("n"))
+          .drop("moved").localCheckpoint()
+        changed = Option(obs.get("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
+        if (changed > 0) lab = compress(candCk, maxJumps = 40)
         cand.unpersist(false)
         round += 1
       }

@@ -63,18 +63,6 @@ object NearDup {
     * ~10⁶), odd so odd originals get even twins. */
   val BmfTwinOffset = 10000000001L
 
-  /** Broadcast-gate sizing per semdedup_best artifact (cells, dim):
-    * the artifact is immutable per fixture (its name folds in the
-    * input fingerprint), so the sizing probes run once per JVM, not
-    * once per query rep. */
-  private val semSizing =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
-
-  /** [[embeddingNearDupByLabel]]'s broadcast-gate label count, memoized
-    * per fixture dir (registry path only — direct calls re-count). */
-  private val labelCount =
-    new java.util.concurrent.ConcurrentHashMap[String, Long]()
-
   /** Per-doc MinHash signature: explode distinct 3-token shingles,
     * hash each under K fixed seeds, element-wise min via the
     * [[Sketches.MinHashAgg]] UDAF. One shuffle (groupBy doc). */
@@ -286,8 +274,7 @@ object NearDup {
     * [[semDedupKeep]]/[[embeddingNearDupLsh]], whose cells are sized by
     * construction. */
   def embeddingNearDupByLabel(emb: DataFrame, threshold: Double, k: Int,
-                              cap: Int,
-                              idx: Option[(org.apache.spark.sql.SparkSession, String)] = None): DataFrame = {
+                              cap: Int): DataFrame = {
     val v0 = emb.select(col("vec_id"), col("label"),
       col("embedding").cast("array<double>").as("v"))
       .withColumn("n2", Similarity.norm2(col("v")))
@@ -303,17 +290,9 @@ object NearDup {
     // semi-join instead of forcing the broadcast. The estimate reads
     // ONE pruned column (labels·cap bounds the heap output; an earlier
     // checkpoint-and-count of the heap itself cost ~0.4 s/rep at sf1)
-    // and is memoized per fixture dir on the registry path — keyed by
-    // Indexes.tableName, which folds the input-data FINGERPRINT into
-    // the key (r17 ADVICE: the raw dir path served a stale count to
-    // the gate after an in-place fixture regen; the sibling semSizing
-    // memo already used the fingerprint-folding key).
-    def countLabels(): Long =
+    // and is memoized under the graft.Memo rule on `emb`.
+    val nLabels: Long = graft.Memo.of(emb, "labels") {
       emb.agg(countDistinct(col("label"))).head().getLong(0)
-    val nLabels = idx match {
-      case Some((_, d)) => labelCount.computeIfAbsent(
-        graft.Indexes.tableName(d, "bylabel_nlabels"), _ => countLabels())
-      case None => countLabels()
     }
     // estimate is an UPPER bound (r17 ADVICE): a (label string, vec_id
     // long) row is ~32 B unrounded but label width is data-dependent —
@@ -502,18 +481,13 @@ object NearDup {
     // cheap (a pruned one-column distinct count + a limit-1 dim read;
     // one agg over both columns measurably dragged the whole query
     // 1.37→2.10 s at sf1 by scanning the vector column per rep) and
-    // memoized per artifact — warm reps run zero sizing jobs.
-    def measureSizing(): (Long, Long) = {
+    // memoized under the graft.Memo rule on `emb`, which the assignment
+    // is a deterministic function of — warm reps run zero sizing jobs.
+    val (nCells, dim) = graft.Memo.of(emb, "semSizing") {
       val nc = best.agg(countDistinct(col("centroid"))).head().getLong(0)
       val d = best.select(size(col("v")).as("d")).limit(1).collect()
         .headOption.map(_.getInt(0).toLong).getOrElse(0L)
       (nc, d)
-    }
-    val (nCells, dim) = idx match {
-      case Some((_, d)) => semSizing.computeIfAbsent(
-        graft.Indexes.tableName(d, "semdedup_best"),
-        _ => measureSizing())
-      case None => measureSizing()
     }
     // screen a-side: the cap smallest-vec_id representatives per cell
     // (bounded heap → size-gated broadcast semi-join, the
@@ -974,8 +948,8 @@ object NearDup {
         |SELECT label, CAST(pair_count AS BIGINT) AS pair_count,
         |  CAST(rnk AS INT) AS rnk, id1, id2, cos
         |FROM ranked WHERE rnk <= 8 ORDER BY label, rnk""".stripMargin) { (s, d) =>
-      embeddingNearDupByLabel(Tables.embeddings(s, d), 0.3, 8, ByLabelCap,
-        idx = Some((s, d))).orderBy("label", "rnk")
+      embeddingNearDupByLabel(Tables.embeddings(s, d), 0.3, 8, ByLabelCap)
+        .orderBy("label", "rnk")
     },
     // X79 SemDeDup (fully oracled): centroid-quantized clusters →
     // within-cluster cosine pairs → id-minimal keeper per ≥τ

@@ -354,7 +354,7 @@ object Similarity {
               nProbe: Int = 4, iters: Int = 3,
               idx: Option[(org.apache.spark.sql.SparkSession, String)] = None,
               corpusTag: String = "emb"): DataFrame = {
-    // 12/4 default picked by IvfSweep: mean top-10 recall 0.65 at a 1/3
+    // 12/4 default picked by an r04 sweep: mean top-10 recall 0.65 at a 1/3
     // probe fraction (16/4 sat at 0.49; wider probes buy recall roughly
     // linearly in candidates scanned).
     val v = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -795,7 +795,7 @@ object Similarity {
     // Floors are set below the measured operating points with margin
     // (SimilaritySpec negative control: a broken index measures
     // 0.03–0.11, far under any floor): LSH 0.45 (measured 0.66–0.70 at
-    // sf0.001), IVF 0.40 (IvfSweep: 0.65 at the 12/4 default), SQ8
+    // sf0.001), IVF 0.40 (r04 sweep: 0.65 at the 12/4 default), SQ8
     // 0.85 (measured ≥0.95 — 8-bit codes barely perturb ranking), PQ
     // 0.60 (r13: the r12 default m=8 measured 0.4625 at sf0.1 — its
     // 0.30 floor only caught catastrophe; the PqSweep grid moved the

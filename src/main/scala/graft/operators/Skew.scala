@@ -15,12 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object Skew {
 
-  /** Once-per-JVM hot-key probe results, keyed on (resolved input
-    * files, key column, thresholds) — bounded by the number of distinct
-    * (fixture file set, gate config) pairs a session touches. */
-  private val probedHotCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   /** Salted equi-join: `big ⋈ small` on `key`, with the big side salted
     * by a deterministic per-row hash and the small side exploded across
     * all `saltBuckets` salts. Produces exactly the rows of the plain
@@ -71,29 +65,14 @@ object Skew {
       .filter(col("__rows_per_key") > hotKeyRowThreshold)
       .select(col(key))
     // scalar-count decision on the capped aggregate (no data collect).
-    // r19: the probe is a PLAN decision, not a result — memoize it per
-    // (resolved input files, key, threshold), the Tables.probedLongScans
-    // convention for load-time invariants: repeated runs over the same
-    // immutable fixture files re-derive the same branch, so only the
-    // first pays the rows-per-key aggregation job. A regen writes new
-    // part file names (fresh UUIDs) and re-probes automatically;
-    // non-file inputs (spec fixtures) have no stable key and always
-    // probe live.
-    // key = resolved files + the analyzed plan's semantic hash: two
+    // r19: the probe is a PLAN decision, not a result — memoized under
+    // the graft.Memo rule on `big`'s input files and analyzed plan (two
     // gated joins over the SAME file but a different derived key
-    // expression (the SkewSpec hot vs uniform fixtures) must not adopt
-    // each other's probe.
-    val memoKey = {
-      val files = big.inputFiles
-      if (files.isEmpty) None
-      else Some(files.sorted.mkString(",") +
-        s"#${big.queryExecution.analyzed.semanticHash()}" +
-        s"#$key#$hotKeyRowThreshold#$maxHotKeys")
-    }
-    def countHot(): Long = hotKeys.limit(maxHotKeys + 1).count()
-    val nHot: Long = memoKey match {
-      case Some(k) => probedHotCounts.computeIfAbsent(k, _ => countHot()).longValue()
-      case None => countHot()
+    // expression, the SkewSpec hot vs uniform fixtures, never adopt each
+    // other's probe), so repeated runs pay the rows-per-key aggregation
+    // job once per input version.
+    val nHot: Long = graft.Memo.of(big, "hotKeys", key, hotKeyRowThreshold, maxHotKeys) {
+      hotKeys.limit(maxHotKeys + 1).count()
     }
     if (nHot == 0L) {
       big.join(small, Seq(key))

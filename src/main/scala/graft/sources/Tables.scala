@@ -91,8 +91,8 @@ object Tables {
     // SINGLE-row-group files (a row group is the vectorized reader's
     // atomic unit — the documented pathology this loader exists for, r18
     // ADVICE): clamp by the actual row-group count from the parquet
-    // footers. Footer reads are metadata-only, memoized per path, and
-    // skipped for many-file layouts (file count already parallelizes).
+    // footers. Footer reads are metadata-only, memoized, and skipped for
+    // many-file layouts (file count already parallelizes).
     val effectiveSplits = rowGroupCount(path).fold(naturalSplits)(math.min(naturalSplits, _))
     if (bytes < (256L << 10) || effectiveSplits >= cores) df
     else df.repartition(cores)
@@ -101,15 +101,12 @@ object Tables {
   /** Total parquet row groups under `path`, from footer metadata —
     * None when unknown (unreadable, or more files than worth probing:
     * past `MaxFooterProbes` files the file count itself feeds the scan
-    * enough splits and the byte gate is accurate). Memoized per path —
-    * fixture files are immutable within a session (the probedLongScans
-    * caveat about same-name in-JVM overwrites applies). */
+    * enough splits and the byte gate is accurate). Memoized under the
+    * [[graft.Memo]] rule. */
   private val MaxFooterProbes = 64
-  private val probedRowGroups =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[Long]]()
 
   private def rowGroupCount(path: String): Option[Long] =
-    probedRowGroups.computeIfAbsent(path, { _ =>
+    graft.Memo(Seq(path), "rowGroups") {
       try {
         val p = java.nio.file.Paths.get(path)
         val files: Seq[java.nio.file.Path] =
@@ -135,7 +132,7 @@ object Tables {
           Some(total)
         }
       } catch { case scala.util.control.NonFatal(_) => None }
-    })
+    }
 
   def region(s: SparkSession, d: String): DataFrame = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = apply(s, d, "nation")
@@ -213,25 +210,13 @@ object Tables {
   private val loBoundMicros = 631152000000000L   // 1990-01-01 as micros
   private val hiBoundMicros = 4102444800000000L  // 2100-01-01 as micros
 
-  /** Once-per-scan wrong-unit probe for int64 time columns, memoized on
-    * (resolved input files, column) so repeated loads of the same path
-    * (every query re-calls the loader) pay zero jobs after the first.
-    * File-path keying (not the analyzed plan's semanticHash, which stays
-    * constant across an in-place overwrite) means a regen that writes
-    * NEW part files — Spark/pyarrow writers name parts with fresh UUIDs —
-    * re-probes automatically. The one uncovered case is an in-JVM
-    * overwrite of the SAME file name with a different long unit: that
-    * also leaves Spark's own file-status caches stale, so an in-session
-    * same-name regen requires a new SparkSession regardless of this
-    * probe. The key set is bounded by the number of distinct fixture
-    * files a session touches (tens). */
-  private val probedLongScans =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
+  /** Once-per-input wrong-unit probe for int64 time columns: every
+    * query re-calls the loader, so the check runs under [[graft.Memo]]
+    * keyed on the resolved input files and the column — zero jobs after
+    * the first load of the same file versions. */
   private def probeLongUnit(raw: DataFrame, c: String): Unit = {
     val files = raw.inputFiles.sorted
-    val key = files.mkString(",") + "#" + c
-    if (!probedLongScans.contains(key)) {
+    graft.Memo(files.toSeq, "longUnit", c) {
       val row = probeMinMax(raw, c, files)
       Seq(0, 1).foreach { i =>
         if (!row.isNullAt(i)) {
@@ -243,7 +228,6 @@ object Tables {
                 "update Tables.normalizeTs")
         }
       }
-      probedLongScans.add(key)
     }
   }
 
@@ -254,7 +238,7 @@ object Tables {
     * statistics — `PushedAggregation` in the scan, no data pages read.
     * EventsEncodingSpec pins which of the two plans a nanos-int64 column
     * actually gets; if the rule rejects it, the fallback cost is one
-    * column scan once per JVM, which the memo bounds. Falls back to the
+    * column scan per input version, which the memo bounds. Falls back to the
     * caller's plan when the file list is unavailable (e.g. a non-file
     * relation in tests). */
   private def probeMinMax(raw: DataFrame, c: String, files: Seq[String]) = {

@@ -3,7 +3,7 @@ package graft
 /** Dev tool: execute selected queries (noop sink) and dump the FINAL
   * adaptive plan — shows which exchanges AQE actually reused at
   * runtime (ReusedExchange / stage reuse), which the static
-  * [[ExplainDump]] cannot. Run:
+  * [[PlanDump]] cannot. Run:
   * sbt "Test/runMain graft.AdaptiveDump doc_bigram_surprise". */
 object AdaptiveDump {
   def main(args: Array[String]): Unit = {

@@ -17,8 +17,10 @@ class IndexesSpec extends AnyFunSuite {
     * path even when a previous test-JVM run left the external dir
     * behind (adoption is the point of the layer, but not of the
     * builds-once test). */
-  private def obliterate(sfDir: String, name: String): Unit = {
-    val tbl = Indexes.tableName(sfDir, name)
+  private def obliterate(sfDir: String, name: String): Unit =
+    dropArtifact(Indexes.tableName(sfDir, name))
+
+  private def dropArtifact(tbl: String): Unit = {
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     val loc = new org.apache.hadoop.fs.Path(
       new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir")), tbl)
@@ -96,6 +98,71 @@ class IndexesSpec extends AnyFunSuite {
     spark.sql(s"DROP TABLE $tbl")
     mk(spark.newSession(), 8).collect()
     assert(builds == 2, "a changed bucket spec must force a rebuild")
+  }
+
+  test("an in-place regen under the same file names gets fresh answers in one JVM") {
+    // graft.Memo's rule: every probe is keyed on each input file's
+    // (path, size, mtime), and the artifact name folds in the same
+    // stamp — so rewriting t.parquet in place must re-derive the
+    // artifact's rows, the spread row-group gate and the skew branch.
+    import java.nio.file.{Files, StandardCopyOption}
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("graft-regen")
+    val d = dir.toString
+    // `rows` rows of (k, pad) in ONE file; `hot` puts every even id on
+    // key 0; `rowGroupBytes` is the parquet block size
+    def write(rows: Long, hot: Boolean, rowGroupBytes: Long): Unit = {
+      val tmp = dir.resolve("tmp")
+      val k = if (hot) when(col("id") % 2 === 0, 0L).otherwise(col("id"))
+        else col("id") % 1000
+      spark.range(rows).select(k.as("k"), sha2(col("id").cast("string"), 256).as("pad"))
+        .coalesce(1).write.option("parquet.block.size", rowGroupBytes).parquet(tmp.toString)
+      val part = Files.list(tmp).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      Files.move(part, dir.resolve("t.parquet"), StandardCopyOption.REPLACE_EXISTING)
+      Files.walk(tmp).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    }
+    def artifact() = Indexes.table(spark, d, "regen_sums", Nil) {
+      sources.Tables(spark, d, "t").agg(count(lit(1)).as("n"), sum("k").as("sk"))
+    }.collect().toSeq
+    // spread repartitions iff the footers hold fewer row groups than
+    // cores; the small split size makes the byte estimate exceed cores
+    def spreads(): Boolean = {
+      var repartitioned = false
+      SparkTestSession.withConf("spark.sql.files.maxPartitionBytes" -> "64k") {
+        repartitioned = sources.Tables.spread(spark, d, "t").queryExecution.logical
+          .collectFirst { case r: org.apache.spark.sql.catalyst.plans.logical.Repartition => r }
+          .isDefined
+      }
+      repartitioned
+    }
+    def skewBranch(): String = {
+      val small = spark.range(2000).select(col("id").as("k"), lit(1).as("w"))
+      val plan = operators.Skew.saltedJoinGated(sources.Tables(spark, d, "t"), small,
+        "k", 4, Seq("pad"), hotKeyRowThreshold = 100).queryExecution.logical.toString
+      if (plan.contains("__hot")) "hybrid" else if (plan.contains("__salt")) "salted" else "plain"
+    }
+    val names = scala.collection.mutable.ArrayBuffer.empty[String]
+    try {
+      write(8000, hot = false, rowGroupBytes = 128L << 20) // one row group
+      names += Indexes.tableName(d, "regen_sums")
+      val art1 = artifact()
+      assert(spreads(), "one row group cannot feed 4 cores: spread")
+      assert(skewBranch() == "plain", "uniform keys: no hot key")
+
+      write(12000, hot = true, rowGroupBytes = 64L << 10) // many row groups
+      names += Indexes.tableName(d, "regen_sums")
+      assert(names(1) != names(0), "the artifact name must fold in the new stamp")
+      val art2 = artifact()
+      val direct = sources.Tables(spark, d, "t")
+        .agg(count(lit(1)).as("n"), sum("k").as("sk")).collect().toSeq
+      assert(art2 != art1 && art2 == direct, s"stale artifact rows: $art2 vs fresh $direct")
+      assert(!spreads(), "the new footers hold enough row groups: no spread")
+      assert(skewBranch() == "hybrid", "key 0 is now hot")
+    } finally {
+      names.foreach(dropArtifact)
+      Files.walk(dir).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists)
+    }
   }
 
   test("persisted co-order pair table equals the inline self-join") {

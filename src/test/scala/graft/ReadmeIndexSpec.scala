@@ -114,4 +114,24 @@ class ReadmeIndexSpec extends AnyFunSuite {
         s"$name: README says '$oracle' but oracleSql ${if (oracled.contains(name)) "has" else "lacks"} it")
     }
   }
+
+  test("src/main declares no JVM-global cache outside graft.Memo and Indexes' two kept maps") {
+    // One staleness rule for probe results (Memo's input fingerprint):
+    // a new hand-rolled map in the main tree fails here. Indexes keeps
+    // its per-session table map and per-artifact build locks.
+    val decl = "\\bnew\\s+[\\w.]*(ConcurrentHashMap|WeakHashMap)\\b|\\bnewKeySet\\b".r
+    val mainTree = root.resolve("src/main/scala")
+    val walk = java.nio.file.Files.walk(mainTree)
+    val found = try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq.flatMap { f =>
+        val code = java.nio.file.Files.readAllLines(f).asScala.map(_.trim)
+          .filterNot(l => l.startsWith("//") || l.startsWith("*") || l.startsWith("/*"))
+        val n = code.map(decl.findAllIn(_).size).sum
+        if (n == 0) None else Some(mainTree.relativize(f).toString -> n)
+      }.toMap
+    } finally walk.close()
+    assert(found == Map("graft/Memo.scala" -> 1, "graft/Indexes.scala" -> 2),
+      s"JVM-global map declarations in src/main: $found — route probe results through graft.Memo")
+  }
 }

@@ -229,7 +229,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("recall CI pins at sf0.1: LSH/IVF floors + SQ8 rank-error bound") {
-    // VERDICT r04 task 5: the RecallSweep/IvfSweep findings promoted to
+    // VERDICT r04 task 5: the RecallSweep and ivfTopK sweep findings promoted to
     // asserted thresholds at the BENCH scale, so a silent config
     // regression (plane/table count, probe width, quantizer damage)
     // red-lines here. Measured on this corpus (RecallPinProbe):
