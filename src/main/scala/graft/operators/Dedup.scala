@@ -260,11 +260,9 @@ object Dedup {
         .select(col("doc_id"), array_distinct(TextFns.ngrams(col("text"), 3)).as("s"))
       val a = sh.select(col("doc_id").as("id1"), col("s").as("s1"))
       val b = sh.select(col("doc_id").as("id2"), col("s").as("s2"))
-      val inter = size(array_intersect(col("s1"), col("s2"))).cast("double")
       a.join(b, col("id1") + 1 === col("id2"))
         .select(col("id1"), col("id2"),
-          round(try_divide(inter,
-            (size(col("s1")) + size(col("s2"))).cast("double") - inter), 9).as("jaccard"))
+          round(Blocking.jaccard(col("s1"), col("s2")), 9).as("jaccard"))
         .orderBy("id1")
     },
 

@@ -9,12 +9,9 @@ import org.apache.spark.sql.functions._
 /** Near-duplicate detection (SURVEY.md §2b X2 + the training-data
   * mandate): MinHash + banded LSH, and SimHash + chunked LSH.
   *
-  * Scale design: the ONLY join in either path is an equi-join on LSH
-  * bucket keys — candidate generation never goes all-pairs. Buckets
-  * above [[maxBucket]] are dropped before pairing (standard LSH
-  * guard: a degenerate bucket of B docs would otherwise cost B²; the
-  * docs it contains are near-identical boilerplate better handled by
-  * exact dedup). Verification of candidates compares fixed-k
+  * Blocking, caps, pairing and Jaccard come from [[Blocking]]; each
+  * miner here supplies its block keys, cap policy and verify.
+  * Verification of MinHash/SimHash candidates compares fixed-k
   * signatures — O(k) per pair, independent of document size.
   */
 object NearDup {
@@ -81,46 +78,17 @@ object NearDup {
   def minhashPairs(docs: DataFrame, threshold: Double,
                    idx: Option[(org.apache.spark.sql.SparkSession, String)] = None,
                    corpusName: String = "docs"): DataFrame = {
-    // Materialize signatures once: they feed three plan branches (the
-    // bucket-size guard plus both sides of the band self-join), which
-    // would each re-run the shingle-explode × K-hash × UDAF pipeline —
-    // the expensive part of the whole query. Persisted signature table
-    // when indexed (minhash_near_dup_pairs and minhash_calibration
-    // share the build); per-query checkpoint otherwise.
-    val sigs = idx match {
-      case Some((s, d)) =>
-        graft.Indexes.table(s, d, s"minhash_sigs_$corpusName", Seq("doc_id")) {
-          minhashSignatures(docs)
-        }
-      case None => minhashSignatures(docs).localCheckpoint()
+    // signatures feed the bucket-size guard and both self-join sides;
+    // minhash_near_dup_pairs and minhash_calibration share the artifact
+    val sigs = Blocking.persist(idx, s"minhash_sigs_$corpusName", Seq("doc_id")) {
+      minhashSignatures(docs)
     }
-    val bands = bandExplode(sigs)
-    // LSH guard: drop degenerate buckets before the self-join.
-    val small = minhashBandStats(sigs)
-      .filter(col("bucket_n") <= maxBucket)
-    val inSmall = bands.join(small, Seq("band", "bsig"))
-    val a = inSmall.select(col("band"), col("bsig"), col("doc_id").as("id1"), col("sig").as("s1"))
-    val b = inSmall.select(col("band"), col("bsig"), col("doc_id").as("id2"), col("sig").as("s2"))
-    // Verify BELOW the pair distinct (r16, the lshCandidatePairs
-    // bucket-local-scoring convention): the estimate is a pure
-    // function of the signatures, so it is computed map-side IN the
-    // bucket join and the threshold filter runs before the distinct —
-    // the dedup exchange then carries (id1, id2, est) ≈ 24 B/row for
-    // surviving pairs only, instead of both K-element signature arrays
-    // (~0.5 KB/row) for every collision. A pair colliding in several
-    // bands scores identically each time, so the distinct result is
-    // unchanged. Measured sf1 (TimeQ, 251k candidates): near_dup_pairs
-    // 2.57 → 2.38 s, calibration 2.41 → 2.25 s — modest here because
-    // candidate GENERATION dominates at this SF, but the dedup
-    // exchange now scales with survivors × 24 B instead of collisions
-    // × 0.5 KB, which is the term that grows at 100×.
-    a.join(b, Seq("band", "bsig"))
-      .filter(col("id1") < col("id2"))
-      .select(col("id1"), col("id2"),
-        (aggregate(zip_with(col("s1"), col("s2"),
-          (x, y) => when(x === y, 1).otherwise(0)), lit(0), _ + _).cast("double") / K).as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
-      .distinct() // a pair can collide in several bands
+    val keys = Seq("band", "bsig")
+    Blocking.selfPairs(bandExplode(sigs).transform(Blocking.dropOver(keys, maxBucket)),
+      keys, "doc_id", Seq("sig"),
+      (aggregate(zip_with(col("sig1"), col("sig2"),
+        (x, y) => when(x === y, 1).otherwise(0)), lit(0), _ + _).cast("double") / K).as("est_jaccard"),
+      col("est_jaccard") >= threshold)
   }
 
   /** One row per (doc, band) with the 64-bit band-signature bucket key. */
@@ -139,8 +107,7 @@ object NearDup {
     * be attributed by measurement, not assumed) and NearDupSpec asserts
     * the bound. */
   def minhashBandStats(sigs: DataFrame): DataFrame =
-    bandExplode(sigs).groupBy("band", "bsig")
-      .agg(count(lit(1)).as("bucket_n"))
+    Blocking.sizes(bandExplode(sigs), Seq("band", "bsig"))
 
   /** The [[simhashPairs]] adaptive bucket cap as a pure function of
     * corpus size (see the simhashPairs doc for the N/16 rationale and
@@ -165,8 +132,7 @@ object NearDup {
     * CalibProbe prints these counts per fixture; NearDupSpec asserts
     * the bound. */
   def simhashChunkStats(sigs: DataFrame): DataFrame =
-    chunkExplode(sigs).groupBy("chunk", "csig")
-      .agg(count(lit(1)).as("bucket_n"))
+    Blocking.sizes(chunkExplode(sigs), Seq("chunk", "csig"))
 
   /** Per-doc 64-bit SimHash over normalized tokens. */
   def simhashSignatures(docs: DataFrame): DataFrame =
@@ -197,44 +163,15 @@ object NearDup {
   def simhashPairs(docs: DataFrame, maxHamming: Int,
                    idx: Option[(org.apache.spark.sql.SparkSession, String)] = None,
                    corpusName: String = "docs"): DataFrame = {
-    // Materialized once for the same three-branch reason as minhashPairs.
-    // With `idx` set, the signature table persists as a bucketed
-    // [[graft.Indexes]] artifact (r19, the minhashPairs convention —
-    // the two registry consumers re-built the tokenize × simhash-UDAF
-    // pipeline every run; the signature table is the ingest-time
-    // artifact a production corpus keeps). Per-query checkpoint
-    // otherwise (specs/probes construct ad-hoc corpora).
-    val sigs = idx match {
-      case Some((s, d)) =>
-        graft.Indexes.table(s, d, s"simhash_sigs_$corpusName", Seq("doc_id")) {
-          simhashSignatures(docs)
-        }
-      case None => simhashSignatures(docs).localCheckpoint()
+    val sigs = Blocking.persist(idx, s"simhash_sigs_$corpusName", Seq("doc_id")) {
+      simhashSignatures(docs)
     }
     val capEff = simhashCapEff(sigs.count())
-    val chunks = chunkExplode(sigs)
-    val small = simhashChunkStats(sigs)
-      .filter(col("bucket_n") <= capEff)
-    val inSmall = chunks.join(small, Seq("chunk", "csig"))
-    val a = inSmall.select(col("chunk"), col("csig"), col("doc_id").as("id1"), col("sig").as("s1"))
-    val b = inSmall.select(col("chunk"), col("csig"), col("doc_id").as("id2"), col("sig").as("s2"))
-    // Verify below the distinct (r16, same reorder as minhashPairs):
-    // hamming is a pure function of the two sigs — computed in the
-    // chunk join, filtered to ≤ maxHamming BEFORE the dedup exchange,
-    // so the distinct shuffles only qualifying (id1, id2, hamming)
-    // triples instead of every bucket collision with both 64-bit sigs.
-    // At the sf1 fixture the candidate stream is 23.4M collisions
-    // (CALIB_r16) of which a few hundred survive hamming ≤ 16 —
-    // measured 7.80 → 6.95 s there (generation, not the exchange,
-    // dominates at that SF); the point is the 100× watch query: its
-    // dedup exchange now carries survivors, not collisions, so the
-    // exchange term stops growing with bucket densification.
-    a.join(b, Seq("chunk", "csig"))
-      .filter(col("id1") < col("id2"))
-      .select(col("id1"), col("id2"),
-        bit_count(col("s1").bitwiseXOR(col("s2"))).cast("int").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
+    val keys = Seq("chunk", "csig")
+    Blocking.selfPairs(chunkExplode(sigs).transform(Blocking.dropOver(keys, capEff)),
+      keys, "doc_id", Seq("sig"),
+      bit_count(col("sig1").bitwiseXOR(col("sig2"))).cast("int").as("hamming"),
+      col("hamming") <= maxHamming)
   }
 
   /** Embedding-cosine near-dup, blocked exactly by `label` (IVF-style:
@@ -257,32 +194,24 @@ object NearDup {
     * COMPUTE IS BOUNDED TOO (r15: with output capped, the within-label
     * self-join still scored all C(m,2) pairs — 495 s / 12× per-row at
     * the 100× fixture, where 10 labels hold ~20k members each). Each
-    * label is profiled over its `cap` smallest-vec_id REPRESENTATIVES:
-    * a bounded-heap agg (the same [[graft.functions.Sketches.TopKAgg]]
-    * contract, score = −vec_id) selects them in one O(n·cap) streaming
-    * pass with map-side partials, and a size-gated broadcast semi-join
-    * (labels·cap id rows; [[Hints.broadcastIfEstimated]] withholds the
-    * hint past the session threshold) keeps their vectors — never a
-    * per-label window sort over the fact table. Pair scoring is then ≤ labels·cap²/2 regardless of
-    * corpus size, so the whole query is two linear passes over the
-    * vectors (one feeding the heap, one probing the semi-join) + a
-    * constant.
-    * `pair_count` is exact over the representative set (deterministic:
-    * ids, not a random sample); labels with ≤ cap members — every label
-    * at the oracle gate's sf0.01/sf0.1 — are profiled EXACTLY as
-    * before. Unbounded exact pair mining within cells stays the job of
-    * [[semDedupKeep]]/[[embeddingNearDupLsh]], whose cells are sized by
-    * construction. */
+    * label is profiled over its `cap` smallest-vec_id representatives
+    * ([[Blocking.minIdReps]]), whose vectors a size-gated broadcast
+    * semi-join (labels·cap id rows; [[Hints.broadcastIfEstimated]]
+    * withholds the hint past the session threshold) keeps. Pair scoring
+    * is then ≤ labels·cap²/2 regardless of corpus size, so the whole
+    * query is two linear passes over the vectors (one feeding the heap,
+    * one probing the semi-join) + a constant.
+    * `pair_count` is exact over the representative set; labels with
+    * ≤ cap members — every label at the oracle gate's sf0.01/sf0.1 —
+    * are profiled EXACTLY as before. Unbounded exact pair mining within
+    * cells stays the job of [[semDedupKeep]]/[[embeddingNearDupLsh]],
+    * whose cells are sized by construction. */
   def embeddingNearDupByLabel(emb: DataFrame, threshold: Double, k: Int,
                               cap: Int): DataFrame = {
     val v0 = emb.select(col("vec_id"), col("label"),
       col("embedding").cast("array<double>").as("v"))
       .withColumn("n2", Similarity.norm2(col("v")))
-    val reps = v0.groupBy("label")
-      .agg(Sketches.topK(cap)(negate(col("vec_id").cast("double")),
-        col("vec_id")).as("keep"))
-      .select(col("label"), explode(col("keep")).as("r"))
-      .select(col("label"), col("r._2").as("vec_id"))
+    val reps = v0.transform(Blocking.minIdReps("label", "vec_id", cap))
     // SIZE-GATED broadcast (r16 VERDICT task 1): labels·cap id rows is
     // broadcast-sized at any plausible label cardinality, but the hint
     // was unconditional — at a 50k-label corpus it is ~12.8M rows, and
@@ -368,13 +297,11 @@ object NearDup {
     * emitter: the raw within-cell self-join scored C(m,2) pairs per
     * cell, 273.5 s / 2.43× per-row at the 100× fixture where cells
     * hold ~20k members). Each vector is screened against at most
-    * `cap` per-cell REPRESENTATIVES — the cell's cap smallest-vec_id
-    * members, selected by the same bounded-heap
-    * [[graft.functions.Sketches.TopKAgg]] one-pass, map-side-partial
-    * pattern as [[embeddingNearDupByLabel]] (score = −vec_id), kept
-    * via a SIZE-GATED broadcast semi-join (≤ cells·cap id rows). The
-    * screen join feeds the representative vectors (≤ cells·cap rows)
-    * against the full assignment through the same gate
+    * `cap` per-cell representatives — the cell's cap smallest-vec_id
+    * members ([[Blocking.minIdReps]]), kept via a SIZE-GATED broadcast
+    * semi-join (≤ cells·cap id rows). The screen join feeds the
+    * representative vectors (≤ cells·cap rows) against the full
+    * assignment through the same gate
     * ([[Hints.broadcastIfEstimated]], r16 VERDICT task 1): under the
     * session's autoBroadcastJoinThreshold the rep side broadcasts and
     * the fact table is never shuffled for the screen; past it — the
@@ -453,28 +380,13 @@ object NearDup {
   def semDedupKeep(emb: DataFrame, threshold: Double,
                    cap: Int = SemDedupCap,
                    idx: Option[(org.apache.spark.sql.SparkSession, String)] = None): DataFrame = {
-    def buildBest: DataFrame = semAssignment(emb)
-    // Materialized ONCE (the Graph.scala convention): three consumers
-    // below (both sides of the screen self-join + the verdict join)
-    // would otherwise each recompute the N×L fan-out and argmax —
-    // PlanAuditSpec pins the final plan at zero nested-loop joins.
-    // With `idx` set (the registry path) the assignment persists as a
-    // bucketed-on-centroid [[graft.Indexes]] artifact instead of a
-    // localCheckpoint (r16 VERDICT task 3 — the knn_pv lesson: a
-    // checkpoint pins a corpus-sized vector table in executor memory at
-    // 100 TB, and erases the bucket layout the reps groupBy and the
-    // shuffled screen fallback both key on). MEASURED at sf1 (filtered
-    // bench protocol, r17): checkpoint baseline 1.37 s median / 1.33 min
-    // → naive artifact 2.10 (per-rep sizing scanned the vector column)
-    // → float-stored artifact + memoized sizing 1.45 / 1.40 — parity in
-    // time, the memory pin gone; the artifact also amortizes across
-    // re-runs where the checkpoint rebuilt per session.
-    val best = (idx match {
-      case Some((s, d)) =>
-        graft.Indexes.table(s, d, "semdedup_best", Seq("centroid"))(buildBest)
-      case None => buildBest.localCheckpoint()
-    }).select(col("vec_id"), col("centroid"),
-      col("vf").cast("array<double>").as("v"), col("n2"))
+    // three consumers (both screen sides + the verdict join) would each
+    // recompute the N×L fan-out and argmax — PlanAuditSpec pins the final
+    // plan at zero nested-loop joins; bucketed on centroid, the key the
+    // reps groupBy and the shuffled screen fallback both use
+    val best = Blocking.persist(idx, "semdedup_best", Seq("centroid"))(semAssignment(emb))
+      .select(col("vec_id"), col("centroid"),
+        col("vf").cast("array<double>").as("v"), col("n2"))
     // Gate sizing off the materialized assignment: rep rows ≤
     // cells·cap, id rows ~32 B, vector rows ~dim·8+48 B — upper
     // bounds, so the gate degrades EARLY. The probes are deliberately
@@ -489,14 +401,7 @@ object NearDup {
         .headOption.map(_.getInt(0).toLong).getOrElse(0L)
       (nc, d)
     }
-    // screen a-side: the cap smallest-vec_id representatives per cell
-    // (bounded heap → size-gated broadcast semi-join, the
-    // embeddingNearDupByLabel machinery verbatim)
-    val reps = best.groupBy("centroid")
-      .agg(Sketches.topK(cap)(negate(col("vec_id").cast("double")),
-        col("vec_id")).as("keep"))
-      .select(col("centroid"), explode(col("keep")).as("r"))
-      .select(col("centroid"), col("r._2").as("vec_id"))
+    val reps = best.transform(Blocking.minIdReps("centroid", "vec_id", cap))
     // both estimates are UPPER bounds (r17 ADVICE): id rows padded to
     // 80 B ×2 (fixed row overhead), vector rows to dim doubles + the
     // centroid/id/norm columns and array headers (128 B) ×2 margin for
@@ -564,40 +469,21 @@ object NearDup {
   def nearDupVerdicts(corpusSh: DataFrame, batchSh: DataFrame,
                       theta: Double): DataFrame = {
     // one materialization feeds freq, the ranked prefix build, and
-    // both verify-join sides (the simjoin_prefix lesson)
+    // both verify-join sides
     val sh = corpusSh.select(col("doc_id"), col("s")).withColumn("side", lit("c"))
       .unionByName(batchSh.select(col("doc_id"), col("s")).withColumn("side", lit("b")))
       .localCheckpoint()
-    val freq = sh.select(explode(col("s")).as("g"))
-      .groupBy("g").agg(count(lit(1)).as("f"))
-    val ranked = sh.select(col("doc_id"), col("side"), explode(col("s")).as("g"))
-      .join(freq, "g")
-      .groupBy("doc_id", "side")
-      .agg(array_sort(collect_list(struct(col("f"), col("g")))).as("ord"),
-        count(lit(1)).as("n"))
-    // pref is consumed by BOTH sides of the candidate join below; left
-    // lazy, the whole freq-join + rarity-sort + prefix-explode subtree
-    // plans (and runs) TWICE — once under each side's filter (r19,
-    // measured: the duplicated subtree was ~half the plan's exchanges).
-    // It is a few prefix grams per doc — far smaller than the shingle
-    // sets already checkpointed above — so materialize it once.
-    val pref = ranked.select(col("doc_id"), col("side"),
-      explode(slice(transform(col("ord"), x => x.getField("g")), lit(1),
-        (col("n") - ceil(lit(theta) * col("n")) + 1).cast("int"))).as("g"))
-      .localCheckpoint()
+    val pref = Blocking.prefixes(sh, Seq("doc_id", "side"), theta)
     val cand = pref.filter(col("side") === "b").as("a")
       .join(pref.filter(col("side") === "c").as("b"), col("a.g") === col("b.g"))
       .select(col("a.doc_id").as("bid"), col("b.doc_id").as("cid"))
       .distinct()
-    val inter = size(array_intersect(col("s1"), col("s2"))).cast("double")
     cand
       .join(sh.filter(col("side") === "b")
         .select(col("doc_id").as("bid"), col("s").as("s1")), "bid")
       .join(sh.filter(col("side") === "c")
         .select(col("doc_id").as("cid"), col("s").as("s2")), "cid")
-      .select(col("bid"),
-        round(inter / ((size(col("s1")) + size(col("s2"))).cast("double") - inter), 9)
-          .as("j"))
+      .select(col("bid"), round(Blocking.jaccard(col("s1"), col("s2")), 9).as("j"))
       .filter(col("j") >= theta)
       .select(col("bid").as("doc_id")).distinct()
   }
@@ -611,39 +497,19 @@ object NearDup {
   def simJoinPrefix(docs: DataFrame, theta: Double): DataFrame = {
     // materialized once: sh feeds freq, the ranked prefix build, and
     // BOTH verify-join sides — four plan branches that would each
-    // re-run tokenize+shingle+distinct otherwise (the
-    // vectorsAndPostings lesson)
-    val sh = docs
-      .select(col("doc_id"), array_distinct(TextFns.ngrams(col("text"), 3)).as("s"))
-      .filter(size(col("s")) > 0)
-      .localCheckpoint()
-    val freq = sh.select(explode(col("s")).as("g"))
-      .groupBy("g").agg(count(lit(1)).as("f"))
-    // rarest-first canonical order per doc, then the prefix explode
-    val ranked = sh.select(col("doc_id"), explode(col("s")).as("g"))
-      .join(freq, "g")
-      .groupBy("doc_id")
-      .agg(array_sort(collect_list(struct(col("f"), col("g")))).as("ord"),
-        count(lit(1)).as("n"))
-    // materialized for the same both-sides-of-the-self-join reason as
-    // nearDupVerdicts' pref (r19): lazy, the freq-join + rarity-sort +
-    // prefix-explode subtree runs once per join side.
-    val pref = ranked.select(col("doc_id"),
-        explode(slice(transform(col("ord"), x => x.getField("g")), lit(1),
-          (col("n") - ceil(lit(theta) * col("n")) + 1).cast("int"))).as("g"))
-      .localCheckpoint()
+    // re-run tokenize+shingle+distinct otherwise
+    val sh = shingles3(docs).localCheckpoint()
+    val pref = Blocking.prefixes(sh, Seq("doc_id"), theta)
     val cand = pref.as("a")
       .join(pref.as("b"),
         col("a.g") === col("b.g") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
       .distinct()
-    val inter = size(array_intersect(col("s1"), col("s2"))).cast("double")
     cand
       .join(sh.select(col("doc_id").as("id1"), col("s").as("s1")), "id1")
       .join(sh.select(col("doc_id").as("id2"), col("s").as("s2")), "id2")
       .select(col("id1"), col("id2"),
-        round(inter / ((size(col("s1")) + size(col("s2"))).cast("double") - inter), 9)
-          .as("jaccard"))
+        round(Blocking.jaccard(col("s1"), col("s2")), 9).as("jaccard"))
       .filter(col("jaccard") >= theta)
   }
 
@@ -717,10 +583,7 @@ object NearDup {
   def bestMatchFuzzy(docs: DataFrame, cap: Int = BmfBucketCap,
                      idx: Option[(org.apache.spark.sql.SparkSession, String)] = None,
                      corpusTag: String = "docs"): DataFrame = {
-    def setsOf(dd: DataFrame) = dd
-      .select(col("doc_id"), array_distinct(TextFns.ngrams(col("text"), 3)).as("s"))
-      .filter(size(col("s")) > 0)
-    def keysOf(dd: DataFrame) = setsOf(dd)
+    def keysOf(dd: DataFrame) = shingles3(dd)
       .select(col("doc_id"),
         sha2(array_join(array_sort(col("s")), "\u0001"), 256).as("ck"))
     // hashed shingle sets: xxhash64 each distinct shingle once per doc
@@ -728,41 +591,25 @@ object NearDup {
     // are preserved (collisions within one doc's ~10² shingles:
     // ~1e-15), so jaccard — and the exact-string oracle — match
     // hash-exactly
-    def hashedSetsOf(dd: DataFrame) = setsOf(dd)
+    def hashedSetsOf(dd: DataFrame) = shingles3(dd)
       .select(col("doc_id"),
         array_sort(array_distinct(transform(col("s"), x => xxhash64(x)))).as("sh"))
     val even = docs.filter(col("doc_id") % 2 === 0)
     // corpus artifact 1: min even doc_id per content key — feeds the
     // exact channel and the postings build
-    def buildRep = keysOf(even).groupBy("ck").agg(min(col("doc_id")).as("doc_id"))
-    val evenRep = idx match {
-      case Some((s, d)) =>
-        graft.Indexes.table(s, d, s"bmf_rep_$corpusTag", Seq("ck"))(buildRep)
-      case None => buildRep.localCheckpoint()
+    val evenRep = Blocking.persist(idx, s"bmf_rep_$corpusTag", Seq("ck")) {
+      keysOf(even).groupBy("ck").agg(min(col("doc_id")).as("doc_id"))
     }
-    // corpus artifact 2: CAPPED bucket postings (bucket, doc_id, sh).
-    // The cap selects each bucket's `cap` smallest-doc_id reps with the
-    // bounded-heap TopKAgg (score = −doc_id; one O(n·cap) streaming
-    // pass, map-side partials — the embeddingNearDupByLabel machinery),
-    // applied at BUILD time so steady-state queries never re-rank. The
+    // corpus artifact 2: CAPPED bucket postings (bucket, doc_id, sh),
+    // capped at BUILD time so steady-state queries never re-rank. The
     // cap constant folds into the artifact name: a retuned cap can
     // never be served a stale layout.
-    def buildPostings = {
+    val postings = Blocking.persist(idx, s"bmf_postings_c${cap}_$corpusTag", Seq("bucket")) {
       val repDocs = even.join(evenRep.select("doc_id"), Seq("doc_id"), "left_semi")
       Clustering.fingerprintBuckets(repDocs)
-        .groupBy("bucket")
-        .agg(Sketches.topK(cap)(negate(col("doc_id").cast("double")),
-          col("doc_id")).as("keep"))
-        .select(col("bucket"), explode(col("keep")).as("r"))
-        .select(col("bucket"), col("r._2").as("doc_id"))
+        .transform(Blocking.minIdReps("bucket", "doc_id", cap))
         .join(hashedSetsOf(repDocs), "doc_id")
         .select(col("bucket"), col("doc_id"), col("sh"))
-    }
-    val postings = idx match {
-      case Some((s, d)) =>
-        graft.Indexes.table(s, d, s"bmf_postings_c${cap}_$corpusTag",
-          Seq("bucket"))(buildPostings)
-      case None => buildPostings.localCheckpoint()
     }
     // batch (odd) side: transient — checkpointed because keys feed rep
     // selection AND the fan-out, and the rep postings feed one join
@@ -774,8 +621,6 @@ object NearDup {
     val oddPostings = Clustering.fingerprintBuckets(oddRepDocs)
       .join(hashedSetsOf(oddRepDocs), "doc_id")
       .localCheckpoint()
-    val inter = size(array_intersect(col("sb"), col("sc"))).cast("double")
-    val union = (size(col("sb")) + size(col("sc"))).cast("double") - inter
     // bucket-local scoring: a pair colliding in several bands is scored
     // once per collision (≤4, identical jac) — harmless to the argmax,
     // so no pair distinct is needed at all
@@ -783,7 +628,7 @@ object NearDup {
       .select(col("bucket"), col("doc_id").as("bdoc"), col("sh").as("sb"))
       .join(postings
         .select(col("bucket"), col("doc_id").as("cdoc"), col("sh").as("sc")), "bucket")
-      .select(col("bdoc"), col("cdoc"), (inter / union).as("jac"))
+      .select(col("bdoc"), col("cdoc"), Blocking.jaccard(col("sb"), col("sc")).as("jac"))
     val exactPairs = oddRep
       .join(evenRep.select(col("ck"), col("doc_id").as("cdoc")), "ck")
       .select(col("bdoc"), col("cdoc"), lit(1.0).as("jac"))
@@ -855,9 +700,7 @@ object NearDup {
       val cand = minhashPairs(docs, 0.0, idx = Some((s, d)), corpusName = "planted")
       val grams = docs.select(col("doc_id"),
         array_distinct(TextFns.ngrams(col("text"), 3)).as("g"))
-      val inter = size(array_intersect(col("g1"), col("g2"))).cast("double")
-      val union = (size(col("g1")) + size(col("g2"))).cast("double") - inter
-      val err = col("est_jaccard") - try_divide(inter, union)
+      val err = col("est_jaccard") - Blocking.jaccard(col("g1"), col("g2"))
       cand
         .join(grams.select(col("doc_id").as("id1"), col("g").as("g1")), "id1")
         .join(grams.select(col("doc_id").as("id2"), col("g").as("g2")), "id2")
@@ -897,15 +740,13 @@ object NearDup {
       val cand = minhashPairs(docs, 0.0, idx = Some((s, d)), corpusName = "planted")
       val grams = docs.select(col("doc_id"),
         array_distinct(TextFns.ngrams(col("text"), 3)).as("g"))
-      val inter = size(array_intersect(col("g1"), col("g2"))).cast("double")
-      val union = (size(col("g1")) + size(col("g2"))).cast("double") - inter
       val cutoff = greatest(lit(0.45),
         lit(math.sqrt(0.25 / 32)) * sqrt(lit(2.0) * log(col("n_pairs").cast("double"))) + lit(0.15))
       cand
         .join(grams.select(col("doc_id").as("id1"), col("g").as("g1")), "id1")
         .join(grams.select(col("doc_id").as("id2"), col("g").as("g2")), "id2")
         .select(col("id1"), col("id2"),
-          abs(col("est_jaccard") - try_divide(inter, union)).as("abs_err"))
+          abs(col("est_jaccard") - Blocking.jaccard(col("g1"), col("g2"))).as("abs_err"))
         .crossJoin(broadcast(cand.agg(count(lit(1)).as("n_pairs"))))
         .filter(col("abs_err") > cutoff)
         .select(col("id1"), col("id2"), col("abs_err"))
@@ -1134,10 +975,7 @@ object NearDup {
       val planted = bsh.filter(col("doc_id") >= 100000L && col("doc_id") < 100050L)
         .select(col("doc_id"), (col("doc_id") - 100000L).as("origin"), col("s").as("s1"))
         .join(csh.select(col("doc_id").as("origin"), col("s").as("s2")), "origin")
-      val inter = size(array_intersect(col("s1"), col("s2"))).cast("double")
-      planted.select(col("doc_id"),
-          round(inter / ((size(col("s1")) + size(col("s2"))).cast("double") - inter), 9)
-            .as("j"))
+      planted.select(col("doc_id"), round(Blocking.jaccard(col("s1"), col("s2")), 9).as("j"))
         .filter(col("j") >= theta)
         .join(survivors, Seq("doc_id"), "left_semi")
         .orderBy("doc_id")
@@ -1215,10 +1053,8 @@ object NearDup {
         .join(sh.filter(col("doc_id") >= 100000L && col("doc_id") < 100050L)
           .select((col("doc_id") - 100000L).as("id1"), col("doc_id").as("id2"),
             col("s").as("s2")), "id1")
-      val inter = size(array_intersect(col("s1"), col("s2"))).cast("double")
       planted.select(col("id1"), col("id2"),
-          round(inter / ((size(col("s1")) + size(col("s2"))).cast("double") - inter), 9)
-            .as("jaccard"))
+          round(Blocking.jaccard(col("s1"), col("s2")), 9).as("jaccard"))
         .filter(col("jaccard") >= theta)
         .join(out.select(col("id1"), col("id2")), Seq("id1", "id2"), "left_anti")
         .orderBy("id1", "id2")

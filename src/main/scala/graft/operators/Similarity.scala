@@ -75,10 +75,10 @@ object Similarity {
   }
 
   /** Norm-annotated double vectors + (id, table, bucket) LSH postings —
-    * shared by [[annTopK]] and [[lshCandidatePairs]]. With `idx` set,
-    * the postings persist as a bucketed [[graft.Indexes]] artifact
-    * (keyed by the LSH config) instead of a per-query checkpoint —
-    * build once, reused by every LSH query at that config. */
+    * shared by [[annTopK]] and [[lshCandidatePairs]]. The postings are
+    * built once ([[Blocking.persist]], keyed by the LSH config and
+    * bucketed on the candidate-join keys) and reused by every LSH query
+    * at that config. */
   private[operators] def vectorsAndPostings(emb: DataFrame, nPlanes: Int, nTables: Int,
                                             seed: Long = 42L,
                                             idx: Option[(org.apache.spark.sql.SparkSession, String)] = None,
@@ -99,39 +99,16 @@ object Similarity {
     val rawPostings = v.select(col("vec_id"),
         explode(graft.functions.LshSigsEval(col("v"), flatPlanes, nPlanes, nTables)).as("b"))
       .select(col("vec_id"), col("b.t").as("lsh_t"), col("b.sig").as("lsh_sig"))
-    val postings = idx match {
-      case Some((s, d)) =>
-        // the promised "persisted/bucketed postings TABLE, written once
-        // and reused across queries" — bucketed on the candidate-join
-        // keys so the (table, bucket) self-join reads co-partitioned
-        // buckets
-        graft.Indexes.table(s, d, s"lsh_${corpusTag}_p${nPlanes}_t${nTables}_s$seed",
-          Seq("lsh_t", "lsh_sig")) { rawPostings }
-      case None =>
-        // Index-less callers (specs, sweeps) still materialize ONCE
-        // before the self-join: both branches of the (table, bucket)
-        // self-join would otherwise carry their own copy of the
-        // signature subtree — planned and Janino-compiled per branch,
-        // measured at ~80% of LSH query time in rounds 2–3. After the
-        // checkpoint both branches scan the same computed blocks.
-        rawPostings.localCheckpoint()
-    }
+    val postings = Blocking.persist(idx,
+      s"lsh_${corpusTag}_p${nPlanes}_t${nTables}_s$seed", Seq("lsh_t", "lsh_sig"))(rawPostings)
     (v, postings)
   }
 
   /** All-corpus candidate pairs from the multi-table LSH postings, with
-    * exact cosine attached (the verify step). The pair join is bucket-
-    * local — never all-pairs — and scoring is bucket-local too: the
-    * vectors ride INTO the (table, bucket) self-join, the cosine is
-    * computed where the pair is born, and only (id1, id2, cos) triples
-    * ever cross a later exchange. The earlier distinct-then-re-attach
-    * form shuffled two 0.5 KB vectors per CANDIDATE PAIR (two joins on
-    * id1/id2) — at the 100x stress fixture, whose planted replicas make
-    * pair volume quadratic per near-dup cluster, that was a ~35 GB
-    * transient spill and the round's only ENOSPC; scoring before the
-    * distinct re-computes each pair's dot once per colliding table
-    * (≤ nTables, a bounded CPU trade) and cuts the shuffled bytes per
-    * pair ~40x. `minCos` pushes the caller's verify threshold below the
+    * exact cosine attached (the verify step), paired and scored
+    * bucket-locally by [[Blocking.selfPairs]] — a pair's dot is
+    * recomputed once per colliding table (≤ nTables, a bounded CPU
+    * trade). `minCos` pushes the caller's verify threshold below the
     * distinct, so at near-dup operating points the distinct sees only
     * true positives. */
   def lshCandidatePairs(emb: DataFrame, nPlanes: Int = 8, nTables: Int = 8,
@@ -149,15 +126,9 @@ object Similarity {
     // materialized once: both self-join branches scan the same blocks
     // instead of re-running the postings⋈vector join per branch
     val pv = postings.join(v, "vec_id").localCheckpoint()
-    val a = pv.select(col("lsh_t"), col("lsh_sig"),
-      col("vec_id").as("id1"), col("v").as("v1"), col("n2").as("n21"))
-    val b = pv.select(col("lsh_t"), col("lsh_sig"),
-      col("vec_id").as("id2"), col("v").as("v2"), col("n2").as("n22"))
-    val scored = a.join(b, Seq("lsh_t", "lsh_sig"))
-      .filter(col("id1") < col("id2"))
-      .select(col("id1"), col("id2"),
-        round(dot(col("v1"), col("v2")) / (sqrt(col("n21")) * sqrt(col("n22"))), 6).as("cos"))
-    minCos.fold(scored)(t => scored.filter(col("cos") >= t)).distinct()
+    Blocking.selfPairs(pv, Seq("lsh_t", "lsh_sig"), "vec_id", Seq("v", "n2"),
+      round(dot(col("v1"), col("v2")) / (sqrt(col("n21")) * sqrt(col("n22"))), 6).as("cos"),
+      minCos.fold(lit(true))(col("cos") >= _))
   }
 
   /** X84: all-corpus k-NN GRAPH — every vector's approximate top-k
@@ -228,29 +199,19 @@ object Similarity {
     val nPlanesEff = knnPlanesFor(emb.count(), nPlanes, occTarget)
     val (v, postings) =
       vectorsAndPostings(emb, nPlanesEff, nTables, seed, idx, corpusTag)
-    // The joined (posting, vector) table is itself a persisted Indexes
-    // artifact BUCKETED ON THE SELF-JOIN KEYS (r16, measured): the
-    // prior localCheckpoint re-ran the postings⋈vectors join per query
-    // and erased all partitioning, so the a/b self-join exchanged both
-    // sides every run. The bucketed artifact is built once per
-    // (fixture, LSH config), and both self-join branches read
-    // co-partitioned buckets — sf1 TimeQ 5.70 → 4.23-4.78 s, shared
-    // with knn_graph_bound which audits the same graph. Size is
-    // |corpus|·nTables vector rows on disk — the standard price of a
-    // posting-with-payload ANN index. corpusTag rides in the name (r16
-    // ADVICE): the config triple alone would let two different corpora
-    // sharing (planes, tables, seed) adopt each other's cached join.
-    val pv = idx match {
-      case Some((s, d)) =>
-        graft.Indexes.table(s, d,
-          s"knn_pv_${corpusTag}_p${nPlanesEff}_t${nTables}_s$seed", Seq("lsh_t", "lsh_sig")) {
-          postings.join(v, "vec_id")
-        }
-      case None => postings.join(v, "vec_id").localCheckpoint()
+    // The joined (posting, vector) table, bucketed on the self-join keys
+    // and shared with knn_graph_bound, which audits the same graph. Size
+    // is |corpus|·nTables vector rows on disk — the standard price of a
+    // posting-with-payload ANN index. corpusTag rides in the name: the
+    // config triple alone would let two different corpora sharing
+    // (planes, tables, seed) adopt each other's cached join.
+    val pv = Blocking.persist(idx,
+      s"knn_pv_${corpusTag}_p${nPlanesEff}_t${nTables}_s$seed", Seq("lsh_t", "lsh_sig")) {
+      postings.join(v, "vec_id")
     }
     // ≤ 2^planes × nTables rows — always broadcastable; the cap filter
     // is a broadcast join + a hash-mod, never a per-bucket sort.
-    val sizes = pv.groupBy("lsh_t", "lsh_sig").agg(count(lit(1)).as("bucket_n"))
+    val sizes = Blocking.sizes(pv, Seq("lsh_t", "lsh_sig"))
     val a = pv.select(col("lsh_t"), col("lsh_sig"),
       col("vec_id").as("src"), col("v").as("v1"), col("n2").as("n21"))
     val b = pv.join(broadcast(sizes), Seq("lsh_t", "lsh_sig"))

@@ -195,6 +195,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // is what grows with bucket densification at 100×, so this shape
     // IS the scale guarantee.
     val ph = plan("simhash_near_dup_pairs")
+    val pm = plan("minhash_near_dup_pairs")
     // r19 (persisted signature artifact): when the planner can satisfy
     // the dedup's distribution without a new shuffle, NO dedup exchange
     // appears at all — strictly stronger than keying it right, so the
@@ -204,14 +205,15 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(ph.matches("(?s).*hashpartitioning\\(id1#\\d+L?, id2#\\d+L?, hamming.*") ||
       ph.matches("(?s).*HashAggregate\\(keys=\\[id1#\\d+L?, id2#\\d+L?, hamming.*"),
       s"simhash dedup must key on (id1, id2, hamming):\n$ph")
-    assert(!ph.matches("(?s).*hashpartitioning\\([^)]*s1#.*"),
+    // the payload alias must be in the plan, or the next pin is vacuous
+    assert(ph.contains("sig1#") && pm.contains("sig1#"), s"no sig1 payload alias in:\n$ph")
+    assert(!ph.matches("(?s).*hashpartitioning\\([^)]*sig1#.*"),
       "simhash signature payloads must not cross the dedup exchange")
-    val pm = plan("minhash_near_dup_pairs")
     // the double key rides inside knownfloatingpointnormalized(...) in
     // the agg/exchange keys — match it anywhere in the third key slot
     assert(pm.matches("(?s).*HashAggregate\\(keys=\\[id1#\\d+L, id2#\\d+L, [^\\]]*est_jaccard.*"),
       s"minhash dedup must key on (id1, id2, est_jaccard):\n$pm")
-    assert(!pm.matches("(?s).*hashpartitioning\\([^)]*s1#.*"),
+    assert(!pm.matches("(?s).*hashpartitioning\\([^)]*sig1#.*"),
       "minhash signature arrays must not cross the dedup exchange")
   }
 

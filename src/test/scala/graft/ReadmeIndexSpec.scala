@@ -115,23 +115,53 @@ class ReadmeIndexSpec extends AnyFunSuite {
     }
   }
 
+  /** Each src/main Scala file (path relative to src/main/scala) with its
+    * trimmed code lines — comment lines skipped, so a doc that names a
+    * pattern never trips a source audit. */
+  private lazy val mainCode: Map[String, Seq[String]] = {
+    import scala.jdk.CollectionConverters._
+    val mainTree = root.resolve("src/main/scala")
+    val walk = java.nio.file.Files.walk(mainTree)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).map { f =>
+      mainTree.relativize(f).toString -> java.nio.file.Files.readAllLines(f).asScala.toSeq
+        .map(_.trim)
+        .filterNot(l => l.startsWith("//") || l.startsWith("*") || l.startsWith("/*"))
+    }.toMap
+    finally walk.close()
+  }
+
   test("src/main declares no JVM-global cache outside graft.Memo and Indexes' two kept maps") {
     // One staleness rule for probe results (Memo's input fingerprint):
     // a new hand-rolled map in the main tree fails here. Indexes keeps
     // its per-session table map and per-artifact build locks.
     val decl = "\\bnew\\s+[\\w.]*(ConcurrentHashMap|WeakHashMap)\\b|\\bnewKeySet\\b".r
-    val mainTree = root.resolve("src/main/scala")
-    val walk = java.nio.file.Files.walk(mainTree)
-    val found = try {
-      import scala.jdk.CollectionConverters._
-      walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq.flatMap { f =>
-        val code = java.nio.file.Files.readAllLines(f).asScala.map(_.trim)
-          .filterNot(l => l.startsWith("//") || l.startsWith("*") || l.startsWith("/*"))
-        val n = code.map(decl.findAllIn(_).size).sum
-        if (n == 0) None else Some(mainTree.relativize(f).toString -> n)
-      }.toMap
-    } finally walk.close()
+    val found = mainCode.map { case (f, code) => f -> code.map(decl.findAllIn(_).size).sum }
+      .filter(_._2 > 0)
     assert(found == Map("graft/Memo.scala" -> 1, "graft/Indexes.scala" -> 2),
       s"JVM-global map declarations in src/main: $found — route probe results through graft.Memo")
+  }
+
+  test("blocking shapes are written once, in graft.operators.Blocking") {
+    // Jaccard, the keep-the-min-id cap and the artifact-or-checkpoint
+    // persist each live in Blocking; a copy elsewhere fails here.
+    val kernel = "graft/operators/Blocking.scala"
+    val minIdCut = "topK\\([^)]*\\)\\(negate\\(col\\([^)]*\\)\\.cast\\(\"double\"\\)".r
+    // an Indexes.table match whose None branch checkpoints: a `case
+    // None =>` line soon after the call, then `.localCheckpoint()` before
+    // the line that closes the match
+    val persistCopy = ("(?s)Indexes\\.table\\((?:(?!Indexes\\.table\\().){0,400}?" +
+      "\ncase None =>(?:(?!\n\\}).)*?\\.localCheckpoint\\(\\)").r
+    val copies = mainCode.toSeq.filter(_._1 != kernel).flatMap { case (f, code) =>
+      val text = code.mkString("\n")
+      Seq(
+        "array_intersect(" -> text.contains("array_intersect("),
+        "min-id topK cut" -> ((f.endsWith("/NearDup.scala") || f.endsWith("/Similarity.scala")) &&
+          minIdCut.findFirstIn(text).isDefined),
+        "Indexes.table match with a localCheckpoint None branch" ->
+          persistCopy.findFirstIn(text).isDefined
+      ).collect { case (what, true) => s"$f: $what" }
+    }
+    assert(copies.isEmpty,
+      s"blocking shapes copied outside $kernel: ${copies.mkString("; ")} — call Blocking instead")
   }
 }
