@@ -142,7 +142,9 @@ object Indexes {
       // the fresh catalog at the files instead of delete-and-rebuild.
       // Underscore-prefixed files (_SUCCESS, _GRAFT_SPEC) are invisible
       // to the parquet reader, so schema inference and scans skip them.
-      val ddl = s.read.parquet(loc.toString).schema.toDDL
+      // A complete artifact is never rewritten: its schema is inferred
+      // once per JVM (Tables.schemaOf).
+      val ddl = graft.sources.Tables.schemaOf(s, loc.toString).toDDL
       val bucketClause =
         if (bucketKeys.isEmpty) ""
         else s"CLUSTERED BY (${bucketKeys.mkString(", ")}) " +

@@ -4,8 +4,8 @@ import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.DataFrame
 
 /** The JVM's one probe cache: plan-time facts about the input data
-  * (footer row-group counts, the int64 time-unit check, hot-key
-  * counts, broadcast-gate sizings) that every query over the same
+  * (table schemas, footer row-group counts, the int64 time-unit check,
+  * hot-key counts, broadcast-gate sizings) that every query over the same
   * inputs would otherwise re-derive with a Spark job or a footer read.
   *
   * Staleness rule, the only one in the engine: a value is keyed on

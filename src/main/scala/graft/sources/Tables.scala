@@ -1,13 +1,23 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
   * All operator inputs come through here so scan behavior is uniform:
-  * plain `spark.read.parquet` — Catalyst's DataSource V2 path gives
-  * vectorized columnar reads, predicate pushdown and column pruning for
-  * free, which is the 100 TB-posture scan we want (SURVEY.md §4.2).
+  * a parquet scan — vectorized columnar reads, predicate pushdown and
+  * column pruning for free, which is the 100 TB-posture scan we want
+  * (SURVEY.md §4.2) — over a schema given up front ([[schemaOf]]).
+  *
+  * Schema rule: a table's schema is exactly what `spark.read.parquet`
+  * infers, resolved once per [[graft.Memo]] key — every input file's
+  * (path, size, mtime) plus the session's explicitly set confs whose key
+  * contains `parquet` (`spark.sql.legacy.parquet.nanosAsLong` and
+  * `spark.sql.parquet.inferTimestampNTZ.enabled` both change the type of
+  * `events.ts`). Inference is a footer-reading Spark job, so a warm load
+  * or [[registerViews]] starts none; an in-place regen or a conf flip
+  * re-infers. No schema is hard-coded.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -24,9 +34,18 @@ object Tables {
     "lineitem" -> Seq("l_shipdate"),
     "events" -> Seq("ts"))
 
-  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
+  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
     tsColumns.getOrElse(name, Nil)
-      .foldLeft(spark.read.parquet(s"$sfDir/$name.parquet"))(normalizeTs)
+      .foldLeft(spark.read.schema(schemaOf(spark, path)).parquet(path))(normalizeTs)
+  }
+
+  /** The schema `spark.read.parquet(path)` infers, under the object
+    * doc's schema rule. */
+  private[graft] def schemaOf(spark: SparkSession, path: String): StructType = {
+    val parquetConfs = spark.conf.getAll.filter(_._1.contains("parquet")).toSeq.sorted
+    graft.Memo(Seq(path), "schema", parquetConfs)(spark.read.parquet(path).schema)
+  }
 
   /** Opt-in spread loader: [[apply]] plus [[spread]]. For queries whose
     * FIRST post-scan operator is itself an exchange (joins, windows,

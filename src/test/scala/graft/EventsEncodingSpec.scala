@@ -23,52 +23,7 @@ import graft.sources.Tables
 class EventsEncodingSpec extends AnyFunSuite {
   import SparkTestSession.spark
   import spark.implicits._
-
-  // Two logical rows; nanos values carry sub-microsecond residue (…789 ns)
-  // so the truncation-to-micros contract is actually exercised.
-  private val wall = Seq(
-    (1L, "2026-03-01 10:00:00.123456", 7L, "click", 1.5, "{}"),
-    (2L, "2026-03-02 11:30:05.000001", 8L, "purchase", 9.25, "{}"))
-  private val nanosResidue = 789L
-
-  private def utcEpochMicros(s: String): Long = {
-    val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS")
-    val ldt = java.time.LocalDateTime.parse(s, fmt)
-    ldt.toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000 +
-      ldt.getNano / 1000 % 1000
-  }
-
-  /** Write `wall` as a single TIMESTAMP(NANOS) parquet file at `file`
-    * through the low-level parquet example API — Spark itself cannot
-    * write nanos, which is exactly why the legacy read flag exists. */
-  private def writeNanosFile(file: String): Unit = {
-    val schema = MessageTypeParser.parseMessageType(
-      """message events {
-        |  required int64 event_id;
-        |  required int64 ts (TIMESTAMP(NANOS,false));
-        |  required int64 user_id;
-        |  required binary event_type (STRING);
-        |  required double value;
-        |  required binary props (STRING);
-        |}""".stripMargin)
-    val conf = new Configuration()
-    GroupWriteSupport.setSchema(schema, conf)
-    val writer = ExampleParquetWriter
-      .builder(HadoopOutputFile.fromPath(new org.apache.hadoop.fs.Path(file), conf))
-      .withConf(conf)
-      .build()
-    val fac = new SimpleGroupFactory(schema)
-    try wall.foreach { case (id, ts, uid, typ, v, props) =>
-      val g = fac.newGroup()
-      g.append("event_id", id)
-      g.append("ts", utcEpochMicros(ts) * 1000L + nanosResidue)
-      g.append("user_id", uid)
-      g.append("event_type", typ)
-      g.append("value", v)
-      g.append("props", props)
-      writer.write(g)
-    } finally writer.close()
-  }
+  import EventsEncodingSpec._
 
   /** Write `wall` as a Spark-native TIMESTAMP_NTZ(micros) events.parquet
     * directory under `dir` — the r7+ fixture encoding. */
@@ -281,5 +236,54 @@ class EventsEncodingSpec extends AnyFunSuite {
     assert(stream.schema("ts").dataType === TimestampType)
     assert(stream.schema.fieldNames.toSeq ===
       Seq("event_id", "ts", "user_id", "event_type", "value", "props"))
+  }
+}
+
+/** The fixture rows and the nanos writer, shared with TablesSchemaSpec. */
+object EventsEncodingSpec {
+  // Two logical rows; nanos values carry sub-microsecond residue (…789 ns)
+  // so the truncation-to-micros contract is actually exercised.
+  val wall = Seq(
+    (1L, "2026-03-01 10:00:00.123456", 7L, "click", 1.5, "{}"),
+    (2L, "2026-03-02 11:30:05.000001", 8L, "purchase", 9.25, "{}"))
+  val nanosResidue = 789L
+
+  def utcEpochMicros(s: String): Long = {
+    val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS")
+    val ldt = java.time.LocalDateTime.parse(s, fmt)
+    ldt.toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000 +
+      ldt.getNano / 1000 % 1000
+  }
+
+  /** Write `wall` as a single TIMESTAMP(NANOS) parquet file at `file`
+    * through the low-level parquet example API — Spark itself cannot
+    * write nanos, which is exactly why the legacy read flag exists. */
+  def writeNanosFile(file: String): Unit = {
+    val schema = MessageTypeParser.parseMessageType(
+      """message events {
+        |  required int64 event_id;
+        |  required int64 ts (TIMESTAMP(NANOS,false));
+        |  required int64 user_id;
+        |  required binary event_type (STRING);
+        |  required double value;
+        |  required binary props (STRING);
+        |}""".stripMargin)
+    val conf = new Configuration()
+    GroupWriteSupport.setSchema(schema, conf)
+    val writer = ExampleParquetWriter
+      .builder(HadoopOutputFile.fromPath(new org.apache.hadoop.fs.Path(file), conf))
+      .withConf(conf)
+      .build()
+    val fac = new SimpleGroupFactory(schema)
+    try wall.foreach { case (id, ts, uid, typ, v, props) =>
+      val g = fac.newGroup()
+      g.append("event_id", id)
+      g.append("ts", utcEpochMicros(ts) * 1000L + nanosResidue)
+      g.append("user_id", uid)
+      g.append("event_type", typ)
+      g.append("value", v)
+      g.append("props", props)
+      writer.write(g)
+    } finally writer.close()
   }
 }

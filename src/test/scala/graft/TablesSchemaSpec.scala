@@ -1,0 +1,93 @@
+package graft
+
+import java.nio.file.{Files, StandardCopyOption}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.TimestampType
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.sources.Tables
+
+/** Tables' schema rule: each table's parquet schema is inferred once per
+  * graft.Memo key — input files' (path, size, mtime) plus the session's
+  * explicitly set parquet confs — so warm loads start no Spark job, while
+  * an in-place regen or a parquet-conf flip still sees what a plain
+  * `spark.read.parquet` would. */
+class TablesSchemaSpec extends AnyFunSuite {
+  import SparkTestSession.spark
+
+  /** Spark jobs started while `f` runs. A sentinel job run after `f`
+    * closes the count: the listener bus delivers events in order, so once
+    * the sentinel's start arrives every earlier job start has been seen. */
+  private def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val sentinel = s"tables-schema-sentinel-${System.nanoTime}"
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.job.description") == sentinel))
+          drained.countDown()
+        else started.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      f
+      sc.setJobDescription(sentinel)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+      started.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a warm load on a fresh session and a warm registerViews start no Spark job") {
+    val d = SparkTestSession.sf0001
+    Tables(spark.newSession(), d, "events")
+    assert(jobsOf(Tables(spark.newSession(), d, "events")) === 0,
+      "a warm load must not re-run parquet schema inference")
+    Tables.registerViews(spark, d)
+    assert(jobsOf(Tables.registerViews(spark, d)) === 0,
+      "a warm registerViews must not re-run parquet schema inference")
+  }
+
+  test("a parquet file rewritten in place with an added column loads the new column") {
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("schema-regen")
+    def write(df: DataFrame): Unit = {
+      val tmp = dir.resolve("tmp")
+      df.coalesce(1).write.parquet(tmp.toString)
+      val part = Files.list(tmp).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      Files.move(part, dir.resolve("t.parquet"), StandardCopyOption.REPLACE_EXISTING)
+      Files.walk(tmp).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    }
+    write(spark.range(3).toDF("a"))
+    assert(Tables(spark, dir.toString, "t").columns.toSeq === Seq("a"))
+    write(spark.range(3).select(col("id").as("a"), (col("id") * 2).as("b")))
+    val after = Tables(spark, dir.toString, "t")
+    assert(after.columns.toSeq === Seq("a", "b"), "stale schema served after an in-place regen")
+    assert(after.orderBy("a").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ===
+      Seq((0L, 0L), (1L, 2L), (2L, 4L)))
+  }
+
+  test("a schema memoized under one parquet conf is not served under another") {
+    val dir = Files.createTempDirectory("schema-nanos").toString
+    val file = s"$dir/events.parquet"
+    EventsEncodingSpec.writeNanosFile(file)
+    val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
+    SparkTestSession.withConf(nanosKey -> "true") {
+      assert(Tables.events(spark, dir).schema("ts").dataType === TimestampType)
+    }
+    // without the legacy flag Spark 4 rejects TIMESTAMP(NANOS): the load
+    // must fail exactly as an unmemoized read does, not get the int64
+    // schema memoized above
+    SparkTestSession.withConf(nanosKey -> "false") {
+      val plain = intercept[Throwable](spark.read.parquet(file).schema)
+      val loaded = intercept[Throwable](Tables.events(spark, dir))
+      assert(loaded.getClass === plain.getClass)
+      assert(loaded.getMessage === plain.getMessage)
+    }
+  }
+}
