@@ -54,26 +54,6 @@ object Bench {
     r
   }
 
-  private[graft] def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // pinned TZ: date-bucketing queries must do the same work (same
-      // day boundaries, row counts) regardless of the machine's zone —
-      // and it matches Verify/TimeQ, keeping timings comparable
-      .config("spark.sql.session.timeZone", "UTC")
-      // NOT dead config on micros fixtures (it is a no-op there): this flag
-      // is what makes a TIMESTAMP(NANOS) fixture regen READABLE at all —
-      // Spark 4 otherwise rejects the parquet type, while with the flag it
-      // reads as int64 and Tables.normalizeTs routes it adaptively.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** Sorted-name query list — parent and children derive the shard
     * slices from this same ordering, so no name list crosses the
     * process boundary (shard forks inherit the parent's environment,
@@ -174,7 +154,7 @@ object Bench {
   /** Child entry: time shard `i` of `n`, write `name\tt1,t2,t3` lines. */
   private def shardMain(i: Int, n: Int, out: String): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
+    val spark = Sessions.local(Sessions.cpus)
     val rows = timeQueries(spark, sfDir, shardSlice(i, n))
     val text = rows.map { case (name, ts) =>
       name + "\t" + ts.map(t => f"$t%.6f").mkString(",")
@@ -249,7 +229,7 @@ object Bench {
   private def inProcessShard(i: Int, n: Int, sfDir: String): Seq[(String, Seq[Double])] = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val spark = session()
+    val spark = Sessions.local(Sessions.cpus)
     try timeQueries(spark, sfDir, shardSlice(i, n))
     finally spark.stop()
   }
@@ -271,7 +251,6 @@ object Bench {
 
   private def parentMain(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val nQueries = sortedQueries.size
     val shards = math.max(1, math.min(nQueries,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_SHARDS", "8").toInt))
@@ -372,7 +351,7 @@ object Bench {
           cwd.resolve(f"BENCH_SELF_r${n + 1}%02d.json")
         }
       // env-derived strings must be JSON-escaped or a quote in
-      // SPARK_GRAFT_CPUS corrupts the machine-readable artifact
+      // SPARK_GRAFT_BENCH_QUERIES corrupts the machine-readable artifact
       def esc(x: String) = x.replace("\\", "\\\\").replace("\"", "\\\"")
       // headline stays the median total (driver contract), but the
       // min-of-reps total rides along: medians absorb co-tenant load
@@ -409,7 +388,7 @@ object Bench {
         s""""indexes":"persisted across queries and shards; build cost falls in warmup",""" +
         s""""contention_recovery":"flagged queries re-timed once in a fresh JVM when >=5 spread >3x",""" +
         s""""shards":$shards,"isolation":"${if (forked) "fresh JVM per shard" else "fresh SparkContext per shard (fork unavailable)"}",""" +
-        s""""cpus":"${esc(cpus)}","spark":"${esc(org.apache.spark.SPARK_VERSION)}","sink":"noop"}"""
+        s""""cpus":"${Sessions.cpus}","spark":"${esc(org.apache.spark.SPARK_VERSION)}","sink":"noop"}"""
       def artifactJson(rs: Seq[(String, (Double, Double, Double), Seq[Double])],
                        cont: Boolean, nSpread: Int, extra: String): String = {
         val totalMed = r3(rs.map(_._2._1).filter(_ >= 0).sum)

@@ -50,7 +50,7 @@ object IndexWarm {
     val names = if (args.nonEmpty) args.toSeq else IndexBacked
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val spark = Bench.session()
+    val spark = Sessions.local(Sessions.cpus)
     def run(name: String): Double = {
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, sfDir)

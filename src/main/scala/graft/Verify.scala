@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,19 +9,7 @@ object Verify {
     // comma-separated query names to dump instead of the full registry.
     val only: Option[Set[String]] =
       args.drop(2).headOption.map(_.split(',').map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // NOT dead config on micros fixtures (it is a no-op there): this flag
-      // is what makes a TIMESTAMP(NANOS) fixture regen READABLE at all —
-      // Spark 4 otherwise rejects the parquet type, while with the flag it
-      // reads as int64 and Tables.normalizeTs routes it adaptively.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

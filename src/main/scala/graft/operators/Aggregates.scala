@@ -224,18 +224,11 @@ object Aggregates {
         |  min(l_orderkey) AS min_ok, max(l_orderkey) AS max_ok,
         |  min(l_partkey) AS min_pk, max(l_partkey) AS max_pk
         |FROM lineitem""".stripMargin) { (s, d) =>
-      val v1Key = "spark.sql.sources.useV1SourceList"
-      val pushKey = "spark.sql.parquet.aggregatePushdown"
-      val savedV1 = s.conf.get(v1Key)
-      val savedPush = s.conf.get(pushKey)
-      s.conf.set(v1Key, savedV1.split(",").map(_.trim).filter(_ != "parquet").mkString(","))
-      s.conf.set(pushKey, "true")
-      try Tables.lineitem(s, d)
+      Tables.withAggPushdown(s)(Tables.lineitem(s, d)
         .agg(count(lit(1)).as("n_rows"),
           min(col("l_orderkey")).as("min_ok"), max(col("l_orderkey")).as("max_ok"),
           min(col("l_partkey")).as("min_pk"), max(col("l_partkey")).as("max_pk"))
-        .localCheckpoint()
-      finally { s.conf.set(v1Key, savedV1); s.conf.set(pushKey, savedPush) }
+        .localCheckpoint())
     },
 
     // X74: incremental aggregate maintenance — the materialized-view

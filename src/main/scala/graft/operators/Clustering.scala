@@ -159,60 +159,58 @@ object Clustering {
       // corpus-wide re-attach join, which scales with the scan again.
       val loopParts = math.max(4L, math.min(outerParts.toLong,
         activeDocs / 50000L)).toString
-      spark.conf.set("spark.sql.shuffle.partitions", loopParts)
-      var changed = 1L
-      var round = 0
-      while (changed > 0 && round < maxRounds) {
-        val bmin = memb.join(lab, "doc_id")
-          .groupBy("bucket").agg(min(col("component")).as("bc"))
-        val dmin = memb.join(bmin, "bucket")
-          .groupBy("doc_id").agg(min(col("bc")).as("nc"))
-        // Region-min contraction: nc is each doc's neighborhood min; the
-        // whole CURRENT region (docs sharing a root label) then adopts
-        // the min nc any member found — one extra groupBy + join keyed
-        // on the old component. Without it the global min crawls one
-        // region-hop per round and rounds grow with the component
-        // graph's diameter (measured: 17 rounds on sf0.001, a ~15-round
-        // tail moving <20 docs each); with it, every region merges with
-        // its min neighbor each round (local minima absorb neighbors,
-        // monotone chains collapse inside compress), so the region count
-        // contracts geometrically — O(log) rounds. rm is a min over
-        // labels, so labels still only take existing-label values (the
-        // parent-forest property compress relies on).
-        val cand0 = lab.join(dmin, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("component"),
-            least(col("component"), coalesce(col("nc"), col("component"))).as("nc"))
-        val rm = cand0.groupBy("component").agg(min(col("nc")).as("rm"))
-        val cand = cand0.join(rm, "component")
-          .select(col("doc_id"),
-            least(col("nc"), col("rm")).as("component"),
-            (least(col("nc"), col("rm")) < col("component")).as("moved"))
-          .cache()
-        // step A moved nothing ⇒ global fixpoint (compress only chases
-        // pointers step A created). ONE action serves as convergence
-        // test, cache materializer, AND lineage cut: the moved-count is
-        // an observed metric on the checkpoint job (VERDICT r04 task 4
-        // — previously a separate filter-count ran before the compress
-        // chain re-scanned the cache).
-        val obs = org.apache.spark.sql.Observation()
-        val candCk = cand.observe(obs, sum(when(col("moved"), 1L).otherwise(0L)).as("n"))
-          .drop("moved").localCheckpoint()
-        changed = Option(obs.get("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
-        if (changed > 0) lab = compress(candCk, maxJumps = 40)
-        cand.unpersist(false)
-        round += 1
+      graft.Sessions.withConf(spark, "spark.sql.shuffle.partitions" -> loopParts) {
+        var changed = 1L
+        var round = 0
+        while (changed > 0 && round < maxRounds) {
+          val bmin = memb.join(lab, "doc_id")
+            .groupBy("bucket").agg(min(col("component")).as("bc"))
+          val dmin = memb.join(bmin, "bucket")
+            .groupBy("doc_id").agg(min(col("bc")).as("nc"))
+          // Region-min contraction: nc is each doc's neighborhood min; the
+          // whole CURRENT region (docs sharing a root label) then adopts
+          // the min nc any member found — one extra groupBy + join keyed
+          // on the old component. Without it the global min crawls one
+          // region-hop per round and rounds grow with the component
+          // graph's diameter (measured: 17 rounds on sf0.001, a ~15-round
+          // tail moving <20 docs each); with it, every region merges with
+          // its min neighbor each round (local minima absorb neighbors,
+          // monotone chains collapse inside compress), so the region count
+          // contracts geometrically — O(log) rounds. rm is a min over
+          // labels, so labels still only take existing-label values (the
+          // parent-forest property compress relies on).
+          val cand0 = lab.join(dmin, Seq("doc_id"), "left")
+            .select(col("doc_id"), col("component"),
+              least(col("component"), coalesce(col("nc"), col("component"))).as("nc"))
+          val rm = cand0.groupBy("component").agg(min(col("nc")).as("rm"))
+          val cand = cand0.join(rm, "component")
+            .select(col("doc_id"),
+              least(col("nc"), col("rm")).as("component"),
+              (least(col("nc"), col("rm")) < col("component")).as("moved"))
+            .cache()
+          // step A moved nothing ⇒ global fixpoint (compress only chases
+          // pointers step A created). ONE action serves as convergence
+          // test, cache materializer, AND lineage cut: the moved-count is
+          // an observed metric on the checkpoint job (VERDICT r04 task 4
+          // — previously a separate filter-count ran before the compress
+          // chain re-scanned the cache).
+          val obs = org.apache.spark.sql.Observation()
+          val candCk = cand.observe(obs, sum(when(col("moved"), 1L).otherwise(0L)).as("n"))
+            .drop("moved").localCheckpoint()
+          changed = Option(obs.get("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
+          if (changed > 0) lab = compress(candCk, maxJumps = 40)
+          cand.unpersist(false)
+          round += 1
+        }
+        require(changed == 0L, s"connectedComponents: no fixpoint after $maxRounds rounds")
       }
-      require(changed == 0L, s"connectedComponents: no fixpoint after $maxRounds rounds")
       // re-attach the pruned singletons: any doc outside the active
       // subgraph is its own component by construction (planned lazily,
-      // AFTER the finally restores the scan-scale partition count)
+      // AFTER withConf restores the scan-scale partition count)
       docs.select(col("doc_id"))
         .join(lab.withColumnRenamed("component", "c"), Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("c"), col("doc_id")).as("component"))
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", outerParts)
-      memb.unpersist(false)
-    }
+    } finally memb.unpersist(false)
   }
 
   /** The persisted dedup-cluster label table (doc_id, component): the

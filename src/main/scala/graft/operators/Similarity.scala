@@ -161,7 +161,7 @@ object Similarity {
     *      odds for a true neighbor, which the fixed 24-table OR
     *      amplification must absorb; mean recall@5 stays driver-gated
     *      (`knn_graph_bound`, floor 0.45) and measured per round.
-    *      Operating-point sweep (r13, KnnProbe): occTarget 64 → 158.5 s
+    *      Operating-point sweep (r13): occTarget 64 → 158.5 s
     *      at the 100x fixture (1.93x per-row vs 10x); occTarget 16 →
     *      65.1 s but the sf0.1 bound margin thins to 0.475; occTarget
     *      32 → 13.9 s at 10x / 131.2 s at 100x = 0.94x per-row,
@@ -759,7 +759,7 @@ object Similarity {
     // sf0.001), IVF 0.40 (r04 sweep: 0.65 at the 12/4 default), SQ8
     // 0.85 (measured ≥0.95 — 8-bit codes barely perturb ranking), PQ
     // 0.60 (r13: the r12 default m=8 measured 0.4625 at sf0.1 — its
-    // 0.30 floor only caught catastrophe; the PqSweep grid moved the
+    // 0.30 floor only caught catastrophe; an m/k/rerank grid moved the
     // default to m=16/k=16/rerank=64, measured 0.9125/0.9000/0.8250
     // at the three SFs and 0.975 at 10x, so 0.60 = worst-case −0.22
     // margin. Sub-vector width, not shortlist size, was the recall

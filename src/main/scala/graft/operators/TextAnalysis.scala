@@ -202,7 +202,7 @@ object TextAnalysis {
       // DISTINCT-gram LM table (1,210 rows at sf1) while bgd is the
       // doc-gram table (2.6M rows); left to itself the planner built
       // the hash relation on BGD — a 2.6M-entry broadcast — making
-      // this the slowest corpus query (8.0 s at sf1, BigramAudit).
+      // this the slowest corpus query (8.0 s at sf1).
       // Broadcasting the gram-scale side streams bgd straight off its
       // reused exchange into the per-doc partial agg. At 100 TB a
       // web-scale gram table outgrows broadcast — drop the hint and

@@ -250,30 +250,27 @@ object Tables {
     }
   }
 
-  /** Min/max for the probe. Re-plans the scan over the same files under
-    * the DSv2 parquet path with aggregate pushdown enabled (both confs
-    * scoped to this one action, same pattern as G31), so when the
-    * pushdown rule accepts the column the probe is answered from footer
-    * statistics — `PushedAggregation` in the scan, no data pages read.
-    * EventsEncodingSpec pins which of the two plans a nanos-int64 column
-    * actually gets; if the rule rejects it, the fallback cost is one
-    * column scan per input version, which the memo bounds. Falls back to the
-    * caller's plan when the file list is unavailable (e.g. a non-file
-    * relation in tests). */
+  /** Min/max for the probe. Re-plans the scan over the same files inside
+    * [[withAggPushdown]], so when the pushdown rule accepts the column
+    * the probe is answered from footer statistics — `PushedAggregation`
+    * in the scan, no data pages read. EventsEncodingSpec pins which of
+    * the two plans a nanos-int64 column actually gets; if the rule
+    * rejects it, the fallback cost is one column scan per input version,
+    * which the memo bounds. Falls back to the caller's plan when the file
+    * list is unavailable (e.g. a non-file relation in tests). */
   private def probeMinMax(raw: DataFrame, c: String, files: Seq[String]) = {
     val agg = Seq(s"min(`$c`) AS mn", s"max(`$c`) AS mx")
     if (files.isEmpty) raw.selectExpr(agg: _*).head()
-    else {
-      val s = raw.sparkSession
-      val v1Key = "spark.sql.sources.useV1SourceList"
-      val pushKey = "spark.sql.parquet.aggregatePushdown"
-      val savedV1 = s.conf.get(v1Key)
-      val savedPush = s.conf.get(pushKey)
-      s.conf.set(v1Key, savedV1.split(",").map(_.trim).filter(_ != "parquet").mkString(","))
-      s.conf.set(pushKey, "true")
-      try s.read.parquet(files: _*).selectExpr(agg: _*).head()
-      finally { s.conf.set(v1Key, savedV1); s.conf.set(pushKey, savedPush) }
-    }
+    else withAggPushdown(raw.sparkSession)(
+      raw.sparkSession.read.parquet(files: _*).selectExpr(agg: _*).head())
+  }
+
+  /** Runs `body` with parquet on the DSv2 path (v1 has no aggregate
+    * pushdown) and aggregate pushdown on; execute inside, too. */
+  private[graft] def withAggPushdown[T](s: SparkSession)(body: => T): T = {
+    val v1Key = "spark.sql.sources.useV1SourceList"
+    val v1 = s.conf.get(v1Key).split(",").map(_.trim).filter(_ != "parquet").mkString(",")
+    graft.Sessions.withConf(s, v1Key -> v1, "spark.sql.parquet.aggregatePushdown" -> "true")(body)
   }
 
   /** Exposed for EventsEncodingSpec to pin the probe's actual plan:

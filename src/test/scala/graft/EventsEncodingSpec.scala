@@ -192,7 +192,7 @@ class EventsEncodingSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("events-nanos-probe").toString
     writeNanosFile(s"$dir/events.parquet")
     val files = spark.read.parquet(s"$dir/events.parquet").inputFiles.toSeq
-    SparkTestSession.withConf(
+    Sessions.withConf(spark,
       "spark.sql.sources.useV1SourceList" -> "",
       "spark.sql.parquet.aggregatePushdown" -> "true") {
       val plan = Tables.probePlanForSpec(spark, files, "ts")

@@ -47,17 +47,16 @@ class ExtensionsSpec extends AnyFunSuite {
       val offPlan = exact().queryExecution.optimizedPlan.toString
       assert(offPlan.contains("count(distinct") && !offPlan.toLowerCase.contains("hyperloglog"),
         offPlan)
-      spark.conf.set("spark.graft.approxCountDistinct", "true")
-      val onPlan = exact().queryExecution.optimizedPlan.toString
-      assert(onPlan.toLowerCase.contains("approx_count_distinct"), onPlan)
       // HLL at default precision is exact-ish at this cardinality scale
-      val approx = exact().as[Long].head()
-      spark.conf.set("spark.graft.approxCountDistinct", "false")
+      val approx = Sessions.withConf(spark, "spark.graft.approxCountDistinct" -> "true") {
+        val onPlan = exact().queryExecution.optimizedPlan.toString
+        assert(onPlan.toLowerCase.contains("approx_count_distinct"), onPlan)
+        exact().as[Long].head()
+      }
       val truth = exact().as[Long].head()
       // HLL default rsd is 5%; allow 3σ
       assert(math.abs(approx - truth).toDouble / truth < 0.15)
     } finally {
-      spark.conf.set("spark.graft.approxCountDistinct", "false")
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations.filterNot(_ == ApproxDistinctRewrite)
     }

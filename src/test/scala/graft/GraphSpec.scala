@@ -46,7 +46,7 @@ class GraphSpec extends AnyFunSuite {
     // rank table cannot be an executor broadcast.
     val viaBroadcast = queries("pagerank_trade")(spark, sf0001).collect()
     var viaShuffle: Array[org.apache.spark.sql.Row] = null
-    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+    Sessions.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       viaShuffle = queries("pagerank_trade")(spark, sf0001).collect()
     }
     assert(viaBroadcast.nonEmpty)

@@ -129,7 +129,7 @@ class IndexesSpec extends AnyFunSuite {
     // cores; the small split size makes the byte estimate exceed cores
     def spreads(): Boolean = {
       var repartitioned = false
-      SparkTestSession.withConf("spark.sql.files.maxPartitionBytes" -> "64k") {
+      Sessions.withConf(spark, "spark.sql.files.maxPartitionBytes" -> "64k") {
         repartitioned = sources.Tables.spread(spark, d, "t").queryExecution.logical
           .collectFirst { case r: org.apache.spark.sql.catalyst.plans.logical.Repartition => r }
           .isDefined

@@ -65,12 +65,11 @@ class NGramsExprSpec extends AnyFunSuite {
         .as[(Long, Seq[String])].collect().toMap
       assert(native == hof, s"n=$n")
       // interpreted (wholeStageCodegen off) must equal the codegen'd run
-      spark.conf.set("spark.sql.codegen.wholeStage", "false")
-      try {
+      Sessions.withConf(spark, "spark.sql.codegen.wholeStage" -> "false") {
         val interp = docs.select($"doc_id", TextFns.ngrams($"text", n).as("g"))
           .as[(Long, Seq[String])].collect().toMap
         assert(interp == native, s"n=$n interpreted/codegen divergence")
-      } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
+      }
     }
   }
 

@@ -326,9 +326,7 @@ class NearDupSpec extends AnyFunSuite {
     val byBc = NearDup.embeddingNearDupByLabel(emb, 0.5, 8, 3)
     assert(plan(byBc).contains("BroadcastHashJoin"))
     val byRows = byBc.orderBy("label", "rnk").collect().toSeq
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64")
-    try {
+    Sessions.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "64") {
       // under the floor the centroid-assignment gate (r17 VERDICT task
       // 4) is ALSO withheld — the build behind the checkpoint runs as a
       // cartesian (strategy pinned in PlanAuditSpec) and this
@@ -346,7 +344,7 @@ class NearDupSpec extends AnyFunSuite {
       assert(!pb.contains("BroadcastHashJoin"), pb)
       assert(by.orderBy("label", "rnk").collect().toSeq == byRows,
         "by-label fallback branch must be row-identical")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    }
   }
 
   test("incremental near-dup screen: planted twins screened out, novel batch docs survive") {

@@ -86,9 +86,7 @@ class PhysicalSpec extends AnyFunSuite {
     try {
       operators.Physical.writeBucketed(li, "li_b", "l_orderkey", 8)
       operators.Physical.writeBucketed(o, "o_b", "l_orderkey", 8)
-      val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
+      Sessions.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val j = spark.table("li_b").join(spark.table("o_b"), "l_orderkey")
         j.write.format("noop").mode("overwrite").save()
         val plan = j.queryExecution.executedPlan.toString
@@ -105,7 +103,7 @@ class PhysicalSpec extends AnyFunSuite {
         assert(bucketed._1 == shuffled._1)
         assert(math.abs(bucketed._2 - shuffled._2) < 1e-6)
         assert(math.abs(bucketed._3 - shuffled._3) < 1e-4)
-      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+      }
     } finally {
       spark.sql("DROP TABLE IF EXISTS li_b")
       spark.sql("DROP TABLE IF EXISTS o_b")
@@ -122,7 +120,7 @@ class PhysicalSpec extends AnyFunSuite {
       // no DISTRIBUTION benefit (plain filters) — but bucket PRUNING is a
       // benefit the heuristic ignores; a keyed point-probe service turns
       // it off to read 1/N files per lookup
-      SparkTestSession.withConf(
+      Sessions.withConf(spark,
         "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false") {
         val q = spark.table("li_bp").filter(col("l_orderkey") === 1L)
         val plan = q.queryExecution.executedPlan.toString

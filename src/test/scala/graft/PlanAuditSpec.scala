@@ -268,16 +268,14 @@ class PlanAuditSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     assert(pBc.contains("BroadcastNestedLoopJoin"),
       s"default threshold: the quantizer must broadcast:\n$pBc")
-    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64")
-    try {
+    Sessions.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "64") {
       val pCart = graft.operators.NearDup.semAssignment(emb)
         .queryExecution.executedPlan.toString
       assert(!pCart.contains("BroadcastNestedLoopJoin"),
         s"floor threshold: the hint must be withheld:\n$pCart")
       assert(pCart.contains("CartesianProduct"),
         s"floor threshold: the assignment degrades to a partitioned cartesian:\n$pCart")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+    }
   }
 
   test("whole-stage codegen covers the scalar hot paths") {
@@ -287,8 +285,7 @@ class PlanAuditSpec extends AnyFunSuite {
       SparkEntry.queries(name)(spark, SparkTestSession.sf001)
         .queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("codegen"))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    Sessions.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
       for (q <- Seq("project_arithmetic", "math_functions")) {
         val s = codegen(q)
         assert(s.contains("WholeStageCodegen") && !s.startsWith("Found 0"), q)
@@ -297,7 +294,7 @@ class PlanAuditSpec extends AnyFunSuite {
       val ng = codegen("ngram_count")
       assert(!ng.startsWith("Found 0"))
       assert(ng.contains("NGramsEval.eval"), "ngrams must emit its static-call codegen")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("runtime bloom-filter pruning injects on a selective fact join") {
@@ -306,30 +303,20 @@ class PlanAuditSpec extends AnyFunSuite {
     // they are lowered to force the decision path. The assertion is
     // that OUR plans are eligible (no custom expression or shape blocks
     // the InjectRuntimeFilter rule), not a size measurement.
-    val spark2 = spark
-    val saved = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled",
-      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-      "spark.sql.autoBroadcastJoinThreshold")
-      .map(k => k -> spark2.conf.getOption(k)).toMap
-    try {
-      spark2.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      spark2.conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "100MB")
-      spark2.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-      spark2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    Sessions.withConf(spark,
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       import org.apache.spark.sql.functions._
-      val li = sources.Tables.lineitem(spark2, SparkTestSession.sf0001)
-      val o = sources.Tables.orders(spark2, SparkTestSession.sf0001)
+      val li = sources.Tables.lineitem(spark, SparkTestSession.sf0001)
+      val o = sources.Tables.orders(spark, SparkTestSession.sf0001)
         .filter(col("o_orderpriority") === "1-URGENT") // selective creation side
         .withColumnRenamed("o_orderkey", "l_orderkey")
       val j = li.join(o, "l_orderkey").groupBy("o_orderstatus").count()
       val opt = j.queryExecution.optimizedPlan.toString
       assert(opt.contains("bloom_filter_agg") || opt.contains("BloomFilterMightContain"),
         s"runtime bloom filter was not injected:\n$opt")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark2.conf.set(k, v)
-      case (k, None) => spark2.conf.unset(k)
     }
   }
 
@@ -340,7 +327,7 @@ class PlanAuditSpec extends AnyFunSuite {
         min(col("l_orderkey")).as("min_ok"), max(col("l_orderkey")).as("max_ok"),
         min(col("l_partkey")).as("min_pk"), max(col("l_partkey")).as("max_pk"))
     val v1Rows = stats().collect().toSeq // default v1 path: full scan
-    SparkTestSession.withConf(
+    Sessions.withConf(spark,
       "spark.sql.sources.useV1SourceList" -> "avro,csv,json,kafka,orc,text",
       "spark.sql.parquet.aggregatePushdown" -> "true") {
       val pushed = stats()

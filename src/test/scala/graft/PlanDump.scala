@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (optimization rounds): dump `.explain("formatted")` for every
   * registered query (or the named subset) to a directory — no execution,
   * so a full-registry plan sweep takes ~a minute. Used to scan plan
@@ -16,14 +14,7 @@ object PlanDump {
     require(args.nonEmpty, "usage: PlanDump <outDir> [query...]")
     val outDir = java.nio.file.Paths.get(args.head)
     java.nio.file.Files.createDirectories(outDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val sel = if (args.length > 1) args.tail.toSet else SparkEntry.queries.keySet

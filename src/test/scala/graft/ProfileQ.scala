@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -26,25 +25,17 @@ object ProfileQ {
                                     gcMs: Long, spillB: Long)
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
     // PROFILE_CONF="k=v;k2=v2" — A/B a candidate config without a code
     // change (guide §1: measure before shipping any conf into Bench).
-    val spark = sys.env.get("PROFILE_CONF").map(_.trim).filter(_.nonEmpty)
+    val overrides = sys.env.get("PROFILE_CONF").map(_.trim).filter(_.nonEmpty)
       .map(_.split(";").filter(_.contains("=")))
       .getOrElse(Array.empty)
-      .foldLeft(b0) { (b, kv) =>
+      .map { kv =>
         val Array(k, v) = kv.split("=", 2)
         System.err.println(s"[profile] conf override: $k=$v")
-        b.config(k.trim, v.trim)
+        k.trim -> v.trim
       }
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus, overrides.toSeq: _*)
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("PROFILE_REPS", "2").toInt
     val planDir = sys.env.get("PROFILE_PLAN_DIR")

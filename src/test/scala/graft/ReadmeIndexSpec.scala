@@ -115,20 +115,23 @@ class ReadmeIndexSpec extends AnyFunSuite {
     }
   }
 
-  /** Each src/main Scala file (path relative to src/main/scala) with its
-    * trimmed code lines — comment lines skipped, so a doc that names a
-    * pattern never trips a source audit. */
-  private lazy val mainCode: Map[String, Seq[String]] = {
+  /** Each Scala file under `dir` (path relative to it) with its trimmed
+    * code lines — comment lines skipped, so a doc that names a pattern
+    * never trips a source audit. */
+  private def codeUnder(dir: String): Map[String, Seq[String]] = {
     import scala.jdk.CollectionConverters._
-    val mainTree = root.resolve("src/main/scala")
-    val walk = java.nio.file.Files.walk(mainTree)
+    val tree = root.resolve(dir)
+    val walk = java.nio.file.Files.walk(tree)
     try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).map { f =>
-      mainTree.relativize(f).toString -> java.nio.file.Files.readAllLines(f).asScala.toSeq
+      tree.relativize(f).toString -> java.nio.file.Files.readAllLines(f).asScala.toSeq
         .map(_.trim)
         .filterNot(l => l.startsWith("//") || l.startsWith("*") || l.startsWith("/*"))
     }.toMap
     finally walk.close()
   }
+
+  /** src/main's files, paths relative to src/main/scala. */
+  private lazy val mainCode = codeUnder("src/main/scala")
 
   test("src/main declares no JVM-global cache outside graft.Memo and Indexes' two kept maps") {
     // One staleness rule for probe results (Memo's input fingerprint):
@@ -163,5 +166,20 @@ class ReadmeIndexSpec extends AnyFunSuite {
     }
     assert(copies.isEmpty,
       s"blocking shapes copied outside $kernel: ${copies.mkString("; ")} — call Blocking instead")
+  }
+
+  test("sessions are built, and session confs changed, only in graft.Sessions") {
+    // WordCount keeps its own getOrCreate: as the CLI it must honour
+    // spark-submit's conf
+    def sites(code: Map[String, Seq[String]], pattern: String, allowed: Set[String]) =
+      code.map { case (f, lines) => f -> lines.count(pattern.r.findFirstIn(_).isDefined) }
+        .filter { case (f, n) => n > 0 && !allowed(f) }
+    val builders = sites(codeUnder("src"), "SparkSession\\.builder\\(",
+      Set("main/scala/graft/Sessions.scala", "main/scala/graft/WordCount.scala"))
+    assert(builders.isEmpty,
+      s"session builders outside Sessions/WordCount: $builders — call Sessions.local")
+    val confSets = sites(mainCode, "conf\\.set\\(", Set("graft/Sessions.scala"))
+    assert(confSets.isEmpty,
+      s"session conf writes in src/main outside Sessions: $confSets — scope them with Sessions.withConf")
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** VERDICT r08 task 1: synthesize an sf1-shaped fixture (default 10×
@@ -54,15 +54,7 @@ object ScaleFixture {
     val copies = args.headOption.map(_.toInt).getOrElse(10)
     val srcDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(2).getOrElse("/tmp/graft_sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
 
     val wanted = args.lift(3).filter(_ != "all")

@@ -56,19 +56,7 @@ object ScaleStress {
     val copies = args.headOption.map(_.toInt).getOrElse(10)
     val srcDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val workDir = args.lift(2).getOrElse("/tmp/graft_scale_stress")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // NOT dead config on micros fixtures (it is a no-op there): this flag
-      // is what makes a TIMESTAMP(NANOS) fixture regen READABLE at all —
-      // Spark 4 otherwise rejects the parquet type, while with the flag it
-      // reads as int64 and Tables.normalizeTs routes it adaptively.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus)
 
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(workDir))
     replicate(spark, srcDir, workDir, "documents", "doc_id", copies)

@@ -53,13 +53,10 @@ class SkewSpec extends AnyFunSuite {
     finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  private def withConf(pairs: (String, String)*)(f: => Unit): Unit =
-    SparkTestSession.withConf(pairs: _*)(f)
-
   test("saltedJoin bounds the hot key's max task; plain shuffle join does not") {
     // AQE off + broadcast off: isolate salting — the plain join must
     // show the raw funnel (hot key's ~300k rows in ONE task)
-    withConf(
+    Sessions.withConf(spark,
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.shuffle.partitions" -> "64") {
@@ -102,7 +99,7 @@ class SkewSpec extends AnyFunSuite {
     // VERDICT r08 task 3: the gate must SWITCH — measured skew decides,
     // not a hardwired salt. Equality oracle on all branches is the plain
     // join's aggregated result.
-    withConf(
+    Sessions.withConf(spark,
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.shuffle.partitions" -> "64") {
@@ -144,7 +141,7 @@ class SkewSpec extends AnyFunSuite {
   }
 
   test("saltedJoinGated hybrid branch bounds the hot key's max task like full salting") {
-    withConf(
+    Sessions.withConf(spark,
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.shuffle.partitions" -> "64") {
@@ -167,7 +164,7 @@ class SkewSpec extends AnyFunSuite {
     // thresholds lowered because sf0.1's hot partition is only ~600 KB
     // of lz4-compressed (key, double) shuffle blocks; production
     // defaults (256 MB) target real cluster scale
-    withConf(
+    Sessions.withConf(spark,
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",

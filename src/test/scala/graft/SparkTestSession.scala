@@ -4,38 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession for the whole forked test JVM. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // NOT dead config on micros fixtures (it is a no-op there): this flag
-      // is what makes a TIMESTAMP(NANOS) fixture regen READABLE at all —
-      // Spark 4 otherwise rejects the parquet type, while with the flag it
-      // reads as int64 and Tables.normalizeTs routes it adaptively.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Sessions.local(4)
 
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
   val sf01 = "/root/testdata/sf0.1"
-
-  /** Set confs for the duration of `f`, restoring previous values
-    * (shared by the suites that must flip session confs). */
-  def withConf(pairs: (String, String)*)(f: => Unit): Unit = {
-    val saved = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 
   /** Lines of each `part-*` file in `dir`, in filename order — the
     * "concatenate the reducer outputs" view both sink suites assert on. */

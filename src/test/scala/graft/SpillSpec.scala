@@ -52,7 +52,7 @@ class SpillSpec extends AnyFunSuite {
     // pathology described above, not a realistic memory-pressure shape:
     // per-group thresholds model pressure only where groups are big.
     val inMem = rows("window_running")
-    SparkTestSession.withConf(
+    Sessions.withConf(spark,
       "spark.sql.windowExec.buffer.spill.threshold" -> "64",
       "spark.sql.windowExec.buffer.in.memory.threshold" -> "64") {
       var got: Seq[String] = null
@@ -74,9 +74,9 @@ class SpillSpec extends AnyFunSuite {
       .groupBy("l_returnflag")
       .agg(count(lit(1)).as("n"), sum(col("l_quantity") * col("w")).as("s"))
       .collect().map(_.toString).sorted.toSeq
-    SparkTestSession.withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+    Sessions.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val inMem = agg()
-      SparkTestSession.withConf(
+      Sessions.withConf(spark,
         "spark.sql.sortMergeJoinExec.buffer.spill.threshold" -> "1024",
         "spark.sql.sortMergeJoinExec.buffer.in.memory.threshold" -> "1024") {
         var got: Seq[String] = null

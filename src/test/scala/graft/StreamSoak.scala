@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -34,18 +33,10 @@ object StreamSoak {
 
   def main(args: Array[String]): Unit = {
     val fixtureDir = args.headOption.getOrElse("/tmp/graft_sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val work = java.nio.file.Files.createTempDirectory("graft-soak").toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.streaming.stateStore.providerClass",
+    val spark = Sessions.local(Sessions.cpus,
+      "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
     val batchEvents = spark.read.parquet(s"$fixtureDir/events.parquet")

@@ -26,7 +26,8 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
   private var savedProvider: Option[String] = None
   override protected def beforeAll(): Unit = {
-    savedProvider = spark.conf.getOption(ProviderKey)
+    // `getAll`, not `getOption`: see Sessions.withConf
+    savedProvider = spark.conf.getAll.get(ProviderKey)
     spark.conf.set(ProviderKey,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
   }
@@ -450,7 +451,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   test("X33 transformWithState: two state variables, multi-batch stream == groupBy truth") {
     implicit val sqlCtx = spark.sqlContext
-    SparkTestSession.withConf(
+    Sessions.withConf(spark,
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val mem = MemoryStream[(Long, String)] // (user_id, event_type)
@@ -489,7 +490,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     // query shape. The test must poll the sink for the expected row
     // count instead — and the trigger is throttled so the idle-spin
     // between events is a few batches, not thousands.
-    SparkTestSession.withConf(
+    Sessions.withConf(spark,
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
       "spark.sql.shuffle.partitions" -> "4") {

@@ -52,6 +52,21 @@ class TablesSchemaSpec extends AnyFunSuite {
       "a warm registerViews must not re-run parquet schema inference")
   }
 
+  test("agg_pushdown_stats leaves a session's confs as it found them: a warm reload starts no job") {
+    // the query scopes two conf flips; restoring a default it never had
+    // would make it explicit, change the parquet-conf part of the schema
+    // key and re-infer every table once more
+    val d = SparkTestSession.sf0001
+    val s = spark.newSession()
+    Tables.names.foreach(Tables(s, d, _))
+    val before = s.conf.getAll.toSet
+    SparkEntry.queries("agg_pushdown_stats")(s, d)
+    assert(jobsOf(Tables.names.foreach(Tables(s, d, _))) === 0,
+      "a warm reload after agg_pushdown_stats must not re-run parquet schema inference")
+    val after = s.conf.getAll.toSet
+    assert((after diff before) ++ (before diff after) === Set.empty, "confs the query left changed")
+  }
+
   test("a parquet file rewritten in place with an added column loads the new column") {
     import scala.jdk.CollectionConverters._
     val dir = Files.createTempDirectory("schema-regen")
@@ -77,13 +92,13 @@ class TablesSchemaSpec extends AnyFunSuite {
     val file = s"$dir/events.parquet"
     EventsEncodingSpec.writeNanosFile(file)
     val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
-    SparkTestSession.withConf(nanosKey -> "true") {
+    Sessions.withConf(spark, nanosKey -> "true") {
       assert(Tables.events(spark, dir).schema("ts").dataType === TimestampType)
     }
     // without the legacy flag Spark 4 rejects TIMESTAMP(NANOS): the load
     // must fail exactly as an unmemoized read does, not get the int64
     // schema memoized above
-    SparkTestSession.withConf(nanosKey -> "false") {
+    Sessions.withConf(spark, nanosKey -> "false") {
       val plain = intercept[Throwable](spark.read.parquet(file).schema)
       val loaded = intercept[Throwable](Tables.events(spark, dir))
       assert(loaded.getClass === plain.getClass)

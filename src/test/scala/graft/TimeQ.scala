@@ -1,26 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: wall-time selected queries (noop sink, 1 warm + 1 timed)
   * under the SAME session config as graft.Bench (SPARK_GRAFT_CPUS
   * threads + shuffle partitions), so single-query timings are
   * comparable to the driver's bench figures. */
 object TimeQ {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // NOT dead config on micros fixtures (it is a no-op there): this flag
-      // is what makes a TIMESTAMP(NANOS) fixture regen READABLE at all —
-      // Spark 4 otherwise rejects the parquet type, while with the flag it
-      // reads as int64 and Tables.normalizeTs routes it adaptively.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus)
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     args.foreach { n =>
       val fn = SparkEntry.queries(n)
