@@ -71,8 +71,8 @@ object Indexes {
 
   /** Whether any artifact was requested since the last [[resetTouched]] —
     * lets IndexWarmSpec detect queries that build/adopt an artifact at
-    * CONSTRUCTION time behind a localCheckpoint (invisible in the final
-    * plan string). Diagnostic surface only.
+    * CONSTRUCTION time behind a [[graft.operators.Materialize]]
+    * (invisible in the final plan string). Diagnostic surface only.
     *
     * JVM-GLOBAL, so reset-then-probe detection is only sound while
     * query constructions are sequential — which holds because sbt runs
@@ -143,7 +143,8 @@ object Indexes {
       // Underscore-prefixed files (_SUCCESS, _GRAFT_SPEC) are invisible
       // to the parquet reader, so schema inference and scans skip them.
       // A complete artifact is never rewritten: its schema is inferred
-      // once per JVM (Tables.schemaOf).
+      // once per JVM (Tables.schemaOf), and not at all in the JVM that
+      // wrote it.
       val ddl = graft.sources.Tables.schemaOf(s, loc.toString).toDDL
       val bucketClause =
         if (bucketKeys.isEmpty) ""
@@ -163,6 +164,9 @@ object Indexes {
       else w).saveAsTable(tbl)
       val out = fs.create(marker, true)
       try out.write(spec.getBytes("UTF-8")) finally out.close()
+      // the catalog holds the schema as parquet reads it back (all
+      // nullable): memoized under the final fingerprint, adoption infers none
+      graft.sources.Tables.schemaOf(s, loc.toString, s.table(tbl).schema)
     }
   }
 }

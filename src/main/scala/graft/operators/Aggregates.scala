@@ -214,7 +214,7 @@ object Aggregates {
     // core-hours) for the row-count / value-range probes every pipeline
     // runs constantly. Needs the DSv2 parquet path (v1 has no aggregate
     // pushdown) plus spark.sql.parquet.aggregatePushdown, so both flips
-    // are scoped to THIS plan: localCheckpoint executes eagerly inside
+    // are scoped to THIS plan: Materialize executes eagerly inside
     // the conf window and later queries replan under the restored
     // session conf. Integer key columns only — the pushdown rule rejects
     // timestamp columns (footer-stats caveats), and long footer min/max
@@ -224,11 +224,10 @@ object Aggregates {
         |  min(l_orderkey) AS min_ok, max(l_orderkey) AS max_ok,
         |  min(l_partkey) AS min_pk, max(l_partkey) AS max_pk
         |FROM lineitem""".stripMargin) { (s, d) =>
-      Tables.withAggPushdown(s)(Tables.lineitem(s, d)
+      Tables.withAggPushdown(s)(Materialize(Tables.lineitem(s, d)
         .agg(count(lit(1)).as("n_rows"),
           min(col("l_orderkey")).as("min_ok"), max(col("l_orderkey")).as("max_ok"),
-          min(col("l_partkey")).as("min_pk"), max(col("l_partkey")).as("max_pk"))
-        .localCheckpoint())
+          min(col("l_partkey")).as("min_pk"), max(col("l_partkey")).as("max_pk"))))
     },
 
     // X74: incremental aggregate maintenance — the materialized-view

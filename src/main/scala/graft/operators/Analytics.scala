@@ -418,8 +418,8 @@ object Analytics {
     // inner HAVING threshold is itself an uncorrelated scalar aggregate
     // subquery (scale-relative, so the query stays selective at every
     // SF). Plan: the IN collapses to a semi join over the aggregated
-    // fact subquery; the scalar threshold is computed once and
-    // broadcast.
+    // fact subquery; the scalar threshold is computed once, on the
+    // job that materializes the per-supplier sums.
     Q("tpch_q20ish",
       """SELECT s.s_suppkey, s.s_name, s.s_acctbal
         |FROM supplier s
@@ -440,25 +440,22 @@ object Analytics {
       // from the per-supplier aggregate itself: SUM over rows = sum of
       // per-supplier DECIMAL sums (decimal addition is exact, so the
       // total is bit-equal), and COUNT(DISTINCT l_suppkey) = the number
-      // of groups. One fact aggregation, checkpointed at |suppliers|
-      // rows, feeds both the 1-row threshold and the HAVING filter —
-      // the tpch_q11ish pattern. Double arithmetic is
+      // of groups. One fact aggregation, materialized at |suppliers|
+      // rows with the threshold observed on that job, feeds the HAVING
+      // filter — the tpch_q11ish pattern. Double arithmetic is
       // expression-for-expression the SQL's: (1.1 * toDouble(sum)) / n,
       // and the HAVING compare casts each supplier's decimal sum to
       // double exactly as the oracle does.
       val redParts = Tables.part(s, d).filter(col("p_name").like("red%"))
         .select("p_partkey")
-      val perSupp = Tables.lineitem(s, d)
+      val (perSupp, thr) = Materialize(Tables.lineitem(s, d)
         .select(col("l_suppkey"), col("l_partkey"), col("l_quantity"))
         .join(broadcast(redParts), col("l_partkey") === col("p_partkey"), "left_semi")
         .groupBy("l_suppkey")
-        .agg(sum(col("l_quantity").cast(d2)).as("sq"))
-        .localCheckpoint()
-      val thr = perSupp.agg(
+        .agg(sum(col("l_quantity").cast(d2)).as("sq")),
         ((lit(1.1) * sum(col("sq")).cast("double")) / count(lit(1))).as("cutoff"))
       val qualifying = perSupp
-        .crossJoin(broadcast(thr))
-        .filter(col("sq").cast("double") > col("cutoff"))
+        .filter(col("sq").cast("double") > Materialize.lit(thr, "cutoff"))
         .select("l_suppkey")
       Tables.supplier(s, d)
         .join(qualifying, col("s_suppkey") === col("l_suppkey"), "left_semi")
@@ -653,8 +650,8 @@ object Analytics {
     // The threshold is scale-FREE (relative to the average, not a fixed
     // fraction of the total as in literal Q11 — a fixed fraction goes
     // degenerate as the supplier count scales). The global scalar is
-    // computed once over the |suppliers|-row aggregate and broadcast;
-    // exact DECIMAL sums, one identical double formula.
+    // computed once over the |suppliers|-row aggregate, in the job that
+    // materializes it; exact DECIMAL sums, one identical double formula.
     Q("tpch_q11ish",
       """WITH sv AS (
         |  SELECT l_suppkey,
@@ -669,20 +666,18 @@ object Analytics {
       // 600k-row fact aggregation ran twice per execution (2× "Scan
       // parquet lineitem → partial_sum" in plans/r19/
       // tpch_q11ish_before.txt). DataFrame form computes `sv` once
-      // (localCheckpoint: |suppliers| rows — ~1k × 16 B), derives the
-      // global threshold from the materialized table, and filters with
-      // a 1-row broadcast. Arithmetic is expression-for-expression the
+      // (Materialize: |suppliers| rows — ~1k × 16 B), observes the
+      // global threshold on that same job, and filters against it as a
+      // literal. Arithmetic is expression-for-expression the
       // SQL's: DECIMAL(18,2) partial sums, one decimal→double cast,
       // 1.05 * (sum/count) in doubles — hash-identical output (oracle
       // re-proven at sf0.01/sf0.1).
-      val sv = Tables.lineitem(s, d)
+      val (sv, thr) = Materialize(Tables.lineitem(s, d)
         .groupBy("l_suppkey")
-        .agg(sum(col("l_extendedprice").cast(d2)).cast("double").as("val"))
-        .localCheckpoint()
-      val thr = sv.agg((lit(1.05) *
-        (sum(col("val").cast(DecimalType(38, 2))).cast("double") / count(lit(1)))).as("thr"))
-      sv.crossJoin(broadcast(thr))
-        .filter(col("val") > col("thr"))
+        .agg(sum(col("l_extendedprice").cast(d2)).cast("double").as("val")),
+        (lit(1.05) *
+          (sum(col("val").cast(DecimalType(38, 2))).cast("double") / count(lit(1)))).as("thr"))
+      sv.filter(col("val") > Materialize.lit(thr, "thr"))
         .select(col("l_suppkey"), round(col("val"), 2).as("supplier_value"))
         .orderBy(col("supplier_value").desc, col("l_suppkey"))
     }

@@ -17,7 +17,7 @@ object Blocking {
   /** A table that several plan branches read, built once. With `idx`
     * set it is the build-once bucketed [[graft.Indexes]] artifact
     * `name`, shared across queries; otherwise a per-query
-    * localCheckpoint (specs and probes build ad-hoc corpora). Left lazy,
+    * [[Materialize]] (specs and probes build ad-hoc corpora). Left lazy,
     * every consumer re-plans and re-runs `build`: both branches of the
     * LSH self-join re-compiling the signature subtree was ~80% of LSH
     * query time in rounds 2–3. The artifact is preferred over a
@@ -29,7 +29,7 @@ object Blocking {
   def persist(idx: Option[(SparkSession, String)], name: String,
               bucketKeys: Seq[String])(build: => DataFrame): DataFrame = idx match {
     case Some((s, d)) => graft.Indexes.table(s, d, name, bucketKeys)(build)
-    case None => build.localCheckpoint()
+    case None => Materialize(build)
   }
 
   /** Rows per block: the measurable candidate model — a kept block of
@@ -88,14 +88,13 @@ object Blocking {
   def prefixes(sh: DataFrame, by: Seq[String], theta: Double): DataFrame = {
     val freq = sh.select(explode(col("s")).as("g"))
       .groupBy("g").agg(count(lit(1)).as("f"))
-    sh.select(by.map(col) :+ explode(col("s")).as("g"): _*)
+    Materialize(sh.select(by.map(col) :+ explode(col("s")).as("g"): _*)
       .join(freq, "g")
       .groupBy(by.map(col): _*)
       .agg(array_sort(collect_list(struct(col("f"), col("g")))).as("ord"),
         count(lit(1)).as("n"))
       .select(by.map(col) :+ explode(slice(transform(col("ord"), _.getField("g")),
-        lit(1), (col("n") - ceil(lit(theta) * col("n")) + 1).cast("int"))).as("g"): _*)
-      .localCheckpoint()
+        lit(1), (col("n") - ceil(lit(theta) * col("n")) + 1).cast("int"))).as("g"): _*))
   }
 
   /** Exact Jaccard of two set arrays; null when both are empty. */

@@ -35,11 +35,10 @@ import org.apache.spark.sql.functions._
   * bucket is label-uniform, hence every component is.
   *
   * 100 TB posture: each round is 4 hash shuffles keyed by bucket / doc /
-  * component (all high-cardinality), with `localCheckpoint` truncating
+  * component (all high-cardinality), with [[Materialize]] truncating
   * the loop's lineage (at cluster scale: persisted table per round). The
-  * per-round `count` action on the changed-label set is the convergence
-  * test — a scalar per round, not a data collect, same pattern as the
-  * IVF k-means trainer (Similarity.scala).
+  * per-round changed-label count, observed on that same job, is the
+  * convergence test — a scalar per round, not a data collect.
   */
 object Clustering {
 
@@ -67,7 +66,7 @@ object Clustering {
     *
     * Iteration-state hygiene (both matter; each alone hangs the loop):
     *  - the self-join doubles the logical TREE per jump, so every jump
-    *    must truncate lineage (`localCheckpoint`) or planning goes
+    *    must truncate lineage ([[Materialize]]) or planning goes
     *    exponential;
     *  - Spark 4's localCheckpoint copies the ORIGIN plan's stats onto
     *    the LogicalRDD, and a self-join SQUARES sizeInBytes — checkpoint
@@ -88,17 +87,12 @@ object Clustering {
           least(col("x.component"), col("y.component")).as("component"),
           (col("y.component") < col("x.component")).as("moved"))
         .cache()
-      // ONE action per jump (VERDICT r04 task 4): the moved-count rides
-      // the checkpoint job as an observed metric instead of a separate
-      // filter-count pass. The cache still sits between join and
-      // checkpoint — the checkpoint's stats re-ground on the
-      // InMemoryRelation's real byte size (see the Spark 4 hazard
-      // above), and the single action both populates it and cuts
-      // lineage.
-      val obs = org.apache.spark.sql.Observation()
-      cur = c.observe(obs, sum(when(col("moved"), 1L).otherwise(0L)).as("n"))
-        .drop("moved").localCheckpoint()
-      changed = Option(obs.get("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
+      // ONE action per jump (VERDICT r04 task 4): it counts the moved
+      // labels, cuts lineage, and populates the cache the checkpoint's
+      // stats re-ground on (the Spark 4 hazard above).
+      val (next, m) = Materialize(c, count(when(col("moved"), 1)).as("n"))
+      cur = next.drop("moved")
+      changed = m.getLong(0)
       c.unpersist(false)
       jumps += 1
     }
@@ -143,12 +137,10 @@ object Clustering {
     val spark = docs.sparkSession
     val outerParts = spark.conf.get("spark.sql.shuffle.partitions")
     try {
-      val obs0 = org.apache.spark.sql.Observation()
-      var lab = memb.select(col("doc_id")).distinct()
-        .select(col("doc_id"), col("doc_id").as("component"))
-        .observe(obs0, count(lit(1)).as("n"))
-        .localCheckpoint()
-      val activeDocs = Option(obs0.get("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
+      val (lab0, m0) = Materialize(memb.select(col("doc_id")).distinct()
+        .select(col("doc_id"), col("doc_id").as("component")), count(lit(1)).as("n"))
+      var lab = lab0
+      val activeDocs = m0.getLong(0)
       // Size the LOOP's shuffles to the active subgraph, not the scan:
       // ~22 small jobs run below, and per-job cost at this state size is
       // task-scheduling overhead × partition count (measured: the same
@@ -190,15 +182,10 @@ object Clustering {
             .cache()
           // step A moved nothing ⇒ global fixpoint (compress only chases
           // pointers step A created). ONE action serves as convergence
-          // test, cache materializer, AND lineage cut: the moved-count is
-          // an observed metric on the checkpoint job (VERDICT r04 task 4
-          // — previously a separate filter-count ran before the compress
-          // chain re-scanned the cache).
-          val obs = org.apache.spark.sql.Observation()
-          val candCk = cand.observe(obs, sum(when(col("moved"), 1L).otherwise(0L)).as("n"))
-            .drop("moved").localCheckpoint()
-          changed = Option(obs.get("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
-          if (changed > 0) lab = compress(candCk, maxJumps = 40)
+          // test, cache materializer, AND lineage cut (VERDICT r04 task 4).
+          val (candCk, m) = Materialize(cand, count(when(col("moved"), 1)).as("n"))
+          changed = m.getLong(0)
+          if (changed > 0) lab = compress(candCk.drop("moved"), maxJumps = 40)
           cand.unpersist(false)
           round += 1
         }

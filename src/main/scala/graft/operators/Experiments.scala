@@ -161,7 +161,7 @@ object Experiments {
     //      tiny partition bounded by the bucket count — broadcast back
     //      as offsets; cum = offset + local running sum.
     // The bucket id is DETERMINISTIC in the value (width_bucket over the
-    // broadcast min/max — r14 ADVICE): spark_partition_id over a
+    // observed min/max — r14 ADVICE): spark_partition_id over a
     // repartitionByRange was correct only while BOTH consumers read ONE
     // materialized range exchange, because RangePartitioner samples its
     // boundaries with an RDD-id-dependent seed — if exchange reuse broke
@@ -169,13 +169,13 @@ object Experiments {
     // under DIFFERENT boundaries and d_ks silently wrong. min/max are
     // exact order-independent aggregates, so recomputation cannot skew
     // the boundaries; correctness no longer rests on plan reuse (both
-    // consumers anyway branch off the localCheckpoint, so the events
+    // consumers anyway branch off the materialized table, so the events
     // scan + distinct-value agg run once regardless). The
     // final max is order-independent, so no float-accumulation ordering
     // enters the result: each |F_A−F_B| is computed from exact integer
     // cumulative counts with one division per side. The distinct-value
-    // table feeds the totals agg AND both phase passes, so it is
-    // materialized once (localCheckpoint — the pagerank/LPA convention).
+    // table feeds both phase passes, so it is materialized once
+    // ([[Materialize]]), and the totals and min/max ride that job.
     // Bucket skew follows the value distribution rather than sampled
     // quantiles — acceptable for a CDF statistic whose input is the
     // DISTINCT-value table (64 buckets, each window task sorts
@@ -210,24 +210,20 @@ object Experiments {
       val variant = when(
         substring(md5(concat(col("user_id").cast("string"), lit(":ab"))), 1, 1) < "8", "A")
         .otherwise("B")
-      val c = Tables.events(s, d)
+      val (c, t) = Materialize(Tables.events(s, d)
         .filter(col("event_type") === "purchase")
         .select(variant.as("variant"), col("value"))
         .groupBy("value")
         .agg(count(when(col("variant") === "A", lit(1))).as("ca"),
-          count(when(col("variant") === "B", lit(1))).as("cb"))
-        .localCheckpoint()
-      val t = c.agg(sum("ca").cast("long").as("n_a"), sum("cb").cast("long").as("n_b"))
-      val mm = c.agg(min("value").as("vmin"), max("value").as("vmax"))
+          count(when(col("variant") === "B", lit(1))).as("cb")),
+        sum("ca").cast("long").as("n_a"), sum("cb").cast("long").as("n_b"),
+        min("value").as("vmin"), max("value").as("vmax"))
+      val Seq(nA, nB, vmin, vmax) = Seq("n_a", "n_b", "vmin", "vmax").map(Materialize.lit(t, _))
       val nBuckets = 64
-      val bucketed = c.crossJoin(broadcast(mm))
-        .withColumn("pid",
-          when(col("vmax") <= col("vmin"), lit(0))
-            .otherwise(least(
-              floor((col("value") - col("vmin"))
-                / (col("vmax") - col("vmin")) * nBuckets).cast("int"),
-              lit(nBuckets - 1))))
-        .drop("vmin", "vmax")
+      val bucketed = c.withColumn("pid",
+        when(vmax <= vmin, lit(0)).otherwise(least(
+          floor((col("value") - vmin) / (vmax - vmin) * nBuckets).cast("int"),
+          lit(nBuckets - 1))))
       val localCdf = Window.partitionBy("pid").orderBy("value")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val local = bucketed
@@ -242,8 +238,7 @@ object Experiments {
           coalesce(sum(col("sb")).over(prevPids), lit(0L)).as("ob"))
       local.join(broadcast(offsets), "pid")
         .select((col("oa") + col("la")).cast("double").as("cum_a"),
-          (col("ob") + col("lb")).cast("double").as("cum_b"))
-        .crossJoin(broadcast(t))
+          (col("ob") + col("lb")).cast("double").as("cum_b"), nA.as("n_a"), nB.as("n_b"))
         .filter(col("n_a") > 0 && col("n_b") > 0)
         .groupBy("n_a", "n_b")
         .agg(round(max(abs(col("cum_a") / col("n_a") - col("cum_b") / col("n_b"))), 6)

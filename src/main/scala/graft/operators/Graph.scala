@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.Q
 import graft.sources.Tables
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -29,10 +29,9 @@ import org.apache.spark.sql.types.DecimalType
   * NORMALIZED to uniform (r·N — 1.0 = average), rounded to 6 dp.
   *
   * The static edge/degree tables feed all three unrolled rounds of one
-  * plan, so they are materialized ONCE up front (`localCheckpoint`, the
-  * iterative-state convention of the IVF trainer / cc loop; at cluster
-  * scale: a persisted edge table) — leaving them lazy re-runs the
-  * fact-join scan per round (measured 3× the cost at sf0.1).
+  * plan, so they are persisted ONCE as bucketed [[graft.Indexes]]
+  * artifacts — leaving them lazy re-runs the fact-join scan per round
+  * (measured 3× the cost at sf0.1).
   */
 object Graph {
 
@@ -62,8 +61,8 @@ object Graph {
     * million-node graph does NOT fit an executor broadcast), fall back
     * to a keyed shuffle join on src/node — both sides hash-partition on
     * the node id, the standard Pregel-shape round (VERDICT r08 task 5).
-    * `nn` stays broadcast in both paths: it is one row. */
-  private def step(rank: DataFrame, sym: DataFrame, deg: DataFrame, nn: DataFrame,
+    * `nn`, the node count, is a literal in both paths. */
+  private def step(rank: DataFrame, sym: DataFrame, deg: DataFrame, nn: Column,
                    broadcastRanks: Boolean): DataFrame = {
     // r19: r/deg and its DECIMAL(38,18) cast are pure functions of the
     // |nodes|-row side — computed per NODE here, they were previously
@@ -79,9 +78,8 @@ object Graph {
     joined
       .select(col("dst"), col("c"))
       .groupBy("dst").agg(sum(col("c")).as("s"))
-      .crossJoin(broadcast(nn))
       .select(col("dst").as("node"),
-        (lit(Teleport) / col("nn") +
+        (lit(Teleport) / nn +
           lit(Damping) * col("s").cast("double")).as("r"))
   }
 
@@ -188,7 +186,7 @@ object Graph {
         // never collide with the forward ones — plain union, no dedup
         e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
       }
-      // NO localCheckpoint on sym/deg (r16, measured): both are
+      // NO Materialize on sym/deg (r16, measured): both are
       // bucketed Indexes catalog tables, so each round's consumer is a
       // parquet re-scan, not a recompute — and re-scanning beat the
       // checkpoint's write-then-read materialization (sf1 TimeQ
@@ -197,30 +195,23 @@ object Graph {
       val deg = graft.Indexes.table(s, d, "trade_degrees", Seq("node")) {
         sym.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
       }
-      val nn = deg.agg(count(lit(1)).as("nn")).localCheckpoint()
+      // the node count, read once per input version (graft.Memo: warm
+      // runs start no job), enters every round as a literal
+      val nNodes = graft.Memo.of(deg, "nodes")(deg.count())
+      // floored at 1: an empty graph has no row, and a folded 1.0/0 raises
+      val nn = lit(math.max(nNodes, 1L))
       // gate the per-round rank-table broadcast on the session's own
       // autoBroadcastJoinThreshold (the same knob every other join
-      // honors): nodes × ~32 B vs threshold. The node count is already
-      // materialized in `nn`'s checkpoint — reading the scalar is free.
-      val nNodes = nn.head().getLong(0)
-      val bcastThreshold = {
-        val t = s.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        try t.toLong // plain byte count (the SQLConf default form) or -1
-        catch { case _: NumberFormatException => // "10MB"-style suffixed form
-          org.apache.spark.network.util.JavaUtils.byteStringAsBytes(t)
-        }
-      }
-      val broadcastRanks =
-        bcastThreshold > 0 && nNodes * RankRowBytes <= bcastThreshold
-      val r0 = deg.crossJoin(broadcast(nn))
-        .select(col("node"), (lit(1.0) / col("nn")).as("r"))
+      // honors): nodes × ~32 B vs threshold
+      val threshold = Hints.broadcastThresholdBytes(s)
+      val broadcastRanks = threshold > 0 && nNodes * RankRowBytes <= threshold
+      val r0 = deg.select(col("node"), (lit(1.0) / nn).as("r"))
       val r3 = (1 to Rounds).foldLeft(r0)((r, _) =>
         step(r, sym, deg, nn, broadcastRanks))
-      r3.crossJoin(broadcast(nn))
-        .select(
-          when(col("node") % 2 === 0, "supplier").otherwise("customer").as("kind"),
-          (col("node") / 2).cast("long").as("node_key"),
-          round(col("r") * col("nn"), 6).as("pr"))
+      r3.select(
+        when(col("node") % 2 === 0, "supplier").otherwise("customer").as("kind"),
+        (col("node") / 2).cast("long").as("node_key"),
+        round(col("r") * nn, 6).as("pr"))
         .orderBy("kind", "node_key")
     },
 
@@ -374,7 +365,7 @@ object Graph {
     Q("khop_2_reach_approx_bound",
       """SELECT CAST(NULL AS BIGINT) AS node, CAST(NULL AS BIGINT) AS abs_err
         |WHERE false""".stripMargin) { (s, d) =>
-      val sym = khopSym(coorderEdges(s, d))
+      val symN @ (sym, _) = khopSym(coorderEdges(s, d))
       // r18: dedup (node, dst) FIRST, then count + sketch the deduped
       // stream — exact count is unchanged by definition, and the HLL
       // sketch is duplicate-idempotent (same value → same register),
@@ -382,7 +373,7 @@ object Graph {
       // mixed exact+approx aggregation otherwise plans; this query
       // already pays exact-distinct (pair-level) state by design, so
       // unlike khop_2_reach_approx the regroup costs no extra state.
-      val both = khopTagged(sym)
+      val both = khopTagged(symN)
         .select(col("src").as("node"), col("dst")).distinct()
         .groupBy("node")
         .agg(count(lit(1)).as("exact_2hop"),
@@ -430,9 +421,10 @@ object Graph {
     // buffer plans as SortAggregate — a sort on the grouping key only —
     // the shuffle-volume reduction is the win, and no Window appears
     // in any round.) Label state is 2 columns/node and never collects.
-    // The static
-    // symmetrized edge table feeds all rounds of one plan so it is
-    // materialized once (the pagerank localCheckpoint convention).
+    // The static symmetrized edge table feeds all rounds of one plan, so
+    // it is materialized once: left lazy, every round re-scans the pair
+    // artifact (measured sf0.1/4 cores, 5 pairs: 2.03 → 3.60 s median,
+    // 245 → 1,185 tasks).
     Q("label_propagation",
       """WITH e AS (
         |  SELECT a.l_partkey AS pa, b.l_partkey AS pb
@@ -459,9 +451,8 @@ object Graph {
         |    PARTITION BY v ORDER BY c DESC, label ASC) AS rn FROM c3) WHERE rn = 1)
         |SELECT v AS part, label AS community FROM l3 ORDER BY part""".stripMargin) { (s, d) =>
       val e = coorderEdges(s, d)
-      val sym = e.select(col("pa").as("src"), col("pb").as("dst"))
-        .unionAll(e.select(col("pb").as("src"), col("pa").as("dst")))
-        .localCheckpoint()
+      val sym = Materialize(e.select(col("pa").as("src"), col("pb").as("dst"))
+        .unionAll(e.select(col("pb").as("src"), col("pa").as("dst"))))
       var lbl = sym.select(col("src").as("v")).distinct()
         .withColumn("label", col("v"))
       for (_ <- 1 to LpaRounds) {
@@ -484,30 +475,30 @@ object Graph {
     }
   )
 
-  /** Symmetrized support-pruned edge list, materialized ONCE per query
-    * (`localCheckpoint`, the LPA convention two queries up). The lazy
+  /** Symmetrized support-pruned edge list and its row count, materialized
+    * ONCE per query (the count rides the [[Materialize]] job). The lazy
     * form planned the pair-artifact scan + filter SIX times per khop
     * query (both union branches × the expansion's three consumers) —
-    * 6×32 bucket-scan tasks of overhead for a few-MB table; the
-    * checkpointed blocks are scanned from the block manager instead.
-    * Estimated bytes per edge row: 2 longs + unsafe-row overhead. */
+    * 6×32 bucket-scan tasks of overhead for a few-MB table. Estimated
+    * bytes per edge row: 2 longs + unsafe-row overhead. */
   private val EdgeRowBytes = 24L
 
-  private def khopSym(e: DataFrame): DataFrame =
-    e.select(col("pa").as("src"), col("pb").as("dst"))
-      .union(e.select(col("pb").as("src"), col("pa").as("dst")))
-      .localCheckpoint()
+  private def khopSym(e: DataFrame): (DataFrame, Long) = {
+    val (sym, m) = Materialize(e.select(col("pa").as("src"), col("pb").as("dst"))
+      .union(e.select(col("pb").as("src"), col("pa").as("dst"))), count(lit(1)).as("n"))
+    (sym, m.getLong(0))
+  }
 
   /** Shared X68 expansion: symmetrized support-pruned edges, unioned
     * with the 2-hop self-join, each row tagged `direct` so 1-hop and
-    * ≤2-hop counts come out of ONE origin-keyed aggregation. `sym` MUST
-    * be the checkpointed [[khopSym]] output — a checkpoint has no
-    * catalog statistics, so the 2-hop self-join's build side is
-    * re-hinted through the size gate (row count is a cheap block-manager
-    * count post-checkpoint; above the threshold the join degrades to
-    * the keyed shuffle, the standard Pregel round shape). */
-  private def khopTagged(sym: DataFrame): DataFrame = {
-    val build = Hints.broadcastIfEstimated(sym, sym.count() * EdgeRowBytes)
+    * ≤2-hop counts come out of ONE origin-keyed aggregation. A
+    * checkpoint has no catalog statistics, so the 2-hop self-join's
+    * build side is re-hinted through the size gate from [[khopSym]]'s
+    * row count (above the threshold the join degrades to the keyed
+    * shuffle, the standard Pregel round shape). */
+  private def khopTagged(symN: (DataFrame, Long)): DataFrame = {
+    val (sym, n) = symN
+    val build = Hints.broadcastIfEstimated(sym, n * EdgeRowBytes)
     val two = sym.as("e1").join(build.as("e2"), col("e1.dst") === col("e2.src"))
       .select(col("e1.src").as("src"), col("e2.dst").as("dst"))
     sym.select(col("src"), col("dst"), lit(true).as("direct"))

@@ -121,16 +121,15 @@ object Lexicon {
          |  round(CAST(nuc.nucleus_size AS DOUBLE) / CAST(t.n_terms AS DOUBLE), 9) AS nucleus_frac
          |FROM tot t JOIN nuc USING (lang) ORDER BY t.lang""".stripMargin) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
-      // localCheckpoint: cnt feeds THREE consumers (tot, the running
+      // Materialize: cnt feeds THREE consumers (tot, the running
       // window, and via tot the final join), each column-pruned to a
       // different shape Catalyst canonicalizes differently — left lazy
       // the corpus is tokenized once per consumer (r14 ScanAudit found
       // 3 scans). cnt is |lang × vocab| rows, sub-linear in corpus size,
       // so the materialize-once convention (pagerank/LPA/KS) applies.
-      val cnt = Tables.documents(s, d)
+      val cnt = Materialize(Tables.documents(s, d)
         .select(col("lang"), explode(TextFns.tokens(col("text"))).as("term"))
-        .groupBy("lang", "term").agg(count(lit(1)).as("c"))
-        .localCheckpoint()
+        .groupBy("lang", "term").agg(count(lit(1)).as("c")))
       val tot = cnt.groupBy("lang")
         .agg(sum(col("c")).as("total"), count(lit(1)).as("n_terms"))
       val w = Window.partitionBy("lang").orderBy(col("c").desc, col("term"))

@@ -334,13 +334,12 @@ object NearDup {
     * 10 MB — the hint is withheld and the planner runs the same
     * cross join as a partitioned CartesianProduct instead of OOMing a
     * forced broadcast. Both branches are row-identical (NearDupSpec
-    * forces the fallback with a floor threshold end-to-end). The
-    * centroid table is tiny either way, so the checkpoint+count that
-    * feeds the gate estimate is a scalar-cost probe, run once per
-    * assignment build. */
+    * forces the fallback with a floor threshold end-to-end). The gate
+    * needs the centroid count and dimension before planning: both ride
+    * the job that materializes the centroid table. */
   private[graft] def semAssignment(emb: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val cent = emb
+    val cent0 = emb
       .select(col("label"), posexplode(col("embedding")))
       .select(col("label"), col("pos"),
         col("col").cast("double").cast("decimal(38,12)").as("x"))
@@ -351,10 +350,9 @@ object NearDup {
         s => s.getField("c")).as("cv"))
       .select(col("label").cast("int").as("centroid"), col("cv"),
         Similarity.norm2(col("cv")).as("cn2"))
-      .localCheckpoint()
-    val nCent = cent.count()
-    val dim = cent.select(size(col("cv")).as("d")).limit(1).collect()
-      .headOption.map(_.getInt(0).toLong).getOrElse(0L)
+    val (cent, m) = Materialize(cent0, count(lit(1)).as("n"), max(size(col("cv"))).as("dim"))
+    val nCent = m.getLong(0)
+    val dim = if (m.isNullAt(1)) 0L else m.getInt(1).toLong
     val v = emb.select(col("vec_id"), col("embedding").as("vf"),
         col("embedding").cast("array<double>").as("v"))
       .withColumn("n2", Similarity.norm2(col("v")))
@@ -470,9 +468,8 @@ object NearDup {
                       theta: Double): DataFrame = {
     // one materialization feeds freq, the ranked prefix build, and
     // both verify-join sides
-    val sh = corpusSh.select(col("doc_id"), col("s")).withColumn("side", lit("c"))
-      .unionByName(batchSh.select(col("doc_id"), col("s")).withColumn("side", lit("b")))
-      .localCheckpoint()
+    val sh = Materialize(corpusSh.select(col("doc_id"), col("s")).withColumn("side", lit("c"))
+      .unionByName(batchSh.select(col("doc_id"), col("s")).withColumn("side", lit("b"))))
     val pref = Blocking.prefixes(sh, Seq("doc_id", "side"), theta)
     val cand = pref.filter(col("side") === "b").as("a")
       .join(pref.filter(col("side") === "c").as("b"), col("a.g") === col("b.g"))
@@ -498,7 +495,7 @@ object NearDup {
     // materialized once: sh feeds freq, the ranked prefix build, and
     // BOTH verify-join sides — four plan branches that would each
     // re-run tokenize+shingle+distinct otherwise
-    val sh = shingles3(docs).localCheckpoint()
+    val sh = Materialize(shingles3(docs))
     val pref = Blocking.prefixes(sh, Seq("doc_id"), theta)
     val cand = pref.as("a")
       .join(pref.as("b"),
@@ -614,13 +611,12 @@ object NearDup {
     // batch (odd) side: transient — checkpointed because keys feed rep
     // selection AND the fan-out, and the rep postings feed one join
     // whose two subtrees would otherwise re-tokenize the batch
-    val oddKeys = keysOf(docs.filter(col("doc_id") % 2 === 1)).localCheckpoint()
+    val oddKeys = Materialize(keysOf(docs.filter(col("doc_id") % 2 === 1)))
     val oddRep = oddKeys.groupBy("ck").agg(min(col("doc_id")).as("bdoc"))
     val oddRepDocs = docs.join(
       oddRep.select(col("bdoc").as("doc_id")), Seq("doc_id"), "left_semi")
-    val oddPostings = Clustering.fingerprintBuckets(oddRepDocs)
-      .join(hashedSetsOf(oddRepDocs), "doc_id")
-      .localCheckpoint()
+    val oddPostings = Materialize(Clustering.fingerprintBuckets(oddRepDocs)
+      .join(hashedSetsOf(oddRepDocs), "doc_id"))
     // bucket-local scoring: a pair colliding in several bands is scored
     // once per collision (≤4, identical jac) — harmless to the argmax,
     // so no pair distinct is needed at all

@@ -125,7 +125,7 @@ object Similarity {
     val (v, postings) = vectorsAndPostings(emb, nPlanes, nTables, idx = idx, corpusTag = corpusTag)
     // materialized once: both self-join branches scan the same blocks
     // instead of re-running the postings⋈vector join per branch
-    val pv = postings.join(v, "vec_id").localCheckpoint()
+    val pv = Materialize(postings.join(v, "vec_id"))
     Blocking.selfPairs(pv, Seq("lsh_t", "lsh_sig"), "vec_id", Seq("v", "n2"),
       round(dot(col("v1"), col("v2")) / (sqrt(col("n21")) * sqrt(col("n22"))), 6).as("cos"),
       minCos.fold(lit(true))(col("cos") >= _))
@@ -273,7 +273,7 @@ object Similarity {
     * the update a per-dimension mean via posexplode (64× row blowup on a
     * one-off training pass; at cluster scale training runs on a
     * deterministic sample, not the full corpus). No driver collect
-    * anywhere: the new centroid table is localCheckpoint'd each round,
+    * anywhere: the new centroid table is materialized each round,
     * which both truncates the iterative lineage and keeps the broadcast
     * input computed-once (the persisted-table equivalent of a saved
     * index). Clusters that lose all members drop out (k may shrink) —
@@ -282,12 +282,11 @@ object Similarity {
     // seed with the k SMALLEST vec_ids — a bare limit(k) would take k
     // rows in physical partition order, making centroids (and thus ANN
     // results) depend on thread count / file splits
-    var cents = v.orderBy(col("vec_id")).limit(k)
+    var cents = Materialize(v.orderBy(col("vec_id")).limit(k)
       .select(row_number().over(Window.orderBy(col("vec_id"))).as("cluster"),
-        col("v").as("c"), col("n2").as("cn2"))
-      .localCheckpoint()
+        col("v").as("c"), col("n2").as("cn2")))
     for (_ <- 1 to iters) {
-      cents = assignClusters(v, cents)
+      cents = Materialize(assignClusters(v, cents)
         .join(v, "vec_id")
         .select(col("cluster"), posexplode(col("v")))
         .groupBy(col("cluster"), col("pos")).agg(avg(col("col")).as("x"))
@@ -295,8 +294,7 @@ object Similarity {
         .agg(array_sort(collect_list(struct(col("pos"), col("x")))).as("px"))
         .select(col("cluster"),
           transform(col("px"), p => p.getField("x")).as("c"))
-        .withColumn("cn2", norm2(col("c")))
-        .localCheckpoint()
+        .withColumn("cn2", norm2(col("c"))))
     }
     cents
   }
@@ -466,22 +464,21 @@ object Similarity {
   /** Per-subspace Lloyd refinement of a PQ codebook — kmeansCentroids'
     * loop with (sub, code) as the group key; assignment reuses
     * [[pqEncode]]'s integer-grid argmin, updates are per-dimension
-    * means, each round localCheckpoint'd (lineage truncation + the
+    * means, each round materialized (lineage truncation + the
     * broadcast input computed once). Codes that lose all members drop
     * out — harmless for ADC. */
   private[graft] def pqCodebooks(subs: DataFrame, seeds: DataFrame,
                                  iters: Int): DataFrame = {
-    var books = seeds.localCheckpoint()
+    var books = Materialize(seeds)
     for (_ <- 1 to iters) {
-      books = pqEncode(subs, books)
+      books = Materialize(pqEncode(subs, books)
         .join(subs, Seq("vec_id", "sub"))
         .select(col("sub"), col("code"), posexplode(col("sv")))
         .groupBy(col("sub"), col("code"), col("pos")).agg(avg(col("col")).as("x"))
         .groupBy(col("sub"), col("code"))
         .agg(array_sort(collect_list(struct(col("pos"), col("x")))).as("px"))
         .select(col("sub"), col("code"),
-          transform(col("px"), p => p.getField("x")).as("cv"))
-        .localCheckpoint()
+          transform(col("px"), p => p.getField("x")).as("cv")))
     }
     books
   }

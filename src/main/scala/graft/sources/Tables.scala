@@ -15,9 +15,10 @@ import org.apache.spark.sql.types.StructType
   * (path, size, mtime) plus the session's explicitly set confs whose key
   * contains `parquet` (`spark.sql.legacy.parquet.nanosAsLong` and
   * `spark.sql.parquet.inferTimestampNTZ.enabled` both change the type of
-  * `events.ts`). Inference is a footer-reading Spark job, so a warm load
-  * or [[registerViews]] starts none; an in-place regen or a conf flip
-  * re-infers. No schema is hard-coded.
+  * `events.ts`; `spark.sql.parquet.aggregatePushdown` never changes a
+  * schema and is left out). Inference is a footer-reading Spark job, so
+  * a warm load or [[registerViews]] starts none; an in-place regen or a
+  * conf flip re-infers. No schema is hard-coded.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -42,10 +43,14 @@ object Tables {
 
   /** The schema `spark.read.parquet(path)` infers, under the object
     * doc's schema rule. */
-  private[graft] def schemaOf(spark: SparkSession, path: String): StructType = {
-    val parquetConfs = spark.conf.getAll.filter(_._1.contains("parquet")).toSeq.sorted
-    graft.Memo(Seq(path), "schema", parquetConfs)(spark.read.parquet(path).schema)
-  }
+  private[graft] def schemaOf(spark: SparkSession, path: String): StructType =
+    schemaOf(spark, path, spark.read.parquet(path).schema)
+
+  /** [[schemaOf]] with `infer` in place of inference, for a writer that
+    * knows what it wrote ([[graft.Indexes]]): it must equal inference. */
+  private[graft] def schemaOf(spark: SparkSession, path: String, infer: => StructType): StructType =
+    graft.Memo(Seq(path), "schema", spark.conf.getAll.filter { case (k, _) =>
+      k.contains("parquet") && k != "spark.sql.parquet.aggregatePushdown" }.toSeq.sorted)(infer)
 
   /** Opt-in spread loader: [[apply]] plus [[spread]]. For queries whose
     * FIRST post-scan operator is itself an exchange (joins, windows,

@@ -560,7 +560,7 @@ object StreamingOps {
     // materialize once: shingling feeds the screen (both join sides via
     // nearDupVerdicts' own checkpoint), the verdict join, and the index
     // append — and a memory-stream batch re-evaluates per action
-    val bsh = graft.operators.NearDup.shingles3(batch).localCheckpoint()
+    val bsh = graft.operators.Materialize(graft.operators.NearDup.shingles3(batch))
     val conf = spark.sparkContext.hadoopConfiguration
     val idxPath = new org.apache.hadoop.fs.Path(indexDir)
     val fs = idxPath.getFileSystem(conf)
@@ -570,9 +570,9 @@ object StreamingOps {
           .filter(col("ingest_batch") < batchId)
           .select(col("doc_id"), col("s"))
       else bsh.limit(0).select(col("doc_id"), col("s"))
-    val dups = graft.operators.NearDup
-      .nearDupVerdicts(corpusSh, bsh, theta)
-      .localCheckpoint() // two consumers: verdict join + index anti-join
+    // two consumers: verdict join + index anti-join
+    val dups = graft.operators.Materialize(
+      graft.operators.NearDup.nearDupVerdicts(corpusSh, bsh, theta))
     // verdict covers EVERY batch doc, including sub-3-token ones the
     // shingler drops (they are trivially novel)
     batch.select(col("doc_id")).distinct()

@@ -18,8 +18,9 @@ class IndexWarmSpec extends AnyFunSuite {
     val withIdx = SparkEntry.queries.keys.toSeq.sorted.filter { n =>
       // two detection paths: an artifact scan in the final plan, OR an
       // Indexes.table call during CONSTRUCTION (some queries — e.g.
-      // embedding_near_dup_lsh — build the artifact and then checkpoint
-      // the derived table, so the plan string never shows the scan)
+      // embedding_near_dup_lsh — build the artifact and then
+      // materialize the derived table through operators.Materialize, so
+      // the plan string never shows the scan)
       Indexes.resetTouched()
       val plan = SparkEntry.queries(n)(spark, SparkTestSession.sf0001)
         .queryExecution.executedPlan.toString

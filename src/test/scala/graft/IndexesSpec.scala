@@ -82,6 +82,27 @@ class IndexesSpec extends AnyFunSuite {
     assert(desc.exists(l => l.contains("Bucket Columns") && l.contains("k")))
   }
 
+  test("adopting an artifact this JVM wrote infers no schema, and gets the inferred one") {
+    obliterate(sf0001, "spec_adopt_schema")
+    def mk(s: org.apache.spark.sql.SparkSession) =
+      Indexes.table(s, sf0001, "spec_adopt_schema", Seq("k"), nBuckets = 4) {
+        // non-nullable columns, array elements and struct fields: parquet
+        // reads every one of them back as nullable
+        s.range(20).select(col("id").as("k"), array(col("id")).as("a"),
+          struct((col("id") * 3).as("x")).as("st"))
+      }
+    val tbl = Indexes.tableName(sf0001, "spec_adopt_schema")
+    mk(spark).collect()
+    spark.sql(s"DROP TABLE $tbl") // external: directory + marker survive
+    val s2 = spark.newSession()
+    assert(SparkTestSession.jobsOf(mk(s2)) === 0, "adoption must not re-run schema inference")
+    val loc = new org.apache.hadoop.fs.Path(
+      new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir")), tbl).toString
+    val inferred = spark.read.parquet(loc).schema
+    assert(s2.table(tbl).schema === inferred)
+    assert(sources.Tables.schemaOf(s2, loc) === inferred)
+  }
+
   test("a mismatched or incomplete directory rebuilds instead of adopting") {
     obliterate(sf0001, "spec_guard")
     var builds = 0

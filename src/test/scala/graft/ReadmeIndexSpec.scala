@@ -150,10 +150,10 @@ class ReadmeIndexSpec extends AnyFunSuite {
     val kernel = "graft/operators/Blocking.scala"
     val minIdCut = "topK\\([^)]*\\)\\(negate\\(col\\([^)]*\\)\\.cast\\(\"double\"\\)".r
     // an Indexes.table match whose None branch checkpoints: a `case
-    // None =>` line soon after the call, then `.localCheckpoint()` before
-    // the line that closes the match
+    // None =>` line soon after the call, then a `Materialize(` or
+    // `.localCheckpoint()` before the line that closes the match
     val persistCopy = ("(?s)Indexes\\.table\\((?:(?!Indexes\\.table\\().){0,400}?" +
-      "\ncase None =>(?:(?!\n\\}).)*?\\.localCheckpoint\\(\\)").r
+      "\ncase None =>(?:(?!\n\\}).)*?(?:Materialize\\(|\\.localCheckpoint\\(\\))").r
     val copies = mainCode.toSeq.filter(_._1 != kernel).flatMap { case (f, code) =>
       val text = code.mkString("\n")
       Seq(
@@ -166,6 +166,18 @@ class ReadmeIndexSpec extends AnyFunSuite {
     }
     assert(copies.isEmpty,
       s"blocking shapes copied outside $kernel: ${copies.mkString("; ")} — call Blocking instead")
+  }
+
+  test("eager checkpoints and observed metrics are written once, in graft.operators.Materialize") {
+    // one materialization: a scalar a plan needs rides the checkpoint
+    // job, so a bare localCheckpoint or a hand-built Observation elsewhere
+    // fails here
+    val owner = "graft/operators/Materialize.scala"
+    val found = mainCode.toSeq.filter(_._1 != owner).flatMap { case (f, code) =>
+      Seq("localCheckpoint(", "Observation(").filter(p => code.exists(_.contains(p))).map(p => s"$f: $p")
+    }.sorted
+    assert(found.isEmpty,
+      s"eager checkpoints or observations outside $owner: ${found.mkString("; ")} — call Materialize")
   }
 
   test("sessions are built, and session confs changed, only in graft.Sessions") {

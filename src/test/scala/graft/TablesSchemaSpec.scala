@@ -1,8 +1,7 @@
 package graft
 
-import java.nio.file.{Files, StandardCopyOption}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.TimestampType
@@ -16,31 +15,7 @@ import graft.sources.Tables
   * an in-place regen or a parquet-conf flip still sees what a plain
   * `spark.read.parquet` would. */
 class TablesSchemaSpec extends AnyFunSuite {
-  import SparkTestSession.spark
-
-  /** Spark jobs started while `f` runs. A sentinel job run after `f`
-    * closes the count: the listener bus delivers events in order, so once
-    * the sentinel's start arrives every earlier job start has been seen. */
-  private def jobsOf(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val sentinel = s"tables-schema-sentinel-${System.nanoTime}"
-    val started = new java.util.concurrent.atomic.AtomicInteger
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty("spark.job.description") == sentinel))
-          drained.countDown()
-        else started.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      f
-      sc.setJobDescription(sentinel)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
-      started.get
-    } finally sc.removeSparkListener(listener)
-  }
+  import SparkTestSession.{jobsOf, spark}
 
   test("a warm load on a fresh session and a warm registerViews start no Spark job") {
     val d = SparkTestSession.sf0001
@@ -65,6 +40,20 @@ class TablesSchemaSpec extends AnyFunSuite {
       "a warm reload after agg_pushdown_stats must not re-run parquet schema inference")
     val after = s.conf.getAll.toSet
     assert((after diff before) ++ (before diff after) === Set.empty, "confs the query left changed")
+  }
+
+  test("a warm load inside the aggregate-pushdown window starts no job") {
+    // aggregatePushdown steers execution, never inference, so it is not
+    // part of the schema key: the window's loads hit the warm schemas. A
+    // private copy of the tables is an input version no earlier load in
+    // this JVM has seen inside the window.
+    val d = Files.createTempDirectory("schema-pushdown").toString
+    Tables.names.foreach(n => Files.copy(
+      Paths.get(s"${SparkTestSession.sf0001}/$n.parquet"), Paths.get(s"$d/$n.parquet")))
+    val s = spark.newSession()
+    Tables.names.foreach(Tables(s, d, _))
+    assert(jobsOf(Tables.withAggPushdown(s)(Tables.lineitem(s, d))) === 0,
+      "a warm load under aggregate pushdown must not re-run parquet schema inference")
   }
 
   test("a parquet file rewritten in place with an added column loads the new column") {
