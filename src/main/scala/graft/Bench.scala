@@ -110,11 +110,14 @@ object Bench {
     }
   }
 
+  /** Timed runs (-1 = failed); last successful run's [[Trace.Run.json]] ("" if none). */
+  private final case class Timed(name: String, runs: Seq[Double], trace: String)
+
   /** Warm tables, then time each query: one untimed run + Reps timed.
     * Failed runs record -1 (never a plausible-looking time). */
   private def timeQueries(spark: SparkSession, sfDir: String,
                           qs: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)])
-  : Seq[(String, Seq[Double])] = {
+  : Seq[Timed] = {
     graft.sources.Tables.names.foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet")
         .write.format("noop").mode("overwrite").save()
@@ -127,38 +130,35 @@ object Bench {
       System.err.println(s"[bench] jit warmup failed (non-fatal): ${e.getMessage}")
     }
     qs.map { case (name, fn) =>
+      // noop sink: fully materializes every row and column (sorts run,
+      // scalar columns evaluate) with zero serialization/disk cost. A
+      // bare count() would let Catalyst eliminate top-level ORDER BYs
+      // and prune all computed columns — under-measuring.
+      def run() = Trace(spark)(fn(spark, sfDir).write.format("noop").mode("overwrite").save())._2
       // untimed first run: this query's whole-stage codegen compiles
       // here, and any index artifact it reads builds/adopts here
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () } // timed runs below report it
+      try run() catch { case _: Throwable => () } // timed runs below report it
+      var trace = ""
       val times = Seq.fill(Reps) {
-        val t0 = System.nanoTime()
-        // noop sink: fully materializes every row and column (sorts
-        // run, scalar columns evaluate) with zero serialization/disk
-        // cost. A bare count() would let Catalyst eliminate top-level
-        // ORDER BYs and prune all computed columns — under-measuring.
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case e: Throwable =>
+        try { val r = run(); trace = r.json; r.seconds }
+        catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           -1.0
         }
       }
       System.err.println(f"[bench] $name%-32s runs=" +
         times.map(t => f"$t%.3f").mkString("[", ", ", "]"))
-      name -> times
+      Timed(name, times, trace)
     }
   }
 
-  /** Child entry: time shard `i` of `n`, write `name\tt1,t2,t3` lines. */
+  /** Child entry: time shard `i` of `n`, write `name\tt1,t2,t3\ttrace` lines. */
   private def shardMain(i: Int, n: Int, out: String): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local(Sessions.cpus)
     val rows = timeQueries(spark, sfDir, shardSlice(i, n))
-    val text = rows.map { case (name, ts) =>
-      name + "\t" + ts.map(t => f"$t%.6f").mkString(",")
-    }.mkString("", "\n", "\n")
+    val text = rows.map(r => r.name + "\t" + r.runs.map(t => f"$t%.6f").mkString(",") + "\t" + r.trace)
+      .mkString("", "\n", "\n")
     java.nio.file.Files.write(java.nio.file.Paths.get(out), text.getBytes("UTF-8"))
     spark.stop()
   }
@@ -182,7 +182,7 @@ object Bench {
     * the child's registry via SPARK_GRAFT_BENCH_QUERIES — used by the
     * contention-recovery re-run, which re-times only flagged queries. */
   private def forkShard(i: Int, n: Int,
-                        queryFilter: Option[Seq[String]] = None): Option[Seq[(String, Seq[Double])]] = {
+                        queryFilter: Option[Seq[String]] = None): Option[Seq[Timed]] = {
     val out = java.nio.file.Files.createTempFile(s"graft_bench_$i", ".tsv")
     try {
       val javaBin = java.nio.file.Paths.get(
@@ -211,8 +211,8 @@ object Bench {
         import scala.jdk.CollectionConverters._
         val rows = java.nio.file.Files.readAllLines(out).asScala.toSeq
           .filter(_.nonEmpty).map { l =>
-            val Array(name, ts) = l.split("\t")
-            name -> ts.split(",").map(_.toDouble).toSeq
+            val Array(name, ts, trace) = l.split("\t", -1)
+            Timed(name, ts.split(",").map(_.toDouble).toSeq, trace)
           }
         if (rows.isEmpty) { System.err.println(s"[bench] shard $i returned no rows"); None }
         else Some(rows)
@@ -226,7 +226,7 @@ object Bench {
   /** In-process fallback: fresh SparkContext per shard — stop() drops
     * broadcasts, the listener bus, and the block manager; getOrCreate
     * then builds a genuinely new context. */
-  private def inProcessShard(i: Int, n: Int, sfDir: String): Seq[(String, Seq[Double])] = {
+  private def inProcessShard(i: Int, n: Int, sfDir: String): Seq[Timed] = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     val spark = Sessions.local(Sessions.cpus)
@@ -243,8 +243,8 @@ object Bench {
     * calibrated on the r07/r09/r10 contended artifacts — a query whose
     * three same-JVM runs spread >3× with max ≥ 0.45 s reflects co-tenant
     * load, not plan behavior. ≥5 such queries flags the run. */
-  private def spreadFlagged(rows: Seq[(String, Seq[Double])]): Seq[String] =
-    rows.collect { case (n, ts)
+  private def spreadFlagged(rows: Seq[Timed]): Seq[String] =
+    rows.collect { case Timed(n, ts, _)
       if { val ok = ts.filter(_ >= 0)
            ok.nonEmpty && ok.min > 0 && ok.max >= 0.45 && ok.max / ok.min > 3.0 } => n
     }
@@ -256,7 +256,7 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_SHARDS", "8").toInt))
 
     var forked = true
-    val firstPass: Seq[(String, Seq[Double])] = (0 until shards).flatMap { i =>
+    val firstPass: Seq[Timed] = (0 until shards).flatMap { i =>
       System.err.println(s"[bench] === shard $i/$shards ===")
       forkShard(i, shards) match {
         case Some(rows) => rows
@@ -287,9 +287,8 @@ object Bench {
             // a query that fails in the recovery JVM (all runs -1) keeps
             // its healthy first-pass times instead of silently degrading
             // the published median for a query that ran fine (r12 ADVICE)
-            val m = rerun.filter(_._2.exists(_ >= 0)).toMap
-            (firstPass.map { case (n, ts) => n -> m.getOrElse(n, ts) },
-              m.keys.toSeq.sorted)
+            val m = rerun.filter(_.runs.exists(_ >= 0)).map(r => r.name -> r).toMap
+            (firstPass.map(r => m.getOrElse(r.name, r)), m.keys.toSeq.sorted)
           case None =>
             System.err.println("[bench] recovery fork failed — keeping first pass")
             (firstPass, Seq.empty[String])
@@ -305,9 +304,9 @@ object Bench {
       else (ok(ok.size / 2), ok.head, ok.last)
     }
     def r3(x: Double) = math.rint(x * 1000) / 1000
-    val results = perQuery.map { case (n, ts) => (n, stats(ts), ts) }
+    val results = perQuery.map(r => (r, stats(r.runs)))
 
-    val qs = results.map { case (k, (med, _, _), _) => s"\"" + k + "\":" + r3(med) }
+    val qs = results.map { case (r, (med, _, _)) => s"\"" + r.name + "\":" + r3(med) }
       .mkString("{", ",", "}")
     val total = r3(results.map(_._2._1).sum)
     // n_queries rides along so the total can be normalized across
@@ -389,15 +388,16 @@ object Bench {
         s""""contention_recovery":"flagged queries re-timed once in a fresh JVM when >=5 spread >3x",""" +
         s""""shards":$shards,"isolation":"${if (forked) "fresh JVM per shard" else "fresh SparkContext per shard (fork unavailable)"}",""" +
         s""""cpus":"${Sessions.cpus}","spark":"${esc(org.apache.spark.SPARK_VERSION)}","sink":"noop"}"""
-      def artifactJson(rs: Seq[(String, (Double, Double, Double), Seq[Double])],
+      def artifactJson(rs: Seq[(Timed, (Double, Double, Double))],
                        cont: Boolean, nSpread: Int, extra: String): String = {
         val totalMed = r3(rs.map(_._2._1).filter(_ >= 0).sum)
         val totalMn = r3(rs.map(_._2._2).filter(_ >= 0).sum)
-        val qMap = rs.map { case (k, (med, _, _), _) => s"\"" + k + "\":" + r3(med) }
+        val qMap = rs.map { case (r, (med, _, _)) => s"\"" + r.name + "\":" + r3(med) }
           .mkString("{", ",", "}")
-        val detail = rs.map { case (k, (med, mn, mx), ts) =>
-          "\"" + k + "\":{\"median\":" + r3(med) + ",\"min\":" + r3(mn) +
-            ",\"max\":" + r3(mx) + ",\"runs\":[" + ts.map(r3).mkString(",") + "]}"
+        val detail = rs.map { case (r, (med, mn, mx)) =>
+          "\"" + r.name + "\":{\"median\":" + r3(med) + ",\"min\":" + r3(mn) +
+            ",\"max\":" + r3(mx) + ",\"runs\":[" + r.runs.map(r3).mkString(",") + "]" +
+            (if (r.trace.isEmpty) "" else ",\"trace\":" + r.trace) + "}"
         }.mkString("{", ",", "}")
         s"""{"metric":"total","value":$totalMed,"value_min":$totalMn,"unit":"sec","n_queries":${rs.size},"contended":$cont,"n_spread3x":$nSpread,"sf":"${esc(sfDir)}"$extra,"protocol":$protocol,"queries":$qMap,"query_detail":$detail}"""
       }
@@ -408,7 +408,7 @@ object Bench {
       if (recoveredQs.nonEmpty) {
         val contOut = out.resolveSibling(
           out.getFileName.toString.replaceAll("\\.json$", "") + "_contended.json")
-        val contResults = firstPass.map { case (n, ts) => (n, stats(ts), ts) }
+        val contResults = firstPass.map(r => (r, stats(r.runs)))
         java.nio.file.Files.write(contOut,
           artifactJson(contResults, true, flaggedFirst.size,
             filterStamp + s""","recovered":false,"note":"raw contended first pass; clean record is ${esc(out.getFileName.toString)}"""")

@@ -51,12 +51,9 @@ object IndexWarm {
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     val spark = Sessions.local(Sessions.cpus)
-    def run(name: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    def run(name: String): Double = Trace(spark) {
+      SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+    }._2.seconds
     names.foreach { n =>
       val (first, steady) =
         try (run(n), run(n))

@@ -189,7 +189,7 @@ object Graph {
       // NO Materialize on sym/deg (r16, measured): both are
       // bucketed Indexes catalog tables, so each round's consumer is a
       // parquet re-scan, not a recompute — and re-scanning beat the
-      // checkpoint's write-then-read materialization (sf1 TimeQ
+      // checkpoint's write-then-read materialization (sf1, noop sink,
       // 6.02 → 5.55 s warm) while keeping the bucket layout visible to
       // the planner (localCheckpoint erases it into an ExistingRDD).
       val deg = graft.Indexes.table(s, d, "trade_degrees", Seq("node")) {

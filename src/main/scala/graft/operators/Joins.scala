@@ -38,7 +38,7 @@ object Joins {
       // r19: every join side here broadcasts (orders 2.7 MB at sf0.1
       // sits under the session threshold too), so the whole probe
       // chain + partial aggregate fused onto the single-row-group fact
-      // scan task — one core did all the work (ProfileQ: one ~1 s
+      // scan task — one core did all the work (stage profile: one ~1 s
       // 1-task stage was the query). The spread loader moves the four
       // probes + aggregate onto every core; the fact columns shuffled
       // are just (l_orderkey, l_extendedprice, l_discount).

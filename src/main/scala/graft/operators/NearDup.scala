@@ -166,7 +166,7 @@ object NearDup {
     val sigs = Blocking.persist(idx, s"simhash_sigs_$corpusName", Seq("doc_id")) {
       simhashSignatures(docs)
     }
-    val capEff = simhashCapEff(sigs.count())
+    val capEff = simhashCapEff(graft.Memo.of(sigs, "rows")(sigs.count()))
     val keys = Seq("chunk", "csig")
     Blocking.selfPairs(chunkExplode(sigs).transform(Blocking.dropOver(keys, capEff)),
       keys, "doc_id", Seq("sig"),

@@ -196,7 +196,7 @@ object Similarity {
                idx: Option[(org.apache.spark.sql.SparkSession, String)] = None,
                occTarget: Int = 32, bucketCap: Int = 1024,
                corpusTag: String = "emb"): DataFrame = {
-    val nPlanesEff = knnPlanesFor(emb.count(), nPlanes, occTarget)
+    val nPlanesEff = knnPlanesFor(graft.Memo.of(emb, "rows")(emb.count()), nPlanes, occTarget)
     val (v, postings) =
       vectorsAndPostings(emb, nPlanesEff, nTables, seed, idx, corpusTag)
     // The joined (posting, vector) table, bucketed on the self-join keys

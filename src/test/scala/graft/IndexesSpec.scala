@@ -95,7 +95,7 @@ class IndexesSpec extends AnyFunSuite {
     mk(spark).collect()
     spark.sql(s"DROP TABLE $tbl") // external: directory + marker survive
     val s2 = spark.newSession()
-    assert(SparkTestSession.jobsOf(mk(s2)) === 0, "adoption must not re-run schema inference")
+    assert(Trace(s2)(mk(s2))._2.jobs === 0, "adoption must not re-run schema inference")
     val loc = new org.apache.hadoop.fs.Path(
       new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir")), tbl).toString
     val inferred = spark.read.parquet(loc).schema

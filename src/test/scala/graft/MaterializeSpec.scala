@@ -9,7 +9,7 @@ import graft.operators.Materialize
 /** The one eager materialization: the scalars a caller needs ride the
   * checkpoint's own job and equal what a separate aggregate reads. */
 class MaterializeSpec extends AnyFunSuite {
-  import SparkTestSession.{jobsOf, spark}
+  import SparkTestSession.spark
 
   private def frame: DataFrame = spark.range(0, 1000, 1, 4)
     .select((col("id") % 7).as("k"), (col("id") / 8).cast("decimal(18,2)").as("v"))
@@ -18,8 +18,8 @@ class MaterializeSpec extends AnyFunSuite {
     min(col("k")).as("mn"), max(col("v")).as("mx"))
 
   test("checkpoint plus metrics start one job, checkpoint then count() starts more") {
-    assert(jobsOf(Materialize(frame, count(lit(1)).as("n"))) === 1)
-    assert(jobsOf(Materialize(frame).count()) === 3)
+    assert(Trace(spark)(Materialize(frame, count(lit(1)).as("n")))._2.jobs === 1)
+    assert(Trace(spark)(Materialize(frame).count())._2.jobs === 3)
   }
 
   test("metric values equal a separate agg over the same frame") {

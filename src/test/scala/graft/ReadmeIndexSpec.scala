@@ -180,6 +180,16 @@ class ReadmeIndexSpec extends AnyFunSuite {
       s"eager checkpoints or observations outside $owner: ${found.mkString("; ")} — call Materialize")
   }
 
+  test("Spark listeners are attached only by graft.Trace") {
+    // one run recorder: a hand-written listener, and with it its own way
+    // of waiting for the listener bus, fails here
+    val attach = "addSparkListener\\(".r
+    val found = codeUnder("src").collect {
+      case (f, code) if f != "main/scala/graft/Trace.scala" && code.exists(attach.findFirstIn(_).isDefined) => f
+    }.toSeq.sorted
+    assert(found.isEmpty, s"addSparkListener outside graft.Trace: ${found.mkString(", ")} — call Trace")
+  }
+
   test("sessions are built, and session confs changed, only in graft.Sessions") {
     // WordCount keeps its own getOrCreate: as the CLI it must honour
     // spark-submit's conf

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -17,27 +16,17 @@ import org.apache.spark.sql.functions._
   *   sbt "Test/runMain graft.ScaleStress [copies] [sfDir] [workDir]"
   */
 object ScaleStress {
-  private final class SkewListener extends SparkListener {
-    val stages = scala.collection.concurrent.TrieMap[Int, scala.collection.mutable.ArrayBuffer[Long]]()
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-      if (t.taskMetrics != null)
-        stages.getOrElseUpdate(t.stageId,
-          scala.collection.mutable.ArrayBuffer.empty[Long]).synchronized {
-          stages(t.stageId) += t.taskMetrics.executorRunTime
-        }
-    def reset(): Unit = stages.clear()
-    /** Worst max/mean over qualifying stages, with the stage's shape. */
-    def worstSkew(): (Double, String) = {
-      val rows = stages.readOnlySnapshot().toSeq.flatMap { case (sid, ds0) =>
-        val ds = ds0.synchronized(ds0.toVector)
-        val mean = if (ds.isEmpty) 0.0 else ds.sum.toDouble / ds.size
-        if (ds.size >= 8 && mean >= 100.0)
-          Some((ds.max / mean, s"stage $sid: ${ds.size} tasks, mean ${mean.toInt}ms, max ${ds.max}ms"))
-        else None
-      }
-      if (rows.isEmpty) (1.0, "no stage with >=8 tasks and >=100ms mean")
-      else rows.maxBy(_._1)
+  /** Worst max/mean task run time over stages with >= 8 tasks and a
+    * mean >= 100 ms, with the stage's shape. */
+  private def worstSkew(stages: Seq[Trace.Stage]): (Double, String) = {
+    val rows = stages.flatMap { st =>
+      val mean = st.runMs.toDouble / st.tasks
+      if (st.tasks >= 8 && mean >= 100.0)
+        Some((st.maxRunMs / mean, s"stage ${st.id}: ${st.tasks} tasks, mean ${mean.toInt}ms, max ${st.maxRunMs}ms"))
+      else None
     }
+    if (rows.isEmpty) (1.0, "no stage with >=8 tasks and >=100ms mean")
+    else rows.maxBy(_._1)
   }
 
   private def replicate(spark: SparkSession, srcDir: String, outDir: String,
@@ -62,9 +51,6 @@ object ScaleStress {
     replicate(spark, srcDir, workDir, "documents", "doc_id", copies)
     replicate(spark, srcDir, workDir, "lineitem", "l_orderkey", copies)
 
-    val listener = new SkewListener
-    spark.sparkContext.addSparkListener(listener)
-
     // r10 verdict task 8: the as-of family's bucketed variant (the
     // huge-history drop-in) and the time-range rolling window have never
     // been measured at 10× density. They read events/orders, which the
@@ -80,13 +66,14 @@ object ScaleStress {
       "triangle_count", "simjoin_prefix") ++ extra
     var failed = false
     val reports = targets.map { name =>
-      listener.reset()
-      val t0 = System.nanoTime()
-      val df = SparkEntry.queries(name)(spark, workDir)
-      df.write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val rows = df.count()
-      val (skew, shape) = listener.worstSkew()
+      val (df, write) = Trace(spark) {
+        val df = SparkEntry.queries(name)(spark, workDir)
+        df.write.format("noop").mode("overwrite").save()
+        df
+      }
+      val sec = write.seconds
+      val (rows, count) = Trace(spark)(df.count())
+      val (skew, shape) = worstSkew(write.stages ++ count.stages)
       val ok = skew <= 4.0
       if (!ok) failed = true
       println(f"[stress] $name%-24s ${sec}%8.2fs  rows=$rows%-9d worst max/mean=$skew%.2f ($shape) ${if (ok) "OK" else "SKEW VIOLATION"}")

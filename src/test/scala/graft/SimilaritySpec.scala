@@ -167,6 +167,14 @@ class SimilaritySpec extends AnyFunSuite {
       "knn_graph_bound emitted a row — probe recall fell under the 0.45 floor")
   }
 
+  test("X84 kNN graph: a warm build of knn_graph_lsh starts no Spark job") {
+    // the corpus size is read once per input version (graft.Memo) and
+    // the posting and vector tables are adopted index artifacts
+    def build() = SparkEntry.queries("knn_graph_lsh")(spark, SparkTestSession.sf0001)
+    build()
+    assert(Trace(spark)(build())._2.jobs === 0, "a warm knn_graph_lsh build started a job")
+  }
+
   test("X84 adaptive planes: base fixtures keep the 6-plane floor; scale fixtures widen the key space") {
     // expected occupancy stays in (occTarget/2, occTarget]
     assert(Similarity.knnPlanesFor(500L) == 6)     // sf0.001/sf0.01

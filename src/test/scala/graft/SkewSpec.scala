@@ -1,8 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
 import graft.operators.Skew
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** X7 skew stress (VERDICT r03 item 6): a 1-hot-key join — half of all
   * fact rows on a single key — must NOT funnel the hot key's rows into
   * one shuffle task. Verifies BOTH mitigations with measured per-task
-  * shuffle-read record counts from a TaskEnd listener:
+  * shuffle-read record counts from [[Trace]]:
   *   - [[Skew.saltedJoin]] spreads the hot key over `saltBuckets`
   *     partitions (works for any join/agg, AQE or not);
   *   - AQE's skew-join split handles the sort-merge case on its own
@@ -37,22 +35,6 @@ class SkewSpec extends AnyFunSuite {
     spark.range(-1L, 1000L).toDF("key")
       .withColumn("weight", (col("key") % 7 + 1).cast("double"))
 
-  /** Max shuffle-read records over all tasks of jobs run inside `f`
-    * (listener delivery is async — settle before reading). */
-  private def maxTaskShuffleRecords(f: => Unit): Long = {
-    val max = new AtomicLong(0)
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null)
-          max.getAndAccumulate(m.shuffleReadMetrics.recordsRead, math.max)
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try { f; SparkTestSession.settle(max.get()) }
-    finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("saltedJoin bounds the hot key's max task; plain shuffle join does not") {
     // AQE off + broadcast off: isolate salting — the plain join must
     // show the raw funnel (hot key's ~300k rows in ONE task)
@@ -64,10 +46,10 @@ class SkewSpec extends AnyFunSuite {
       val hot = skewedFacts.filter(col("key") === -1L).count()
       assert(hot >= total * 2 / 5, s"hot key carries $hot of $total — not skewed enough")
 
-      val plainMax = maxTaskShuffleRecords {
+      val plainMax = Trace(spark) {
         skewedFacts.join(dim, "key")
           .agg(sum(col("l_quantity") * col("weight"))).collect()
-      }
+      }._2.total.maxShuffleRecords
       assert(plainMax >= hot,
         s"plain join max task read $plainMax < hot-key rows $hot — premise broken")
 
@@ -76,11 +58,11 @@ class SkewSpec extends AnyFunSuite {
       // low-cardinality salt source like l_quantity (50 values) would
       // collapse into few salt buckets and the spread bound would hold
       // on hash luck rather than by construction
-      val saltedMax = maxTaskShuffleRecords {
+      val saltedMax = Trace(spark) {
         Skew.saltedJoin(skewedFacts, dim, "key", buckets,
             saltSource = Seq("l_orderkey"))
           .agg(sum(col("l_quantity") * col("weight"))).collect()
-      }
+      }._2.total.maxShuffleRecords
       // hot key spread over `buckets` salts: max task ≈ hot/buckets plus
       // its share of the cold keys; 4× headroom over the ideal absorbs
       // salt-bucket hash collisions across the 64 reducers while staying
@@ -148,11 +130,11 @@ class SkewSpec extends AnyFunSuite {
       val total = skewedFacts.count()
       val hot = skewedFacts.filter(col("key") === -1L).count()
       val buckets = 32
-      val gatedMax = maxTaskShuffleRecords {
+      val gatedMax = Trace(spark) {
         Skew.saltedJoinGated(skewedFacts, dim, "key", buckets,
             saltSource = Seq("l_orderkey"), hotKeyRowThreshold = 10000L)
           .agg(sum(col("l_quantity") * col("weight"))).collect()
-      }
+      }._2.total.maxShuffleRecords
       val ideal = hot / buckets + (total - hot) / 64
       assert(gatedMax <= ideal * 4,
         s"gated hybrid max task $gatedMax > 4x ideal $ideal — hot rows not spread")
@@ -181,7 +163,7 @@ class SkewSpec extends AnyFunSuite {
       val hot = skewedFacts.filter(col("key") === -1L).count()
       val df = skewedFacts.repartition(32).join(dim, "key")
         .agg(sum(col("l_quantity") * col("weight")))
-      val aqeMax = maxTaskShuffleRecords { df.collect() }
+      val aqeMax = Trace(spark) { df.collect() }._2.total.maxShuffleRecords
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"),
         s"AQE did not mark the skewed SMJ partition for splitting:\n$plan")

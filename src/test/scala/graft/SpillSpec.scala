@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -28,19 +26,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class SpillSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  private def spilledBytes(f: => Unit): Long = {
-    val spilled = new AtomicLong(0)
-    val l = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) spilled.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try { f; SparkTestSession.settle(spilled.get()) }
-    finally spark.sparkContext.removeSparkListener(l)
-  }
-
   private def rows(name: String): Seq[String] =
     SparkEntry.queries(name)(spark, SparkTestSession.sf001)
       .collect().map(_.toString).toSeq
@@ -55,10 +40,9 @@ class SpillSpec extends AnyFunSuite {
     Sessions.withConf(spark,
       "spark.sql.windowExec.buffer.spill.threshold" -> "64",
       "spark.sql.windowExec.buffer.in.memory.threshold" -> "64") {
-      var got: Seq[String] = null
-      val sp = spilledBytes { got = rows("window_running") }
+      val (got, run) = Trace(spark)(rows("window_running"))
       assert(got == inMem, "spilled run differs from in-memory run")
-      assert(sp > 0, "no task spilled — the forced-spill path never engaged")
+      assert(run.total.spillBytes > 0, "no task spilled — the forced-spill path never engaged")
     }
   }
 
@@ -79,10 +63,9 @@ class SpillSpec extends AnyFunSuite {
       Sessions.withConf(spark,
         "spark.sql.sortMergeJoinExec.buffer.spill.threshold" -> "1024",
         "spark.sql.sortMergeJoinExec.buffer.in.memory.threshold" -> "1024") {
-        var got: Seq[String] = null
-        val sp = spilledBytes { got = agg() }
+        val (got, run) = Trace(spark)(agg())
         assert(got == inMem, "SMJ spilled run differs from in-memory run")
-        assert(sp > 0, "no task spilled — SMJ match buffer never overflowed")
+        assert(run.total.spillBytes > 0, "no task spilled — SMJ match buffer never overflowed")
       }
     }
   }

@@ -15,15 +15,15 @@ import graft.sources.Tables
   * an in-place regen or a parquet-conf flip still sees what a plain
   * `spark.read.parquet` would. */
 class TablesSchemaSpec extends AnyFunSuite {
-  import SparkTestSession.{jobsOf, spark}
+  import SparkTestSession.spark
 
   test("a warm load on a fresh session and a warm registerViews start no Spark job") {
     val d = SparkTestSession.sf0001
     Tables(spark.newSession(), d, "events")
-    assert(jobsOf(Tables(spark.newSession(), d, "events")) === 0,
+    assert(Trace(spark)(Tables(spark.newSession(), d, "events"))._2.jobs === 0,
       "a warm load must not re-run parquet schema inference")
     Tables.registerViews(spark, d)
-    assert(jobsOf(Tables.registerViews(spark, d)) === 0,
+    assert(Trace(spark)(Tables.registerViews(spark, d))._2.jobs === 0,
       "a warm registerViews must not re-run parquet schema inference")
   }
 
@@ -36,7 +36,7 @@ class TablesSchemaSpec extends AnyFunSuite {
     Tables.names.foreach(Tables(s, d, _))
     val before = s.conf.getAll.toSet
     SparkEntry.queries("agg_pushdown_stats")(s, d)
-    assert(jobsOf(Tables.names.foreach(Tables(s, d, _))) === 0,
+    assert(Trace(spark)(Tables.names.foreach(Tables(s, d, _)))._2.jobs === 0,
       "a warm reload after agg_pushdown_stats must not re-run parquet schema inference")
     val after = s.conf.getAll.toSet
     assert((after diff before) ++ (before diff after) === Set.empty, "confs the query left changed")
@@ -52,7 +52,7 @@ class TablesSchemaSpec extends AnyFunSuite {
       Paths.get(s"${SparkTestSession.sf0001}/$n.parquet"), Paths.get(s"$d/$n.parquet")))
     val s = spark.newSession()
     Tables.names.foreach(Tables(s, d, _))
-    assert(jobsOf(Tables.withAggPushdown(s)(Tables.lineitem(s, d))) === 0,
+    assert(Trace(spark)(Tables.withAggPushdown(s)(Tables.lineitem(s, d)))._2.jobs === 0,
       "a warm load under aggregate pushdown must not re-run parquet schema inference")
   }
 

@@ -24,9 +24,11 @@ GUARD = os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_guard.py
 
 
 def write(d, name, queries, sf="/root/testdata/sf0.1", contended=False,
-          detail=None, mtime=None, driver_shape=False, filtered=False):
+          detail=None, mtime=None, driver_shape=False, filtered=False,
+          trace=None):
     """Write a synthetic artifact. `queries` is {name: median}; `detail`
-    optionally {name: (median, min)} for the query_detail shape."""
+    optionally {name: (median, min)} for the query_detail shape, each
+    entry carrying `trace` (a dict) as its nested "trace" when given."""
     art = {"metric": "total", "value": sum(queries.values()),
            "n_queries": len(queries), "sf": sf, "queries": queries}
     if not driver_shape:
@@ -37,6 +39,9 @@ def write(d, name, queries, sf="/root/testdata/sf0.1", contended=False,
         art["query_detail"] = {
             k: {"median": med, "min": mn, "max": med, "runs": [med, mn, med]}
             for k, (med, mn) in detail.items()}
+        if trace is not None:
+            for v in art["query_detail"].values():
+                v["trace"] = dict(trace)
     p = os.path.join(d, name)
     with open(p, "w") as f:
         json.dump(art, f)
@@ -274,6 +279,35 @@ def test_touched_query_bypasses_drift_floor():
         write(d, "BENCH_SELF_r09.json", {"q1": 0.26}, mtime=2000)
         code, out = run_guard(d, "--touched=q1")
         assert code == 1 and "FLAG q1" in out, out
+
+
+def test_nested_trace_leaves_per_query_mins_unchanged():
+    """Bench's query_detail entries carry the last run's Trace totals as a
+    nested "trace" object: medians() and rebaseline.py read the same
+    per-query mins from such an artifact as from one without it."""
+    sys.path.insert(0, os.path.dirname(GUARD))
+    import bench_guard
+    import rebaseline
+    detail = {"q1": (1.0, 0.8), "q2": (0.5, 0.4)}
+    trace = {"jobs": 3, "stages": 4, "tasks": 16, "run_ms": 120,
+             "spill_bytes": 0, "max_task_shuffle_records": 7}
+    with tempfile.TemporaryDirectory() as d:
+        plain = write(d, "BENCH_SELF_r08.json", {"q1": 1.0, "q2": 0.5}, detail=detail)
+        traced = write(d, "BENCH_SELF_r09.json", {"q1": 1.0, "q2": 0.5}, detail=detail,
+                       trace=trace)
+        assert bench_guard.medians(plain) == {"q1": 0.8, "q2": 0.4}
+        assert bench_guard.medians(traced) == bench_guard.medians(plain)
+        root = rebaseline.ROOT
+        anchored = []
+        try:
+            for i, p in enumerate((plain, traced)):
+                # anchor() writes BASELINE_PERQUERY_* under ROOT: keep it in the temp dir
+                rebaseline.ROOT = os.path.join(d, str(i))
+                os.makedirs(rebaseline.ROOT)
+                anchored.append(bench_guard.medians(rebaseline.anchor(p)))
+        finally:
+            rebaseline.ROOT = root
+        assert anchored[0] == anchored[1] == {"q1": 0.8, "q2": 0.4}, anchored
 
 
 def test_driver_tail_window_parse():
