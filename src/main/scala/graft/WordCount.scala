@@ -1,9 +1,22 @@
 package graft
 
+import java.io.ByteArrayOutputStream
+import java.net.URI
+
+import scala.collection.mutable.ArrayBuffer
+
+import graft.functions.NGramsEval
 import graft.operators.{Physical, TextPipeline}
 import graft.sources.Sinks
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.TaskAttemptID
+import org.apache.hadoop.mapreduce.lib.input.{FileSplit, LineRecordReader}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.SerializableWritable
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Drop-in CLI for the reference job (reference/WordCount.java:129-160,
   * `hadoop jar wc.jar WordCount <input> <output> [n]`):
@@ -13,10 +26,11 @@ import org.apache.spark.sql.functions.col
   *     <input-text-dir> <output-dir> [n=3] [numParts=7]
   * }}}
   *
-  * Same lifecycle, Spark-native: text files in → normalize → tokenize →
-  * n-gram windows (the codegen'd [[graft.functions.NGramsExpr]], n=1 is
-  * the word-count fast path) → partial+final count (Spark's map-side
-  * combine = the reference's combiner) → first-char range placement
+  * Same lifecycle, Spark-native: text splits in, their lines folded into
+  * documents ([[splitDocs]]) → normalize → tokenize → n-gram windows (the
+  * codegen'd [[graft.functions.NGramsExpr]], n=1 is the word-count fast
+  * path) → partial+final count (Spark's map-side combine = the
+  * reference's combiner) → first-char range placement
   * ([[Physical.referencePlacement]], bit-faithful to WCPartitioner's
   * integer-division math) → per-partition sort → `key\tcount` TSV part
   * files, one per bucket, which concatenate to a globally sorted file —
@@ -28,134 +42,8 @@ import org.apache.spark.sql.functions.col
   */
 object WordCount {
 
-  /** VERDICT r08 task 7: the wholetext envelope (each FILE = one row in
-    * one task, ≤ ~2 GB) made a multi-GB single file fatal. This
-    * pre-pass rewrites any input file larger than `maxBytes` into
-    * line-boundary chunks of ~`maxBytes` each, carrying an
-    * (n−1)-TOKEN OVERLAP: each continuation chunk is prefixed with the
-    * last n−1 normalized tokens of its predecessor. N-gram counting is
-    * then EXACT under the chunking — an n-gram starting at token i
-    * belongs to the chunk whose own tokens contain i; the n−1 carried
-    * tokens admit exactly the boundary-spanning n-grams (no window of n
-    * tokens fits inside an n−1-token prefix, so nothing double-counts).
-    * Output is therefore byte-identical to the unsplit run
-    * (WordCountCliSpec pins it).
-    *
-    * Small files are symlinked into the staging dir untouched (fallback
-    * copy where the FS forbids links). Streaming line-wise: driver
-    * memory is bounded by one line, not one file. A single LINE longer
-    * than `maxBytes` is flushed whole once it exceeds the budget —
-    * pathological no-newline files keep the old envelope (split
-    * upstream at whitespace), documented rather than silently wrong. */
-  private[graft] def splitLargeFiles(input: String, maxBytes: Long, n: Int): String = {
-    import java.nio.file.{Files, Paths, Path, StandardOpenOption}
-    val inDir = Paths.get(input)
-    val stage = Files.createTempDirectory("graft_wc_split")
-    // the same normalization as TextFns.normalize/rawTokens: strip
-    // non-alphanumerics, lowercase, split on whitespace runs
-    def toks(line: String): Array[String] =
-      line.replaceAll("[^a-zA-Z0-9\\s]+", "").toLowerCase
-        .split("\\s+").filter(_.nonEmpty)
-    // UTF-8 byte length without materializing the encoded array — the
-    // budget the flag enforces is TASK MEMORY, and wholetext holds the
-    // chunk's BYTES, so accounting in chars would let multi-byte-heavy
-    // text overshoot maxBytes up to ~3-4x (r09 advice)
-    def utf8Len(s: String): Long = {
-      var i = 0; var b = 0L
-      while (i < s.length) {
-        val c = s.charAt(i)
-        b += (if (c < 0x80) 1 else if (c < 0x800) 2
-              else if (Character.isHighSurrogate(c) && i + 1 < s.length &&
-                       Character.isLowSurrogate(s.charAt(i + 1))) { i += 1; 4 }
-              else 3)
-        i += 1
-      }
-      b
-    }
-    def splitOne(f: Path): Unit = {
-      val base = f.getFileName.toString
-      var part = 0
-      var written = 0L
-      var carry: Seq[String] = Nil // last n-1 tokens written so far
-      var w: java.io.BufferedWriter = null
-      def open(): Unit = {
-        val p = stage.resolve(f"$base.graftsplit$part%04d")
-        w = Files.newBufferedWriter(p, StandardOpenOption.CREATE_NEW)
-        part += 1
-        written = 0L
-        if (carry.nonEmpty) { // the (n-1)-token overlap prefix
-          val pre = carry.mkString(" ")
-          w.write(pre); w.write("\n")
-          written += utf8Len(pre) + 1L
-        }
-      }
-      // REPLACE-on-malformed decoding, matching spark.read.text's
-      // tolerance: Files.newBufferedReader's strict decoder throws
-      // MalformedInputException on e.g. Latin-1 e-books, making the
-      // split path crash on corpora the unsplit path handles (r09 advice)
-      val dec = java.nio.charset.StandardCharsets.UTF_8.newDecoder()
-        .onMalformedInput(java.nio.charset.CodingErrorAction.REPLACE)
-        .onUnmappableCharacter(java.nio.charset.CodingErrorAction.REPLACE)
-      val r = new java.io.BufferedReader(
-        new java.io.InputStreamReader(Files.newInputStream(f), dec))
-      try {
-        open()
-        var line = r.readLine()
-        while (line != null) {
-          if (written > maxBytes) { w.close(); open() }
-          w.write(line); w.write("\n")
-          written += utf8Len(line) + 1L
-          val t = toks(line)
-          carry = if (n == 1) Nil
-            else if (t.length >= n - 1) t.takeRight(n - 1).toSeq
-            else (carry ++ t).takeRight(n - 1)
-          line = r.readLine()
-        }
-      } finally { r.close(); if (w != null) w.close() }
-    }
-    val listing = Files.list(inDir)
-    try {
-      val it = listing.iterator()
-      while (it.hasNext) {
-        val f = it.next()
-        if (Files.isRegularFile(f)) {
-          if (Files.size(f) > maxBytes) splitOne(f)
-          else {
-            val link = stage.resolve(f.getFileName.toString)
-            try Files.createSymbolicLink(link, f.toAbsolutePath)
-            catch { case _: Exception => Files.copy(f, link) }
-          }
-        }
-      }
-    } finally listing.close()
-    stage.toString
-  }
-
   def main(args: Array[String]): Unit = {
-    // optional --max-file-bytes=N (or --max-file-bytes N) enables the
-    // splitting pre-pass; positional args keep the reference's contract
-    var maxFileBytes: Option[Long] = None
-    val positional = {
-      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-      var i = 0
-      while (i < args.length) {
-        args(i) match {
-          case s if s.startsWith("--max-file-bytes=") =>
-            maxFileBytes = Some(s.stripPrefix("--max-file-bytes=").toLong)
-          case "--max-file-bytes" =>
-            i += 1; maxFileBytes = Some(args(i).toLong)
-          case other => buf += other
-        }
-        i += 1
-      }
-      buf.toArray
-    }
-    wordCountMain(positional, maxFileBytes)
-  }
-
-  private def wordCountMain(args: Array[String], maxFileBytes: Option[Long]): Unit = {
-    require(args.length >= 2,
-      "usage: WordCount [--max-file-bytes=N] <input-text-dir> <output-dir> [n=3] [numParts=7]")
+    require(args.length >= 2, "usage: WordCount <input-text-dir> <output-dir> [n=3] [numParts=7]")
     val Array(input, output) = args.take(2)
     // tolerant parse like the reference (reference/WordCount.java:129-136):
     // a malformed n falls back to the default 3 with a warning, so a
@@ -173,45 +61,87 @@ object WordCount {
     val spark = SparkSession.builder()
       .appName(s"graft-wordcount-n$n")
       .getOrCreate()
-    // wholetext: each FILE is one document, so n-gram windows span line
-    // breaks — the reference's mapper keeps a queue across lines for
-    // exactly this (reference/WordCount.java:68-91); plain line-wise
-    // read would silently drop every cross-newline n-gram for n >= 2.
-    // Operating envelope: wholetext materializes each file as ONE row
-    // in one task, so per-FILE size is bounded by task memory (and
-    // hard-capped near 2 GB by the JVM array limit) — right for the
-    // reference's e-book corpus (many files, each modest). For a corpus
-    // of larger single files pass --max-file-bytes: the
-    // [[splitLargeFiles]] pre-pass chunks oversized files with an
-    // (n−1)-token overlap, keeping counts (and output bytes) identical.
-    val effectiveInput = maxFileBytes match {
-      case Some(mb) => splitLargeFiles(input, mb, n)
-      case None => input
-    }
-    try {
-      val counts = TextPipeline.ngramCountUnsorted(
-        spark.read.option("wholetext", "true").text(effectiveInput), "value", n)
-      Sinks.writeTsv(
-        counts
-          .repartition(numParts, Physical.referencePlacement(col("ngram"), numParts))
-          .sortWithinPartitions("ngram"),
-        output)
-    } finally if (maxFileBytes.isDefined) deleteRecursively(effectiveInput)
+    val counts = TextPipeline.ngramCountUnsorted(splitDocs(spark, input, n), "value", n)
+    Sinks.writeTsv(
+      counts
+        .repartition(numParts, Physical.referencePlacement(col("ngram"), numParts))
+        .sortWithinPartitions("ngram"),
+      output)
   }
 
-  /** The staging dir from [[splitLargeFiles]] is a near-full copy of an
-    * oversized corpus — leaking one per run fills the temp FS (r09
-    * advice). The CLI owns the session lifecycle, so delete it once the
-    * job is done (symlinks are removed as links, never followed). */
-  private def deleteRecursively(dir: String): Unit = {
-    import java.nio.file.{Files, Paths}
+  /** `value` documents over the line scan: a split's lines in order,
+    * joined by `\n`, so n-grams span line breaks as the reference mapper's
+    * queue does (reference/WordCount.java:68-91). A document closes at the
+    * first line boundary past `docBytes`, and the split's next document
+    * opens with its last n−1 normalized tokens. A split's last document
+    * ends with the first n−1 tokens of the lines after the split, read
+    * with the scan's own `LineRecordReader`, so they are exactly the lines
+    * later splits own. An n-gram is counted once: inside a split by the
+    * document where it ends, across splits by the split where it starts.
+    * None fits inside n−1 carried tokens.
+    *
+    * Envelope: `docBytes` bounds task memory; only a single line must fit
+    * in one task. `spark.sql.files.maxPartitionBytes` spreads one large
+    * file over parallel tasks. A compressed file that cannot split is one
+    * split ending at its own size: no lookahead. */
+  private[graft] def splitDocs(spark: SparkSession, input: String, n: Int,
+                               docBytes: Int = 8 << 20): DataFrame = {
+    val hadoopConf = spark.sparkContext.broadcast(
+      new SerializableWritable(spark.sessionState.newHadoopConf()))
+    spark.read.text(input)
+      .select(col("value").cast("binary"), col("_metadata.file_path"),
+        col("_metadata.file_block_start"), col("_metadata.file_block_length"),
+        col("_metadata.file_size"))
+      .mapPartitions { (rows: Iterator[Row]) =>
+        val it = rows.buffered
+        var carry = Array.emptyByteArray // tail of the split's previous document
+        Iterator.continually(it).takeWhile(_.hasNext).map { _ =>
+          val (file, start) = (it.head.getString(1), it.head.getLong(2))
+          val (end, size) = (start + it.head.getLong(3), it.head.getLong(4))
+          def inSplit = it.hasNext && it.head.getLong(2) == start && it.head.getString(1) == file
+          val lines = ArrayBuffer(carry, it.next().getAs[Array[Byte]](0))
+          var bytes = carry.length + lines(1).length
+          while (bytes < docBytes && inSplit) {
+            lines += it.next().getAs[Array[Byte]](0); bytes += lines.last.length + 1
+          }
+          if (!inSplit && n > 1 && end < size)
+            lines += joined(lookahead(new Path(new URI(file)), end, size, n - 1, hadoopConf.value.value))
+          carry = if (inSplit && n > 1) joined(lastTokens(lines, n - 1)) else Array.emptyByteArray
+          val doc = new ByteArrayOutputStream(bytes + 64)
+          lines.foreach { l => doc.write(l); doc.write('\n') }
+          doc.toByteArray
+        }
+      }(Encoders.BINARY)
+      .select(col("value").cast("string").as("value"))
+  }
+
+  private def tokens(b: Array[Byte], len: Int): Seq[UTF8String] = {
+    val t = NGramsEval.eval(UTF8String.fromBytes(b, 0, len), 1)
+    (0 until t.numElements()).map(t.getUTF8String)
+  }
+
+  private def joined(toks: Seq[UTF8String]): Array[Byte] =
+    UTF8String.concatWs(UTF8String.fromString(" "), toks: _*).getBytes
+
+  /** The last `k` tokens of `lines`, tokenizing from the last line back. */
+  private def lastTokens(lines: collection.IndexedSeq[Array[Byte]], k: Int): Seq[UTF8String] = {
+    var (i, tail) = (lines.length, Seq.empty[UTF8String])
+    while (tail.length < k && i > 0) { i -= 1; tail = tokens(lines(i), lines(i).length) ++ tail }
+    tail.takeRight(k)
+  }
+
+  /** The first `k` tokens of the lines that start after `start`. */
+  private def lookahead(file: Path, start: Long, size: Long, k: Int, conf: Configuration) = {
+    val reader = new LineRecordReader()
+    reader.initialize(new FileSplit(file, start, size - start, Array.empty[String]),
+      new TaskAttemptContextImpl(conf, new TaskAttemptID()))
     try {
-      val s = Files.walk(Paths.get(dir))
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.deleteIfExists(p))
-      finally s.close()
-    } catch { case e: Exception =>
-      System.err.println(s"WARN: could not clean staging dir $dir: ${e.getMessage}")
-    }
+      var toks = Vector.empty[UTF8String]
+      while (toks.length < k && reader.nextKeyValue()) {
+        val line = reader.getCurrentValue
+        toks ++= tokens(line.getBytes, line.getLength)
+      }
+      toks.take(k)
+    } finally reader.close()
   }
 }

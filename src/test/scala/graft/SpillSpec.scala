@@ -31,15 +31,17 @@ class SpillSpec extends AnyFunSuite {
       .collect().map(_.toString).toSeq
 
   test("window query: identical results with frame buffers forced to disk") {
-    // window_running only: 100 l_suppkey groups × ~600 rows spill ~10
-    // chunks each — few, large groups. Forcing spill on a MANY-group
-    // window (e.g. window_ranking's 15k l_orderkey groups) is the OOM
-    // pathology described above, not a realistic memory-pressure shape:
+    // window_running only: 100 l_suppkey groups of 541-663 rows spill
+    // 2 files each at 256 rows — few, large groups. Reading a group back
+    // opens one read-ahead buffer per spill file: at a 64-row threshold
+    // (~10 files per group) a task ran out of a 4g heap. Forcing spill on
+    // a MANY-group window (e.g. window_ranking's 15k l_orderkey groups) is
+    // the same pathology, not a realistic memory-pressure shape:
     // per-group thresholds model pressure only where groups are big.
     val inMem = rows("window_running")
     Sessions.withConf(spark,
-      "spark.sql.windowExec.buffer.spill.threshold" -> "64",
-      "spark.sql.windowExec.buffer.in.memory.threshold" -> "64") {
+      "spark.sql.windowExec.buffer.spill.threshold" -> "256",
+      "spark.sql.windowExec.buffer.in.memory.threshold" -> "256") {
       val (got, run) = Trace(spark)(rows("window_running"))
       assert(got == inMem, "spilled run differs from in-memory run")
       assert(run.total.spillBytes > 0, "no task spilled — the forced-spill path never engaged")

@@ -43,7 +43,7 @@ class WordCountCliSpec extends AnyFunSuite {
     Files.write(in.resolve("book.txt"), "a b\nc d".getBytes)
     WordCount.main(Array(in.toString, out, "2"))
     assert(partLines(out).flatten == Seq("a b\t1", "b c\t1", "c d\t1"),
-      "cross-newline bigram 'b c' must be counted — wholetext document scope")
+      "cross-newline bigram 'b c' must be counted — split document scope")
   }
 
   test("malformed n falls back to 3 like the reference CLI") {
@@ -56,70 +56,114 @@ class WordCountCliSpec extends AnyFunSuite {
     assert(partLines(out).flatten == Seq("x y z\t1", "y z w\t1"))
   }
 
-  test("--max-file-bytes split run is byte-identical to the unsplit run") {
-    spark
-    // VERDICT r08 task 7: a file far larger than one task's comfortable
-    // memory must survive via the splitting pre-pass, with output
-    // byte-identical to the wholetext run. Scaled-down here: a ~120 KB
-    // file split into ~8 KB chunks (the chunk/overlap math is
-    // size-invariant; the spec pins the SEMANTICS, the envelope comment
-    // documents the scale intent).
+  /** Part files of a CLI run over `in`, with the scan's splits capped at
+    * `splitBytes` when given, and the run's [[Trace]]. */
+  private def run(in: java.nio.file.Path, args: String*)(
+      splitBytes: Option[Long] = None): (Seq[Seq[String]], Trace.Run) = {
+    val dir = Files.createTempDirectory("graft-cli-out")
+    val out = dir.resolve("run").toString
+    val conf = splitBytes.map("spark.sql.files.maxPartitionBytes" -> _.toString).toSeq
+    try {
+      val (_, trace) = Trace(spark)(Sessions.withConf(spark, conf: _*)(
+        WordCount.main((Seq(in.toString, out) ++ args).toArray)))
+      (partLines(out), trace)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  // lines of 0-4 tokens, with empty, token-free and CR-ended lines, and a
+  // token-free stretch of about 800 bytes that a 97-byte split's lookahead
+  // must cross several later splits to get past
+  private lazy val splitInput = {
     val rnd = new scala.util.Random(42)
     val words = Array("alpha", "beta", "gamma", "delta", "epsilon", "zeta",
       "eta", "theta", "iota", "kappa", "lambda", "mu")
-    val text = (1 to 2000).map { _ =>
-      (1 to (1 + rnd.nextInt(10))).map(_ => words(rnd.nextInt(words.length)))
-        .mkString(" ")
-    }.mkString("\n")
+    val lines = (1 to 2400).map { i =>
+      if (i > 1200 && i <= 1600) Seq("", "-- ...")(i % 2)
+      else rnd.nextInt(8) match {
+        case 0 => ""
+        case 1 => "!! -"
+        case 2 => (1 to rnd.nextInt(5)).map(_ => words(rnd.nextInt(words.length))).mkString(" ") + "\r"
+        case _ => (1 to rnd.nextInt(5)).map(_ => words(rnd.nextInt(words.length))).mkString(" ")
+      }
+    }
     val in = Files.createTempDirectory("graft-cli-insplit")
-    Files.write(in.resolve("big.txt"), text.getBytes("UTF-8"))
-    // plus a small file that must pass through untouched (symlink path)
-    Files.write(in.resolve("small.txt"), "alpha beta gamma".getBytes("UTF-8"))
-
-    val outPlain = Files.createTempDirectory("graft-cli-outsplit").resolve("plain").toString
-    val outSplit = Files.createTempDirectory("graft-cli-outsplit2").resolve("split").toString
-    WordCount.main(Array(in.toString, outPlain, "3", "7"))
-    WordCount.main(Array("--max-file-bytes=8192", in.toString, outSplit, "3", "7"))
-    val plain = partLines(outPlain)
-    val split = partLines(outSplit)
-    assert(split == plain,
-      "split run must reproduce the unsplit run's part files byte-for-byte")
-    // sanity: the splitter actually split (staging had >1 chunk), i.e.
-    // the equality above is not vacuous
-    val chunks = WordCount.splitLargeFiles(in.toString, 8192, 3)
-    val staged = Files.list(Paths.get(chunks)).iterator().asScala.map(_.getFileName.toString).toSeq
-    assert(staged.count(_.contains("graftsplit")) > 5, s"expected many chunks, got $staged")
-    assert(staged.contains("small.txt"))
+    Files.write(in.resolve("big.txt"), lines.mkString("\n").getBytes("UTF-8"))
+    Files.write(in.resolve("small file.txt"), "alpha beta gamma".getBytes("UTF-8"))
+    in
   }
 
-  test("--max-file-bytes tolerates non-UTF-8 bytes and cleans its staging dir") {
+  for (n <- Seq(1, 3, 5)) test(s"n=$n: 97-byte splits give the default run's part files byte-for-byte") {
     spark
-    // r09 advice: the split path's strict UTF-8 decoder crashed on
-    // Latin-1 corpora the unsplit spark.read.text path tolerates via
-    // replacement chars. Pin REPLACE decoding: a Latin-1 'café' byte
-    // sequence must not abort the run, and the oversized file still
-    // splits. Also pin: main() deletes the staging dir afterwards.
+    val (plain, _) = run(splitInput, n.toString, "7")()
+    val (split, trace) = run(splitInput, n.toString, "7")(Some(97))
+    assert(split == plain, "split run must reproduce the default run's part files byte-for-byte")
+    // and both count what one whole-file document per file counts, as do
+    // 64-byte documents, each opening with its predecessor's tail
+    def counts(docs: org.apache.spark.sql.DataFrame) =
+      operators.TextPipeline.ngramCountUnsorted(docs, "value", n)
+        .collect().map(r => s"${r.getString(0)}\t${r.getLong(1)}").sorted.toSeq
+    val wholeFiles = counts(spark.read.option("wholetext", "true").text(splitInput.toString))
+    assert(plain.flatten == wholeFiles && wholeFiles.nonEmpty)
+    for (conf <- Seq(Nil, Seq("spark.sql.files.maxPartitionBytes" -> "97"))) {
+      val smallDocs = Sessions.withConf(spark, conf: _*)(
+        counts(WordCount.splitDocs(spark, splitInput.toString, n, docBytes = 64)))
+      assert(smallDocs == wholeFiles, s"64-byte documents under $conf")
+    }
+    // the equality is not vacuous: the scan really ran as many splits
+    val scanTasks = trace.stages.filter(_.inputBytes > 0).map(_.tasks).max
+    assert(scanTasks > 5, s"expected many scan tasks, got $scanTasks")
+  }
+
+  test("non-UTF-8 bytes are tolerated under small splits") {
+    spark
+    // spark.read.text keeps malformed bytes, which normalization strips
+    // like any other non-alphanumeric: a Latin-1 'café' must not abort
+    // the run, and a split run counts what the default run counts
     val in = Files.createTempDirectory("graft-cli-inlatin")
     val latin1Line = "café au lait ".getBytes("ISO-8859-1") // 0xE9 = malformed in UTF-8
     val body = new java.io.ByteArrayOutputStream()
     (1 to 500).foreach { _ => body.write(latin1Line); body.write('\n') }
     Files.write(in.resolve("latin.txt"), body.toByteArray)
+    val (split, _) = run(in, "2")(Some(1024))
+    // é → stripped by normalization, leaving 'caf'
+    assert(split.flatten.exists(_.startsWith("caf au\t")), s"got: ${split.flatten.take(5)}")
+    assert(split == run(in, "2")()._1)
+  }
 
-    val stageBefore = Files.list(Paths.get(System.getProperty("java.io.tmpdir")))
-      .iterator().asScala.map(_.getFileName.toString)
-      .filter(_.startsWith("graft_wc_split")).toSet
-    val out = Files.createTempDirectory("graft-cli-outlatin").resolve("run").toString
-    WordCount.main(Array("--max-file-bytes=1024", in.toString, out, "2"))
-    // the run completed and counted the tolerated tokens (é → U+FFFD is
-    // stripped by normalization, leaving 'caf')
-    val lines = partLines(out).flatten
-    assert(lines.exists(_.startsWith("caf au\t")), s"got: ${lines.take(5)}")
-    // staging dirs created by this run are gone
-    val stageAfter = Files.list(Paths.get(System.getProperty("java.io.tmpdir")))
-      .iterator().asScala.map(_.getFileName.toString)
-      .filter(_.startsWith("graft_wc_split")).toSet
-    assert((stageAfter -- stageBefore).isEmpty,
-      s"staging dir leaked: ${stageAfter -- stageBefore}")
+  test("a gzip file, one unsplittable split, gives its plain twin's part files") {
+    spark
+    val plainIn = Files.createTempDirectory("graft-cli-inplain")
+    val gzIn = Files.createTempDirectory("graft-cli-ingz")
+    val text = Files.readAllBytes(splitInput.resolve("big.txt"))
+    Files.write(plainIn.resolve("big.txt"), text)
+    val gz = new java.util.zip.GZIPOutputStream(Files.newOutputStream(gzIn.resolve("big.txt.gz")))
+    try gz.write(text) finally gz.close()
+    for (n <- Seq(1, 3)) {
+      val (plain, _) = run(plainIn, n.toString)(Some(97))
+      val (zipped, trace) = run(gzIn, n.toString)(Some(97))
+      assert(zipped == plain, s"n=$n: gzip input must count what its plain twin counts")
+      assert(trace.stages.filter(_.inputBytes > 0).map(_.tasks).max == 1)
+    }
+  }
+
+  test("the removed --max-file-bytes flag fails before any write") {
+    spark
+    val in = Files.createTempDirectory("graft-cli-inflag")
+    Files.write(in.resolve("input.txt"), "x y z w".getBytes)
+    val out = Files.createTempDirectory("graft-cli-outflag").resolve("run")
+    // the flag shifts the positionals: output would be <in>, which the
+    // sink's overwrite mode would delete. Both spellings fail first: the
+    // `=` form reads the flag as a missing input path, the spaced form
+    // parses <out> as numParts
+    for ((args, thrown) <- Seq(
+        Seq("--max-file-bytes=8192", in.toString, out.toString, "3") ->
+          classOf[org.apache.spark.sql.AnalysisException],
+        Seq("--max-file-bytes", "8192", in.toString, out.toString, "3") ->
+          classOf[NumberFormatException])) {
+      assert(thrown.isInstance(intercept[Exception](WordCount.main(args.toArray))))
+      assert(Files.readAllLines(in.resolve("input.txt")).asScala == Seq("x y z w"))
+      assert(Files.list(in).count() == 1 && !Files.exists(out) && !Files.exists(Paths.get("8192")))
+    }
   }
 
   test("CLI n=1 word-count fast path with default partitioning") {
