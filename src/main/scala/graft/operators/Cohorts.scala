@@ -81,11 +81,11 @@ object Cohorts {
     // behavioral-segmentation composite. Recency anchors on a FIXED
     // literal date (no "now()" — determinism is a registry invariant);
     // every ntile orders with a c_custkey tiebreak so the quintile
-    // boundaries are engine-deterministic (Spark and DuckDB share
-    // SQL-standard ntile remainder-to-front semantics — parity already
-    // pinned by window_ntile). Monetary sums as DECIMAL then casts
-    // once. One customer-keyed aggregation + three |customers|-row
-    // windows: hash-shaped, no per-order windows.
+    // boundaries are engine-deterministic (SQL-standard ntile
+    // remainder-to-front semantics, [[Physical.ntile]] over the rank
+    // [[Physical.globalOrder]] gives). Monetary sums as DECIMAL then
+    // casts once. One customer-keyed aggregation + three global orders
+    // over its |customers| rows: hash-shaped, no per-order windows.
     Q("customer_rfm",
       """WITH base AS (
         |  SELECT o_custkey,
@@ -109,7 +109,6 @@ object Cohorts {
         |    WHEN r_score <= 2 THEN 'dormant'
         |    ELSE 'regular' END AS segment
         |FROM scored ORDER BY o_custkey""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
       import org.apache.spark.sql.types.DecimalType
       val base = Tables.orders(s, d)
         .groupBy("o_custkey")
@@ -118,10 +117,13 @@ object Cohorts {
             .cast("long").as("recency_days"),
           count(lit(1)).as("frequency"),
           sum(col("o_totalprice").cast(DecimalType(38, 4))).cast("double").as("monetary"))
-      val scored = base.select(col("*"),
-        ntile(5).over(Window.orderBy(col("recency_days").desc, col("o_custkey"))).as("r_score"),
-        ntile(5).over(Window.orderBy(col("frequency").asc, col("o_custkey"))).as("f_score"),
-        ntile(5).over(Window.orderBy(col("monetary").asc, col("o_custkey"))).as("m_score"))
+      val scored = Seq(
+        "r_score" -> col("recency_days").desc,
+        "f_score" -> col("frequency").asc,
+        "m_score" -> col("monetary").asc).foldLeft(base) { case (df, (score, by)) =>
+        Physical.globalOrder(df, Seq(by, col("o_custkey")))
+          .select(df.columns.map(col) :+ Physical.ntile(5, col("rank"), col("n")).as(score): _*)
+      }
       scored.select(
         col("o_custkey"), col("recency_days"), col("frequency"), col("monetary"),
         col("r_score"), col("f_score"), col("m_score"),
@@ -141,7 +143,7 @@ object Cohorts {
     // partkey), and the 70/90 thresholds compare 10·cum against
     // 7·total / 9·total in decimal arithmetic — no float boundary can
     // reclassify a part between engines. One part-keyed hash agg + one
-    // |parts|-row window.
+    // [[Physical.globalOrder]] over its |parts| rows.
     Q("abc_pareto_parts",
       """WITH rev AS (
         |  SELECT l_partkey,
@@ -159,22 +161,16 @@ object Cohorts {
         |       WHEN cum * 10 <= t.total * 9 THEN 'B'
         |       ELSE 'C' END AS abc_class
         |FROM ranked, tot t ORDER BY l_partkey""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
       import org.apache.spark.sql.types.DecimalType
       val rev = Tables.lineitem(s, d)
         .groupBy("l_partkey")
         .agg(sum((col("l_extendedprice") * (lit(1) - col("l_discount")))
           .cast(DecimalType(28, 4))).as("r"))
-      val tot = rev.agg(sum(col("r")).as("total"))
-      val w = Window.orderBy(col("r").desc, col("l_partkey"))
-      val ranked = rev.select(col("l_partkey"), col("r"),
-        sum(col("r")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)).as("cum"),
-        row_number().over(w).as("rk"))
-      ranked.crossJoin(broadcast(tot))
+      Physical.globalOrder(rev, Seq(col("r").desc, col("l_partkey")), "r")
         .select(col("l_partkey"), col("r").cast("double").as("revenue"),
-          col("rk").cast("long").as("rev_rank"),
-          when(col("cum") * 10 <= col("total") * 7, "A")
-            .when(col("cum") * 10 <= col("total") * 9, "B")
+          col("rank").as("rev_rank"),
+          when(col("cum_r") * 10 <= col("tot_r") * 7, "A")
+            .when(col("cum_r") * 10 <= col("tot_r") * 9, "B")
             .otherwise("C").as("abc_class"))
         .orderBy("l_partkey")
     }

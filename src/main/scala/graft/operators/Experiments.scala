@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.Q
 import graft.sources.Tables
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -147,44 +146,16 @@ object Experiments {
     // empirical CDFs stepped at every distinct value of EITHER sample
     // (the textbook two-sample definition; ties collapse into one step).
     //
-    // 100 TB posture (VERDICT r13 task 3): one conditional count per
-    // distinct value (hash agg with map-side partials), then the running
-    // CDF sums are TWO-PHASE over the distinct-value table — the X58
-    // assign_dense_ids pattern, never a global `ORDER BY value` window
-    // (with `value` a continuous double, |distinct| ≈ |purchase rows| at
-    // scale, so an unpartitioned window is a single-task sort of the
-    // table):
-    //   1. bucket by value; running sums WITHIN each bucket (window
-    //      partitioned by the bucket id — every task scans only its own
-    //      slice);
-    //   2. per-bucket totals — a #buckets-row table, windowed on ONE
-    //      tiny partition bounded by the bucket count — broadcast back
-    //      as offsets; cum = offset + local running sum.
-    // The bucket id is DETERMINISTIC in the value (width_bucket over the
-    // observed min/max — r14 ADVICE): spark_partition_id over a
-    // repartitionByRange was correct only while BOTH consumers read ONE
-    // materialized range exchange, because RangePartitioner samples its
-    // boundaries with an RDD-id-dependent seed — if exchange reuse broke
-    // (canonicalization drift), local sums and offsets would be computed
-    // under DIFFERENT boundaries and d_ks silently wrong. min/max are
-    // exact order-independent aggregates, so recomputation cannot skew
-    // the boundaries; correctness no longer rests on plan reuse (both
-    // consumers anyway branch off the materialized table, so the events
-    // scan + distinct-value agg run once regardless). The
-    // final max is order-independent, so no float-accumulation ordering
-    // enters the result: each |F_A−F_B| is computed from exact integer
-    // cumulative counts with one division per side. The distinct-value
-    // table feeds both phase passes, so it is materialized once
-    // ([[Materialize]]), and the totals and min/max ride that job.
-    // Bucket skew follows the value distribution rather than sampled
-    // quantiles — acceptable for a CDF statistic whose input is the
-    // DISTINCT-value table (64 buckets, each window task sorts
-    // |distinct|/64 on non-pathological data; a skewed slice degrades
-    // balance, never correctness). Degenerate guard: if either variant
-    // has zero purchases the CDF ratio is undefined — both engines emit
-    // ZERO rows (WHERE n_a > 0 AND n_b > 0) rather than a silent NULL
-    // d_ks; a single distinct value (vmin = vmax) lands whole in bucket
-    // 0.
+    // 100 TB posture: one conditional count per distinct value (hash
+    // agg with map-side partials), then the running CDF sums through
+    // [[Physical.globalOrder]] — with `value` a continuous double,
+    // |distinct| ≈ |purchase rows| at scale, so a bare `ORDER BY value`
+    // window would sort the table in one task. Each |F_A−F_B| comes from
+    // exact integer cumulative counts with one division per side, and
+    // the final max is order-independent, so no float-accumulation
+    // order enters the result. Degenerate guard: if either variant has
+    // zero purchases the CDF ratio is undefined — both engines emit ZERO
+    // rows (WHERE n_a > 0 AND n_b > 0) rather than a silent NULL d_ks.
     Q("ks_test_purchase",
       """WITH e AS (
         |  SELECT CASE WHEN substring(md5(CAST(user_id AS VARCHAR) || ':ab'), 1, 1) < '8'
@@ -210,35 +181,15 @@ object Experiments {
       val variant = when(
         substring(md5(concat(col("user_id").cast("string"), lit(":ab"))), 1, 1) < "8", "A")
         .otherwise("B")
-      val (c, t) = Materialize(Tables.events(s, d)
+      val c = Tables.events(s, d)
         .filter(col("event_type") === "purchase")
         .select(variant.as("variant"), col("value"))
         .groupBy("value")
         .agg(count(when(col("variant") === "A", lit(1))).as("ca"),
-          count(when(col("variant") === "B", lit(1))).as("cb")),
-        sum("ca").cast("long").as("n_a"), sum("cb").cast("long").as("n_b"),
-        min("value").as("vmin"), max("value").as("vmax"))
-      val Seq(nA, nB, vmin, vmax) = Seq("n_a", "n_b", "vmin", "vmax").map(Materialize.lit(t, _))
-      val nBuckets = 64
-      val bucketed = c.withColumn("pid",
-        when(vmax <= vmin, lit(0)).otherwise(least(
-          floor((col("value") - vmin) / (vmax - vmin) * nBuckets).cast("int"),
-          lit(nBuckets - 1))))
-      val localCdf = Window.partitionBy("pid").orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val local = bucketed
-        .withColumn("la", sum("ca").over(localCdf))
-        .withColumn("lb", sum("cb").over(localCdf))
-      val prevPids = Window.orderBy("pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = bucketed.groupBy("pid")
-        .agg(sum("ca").as("sa"), sum("cb").as("sb"))
-        .select(col("pid"),
-          coalesce(sum(col("sa")).over(prevPids), lit(0L)).as("oa"),
-          coalesce(sum(col("sb")).over(prevPids), lit(0L)).as("ob"))
-      local.join(broadcast(offsets), "pid")
-        .select((col("oa") + col("la")).cast("double").as("cum_a"),
-          (col("ob") + col("lb")).cast("double").as("cum_b"), nA.as("n_a"), nB.as("n_b"))
+          count(when(col("variant") === "B", lit(1))).as("cb"))
+      Physical.globalOrder(c, Seq(col("value")), "ca", "cb")
+        .select(col("cum_ca").cast("double").as("cum_a"), col("cum_cb").cast("double").as("cum_b"),
+          col("tot_ca").as("n_a"), col("tot_cb").as("n_b"))
         .filter(col("n_a") > 0 && col("n_b") > 0)
         .groupBy("n_a", "n_b")
         .agg(round(max(abs(col("cum_a") / col("n_a") - col("cum_b") / col("n_b"))), 6)

@@ -3,7 +3,8 @@ package graft.operators
 import graft.Q
 import graft.functions.{FirstCharPartitioner, InterleaveBitsEval, TextFns}
 import graft.sources.Tables
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Physical-layout layer (SURVEY.md §2b G18–G19): the reference's exact
@@ -62,6 +63,72 @@ object Physical {
     * Used by the layout query below and the [[graft.WordCount]] CLI. */
   def referencePlacement(keyCol: org.apache.spark.sql.Column, n: Int): org.apache.spark.sql.Column =
     sentinelOf(FirstCharPartitioner(keyCol, n), n)
+
+  /** `df` in one global order without one task holding it (the
+    * distributed zipWithIndex; the reference's WCPartitioner, PAPER.md
+    * §0), plus `rank` (1-based, long) in `order`, the row count `n`,
+    * and for each integral or decimal column `s` of `sums` its running
+    * sum `cum_s` through the row and its total `tot_s`. `order` must be
+    * total, so a row's rank depends on the data alone.
+    *
+    * An input whose Catalyst size estimate fits the session's
+    * broadcast threshold ([[Hints.broadcastThresholdBytes]]) is ordered
+    * by one unpartitioned window in one task; its totals are frames of
+    * that same window, which buffers the whole partition anyway (a
+    * `count(*) OVER ()` is a second window, and a 1-row aggregate a
+    * second scan). Otherwise, and always when the threshold is -1:
+    *   1. range-partition over `spark.sql.shuffle.partitions` and tag
+    *      each row with its partition id;
+    *   2. one [[Materialize]], whose job also carries `n` and the
+    *      totals;
+    *   3. rank and running sums within each partition (a window
+    *      partitioned by the id, so every task orders only its slice);
+    *   4. per-partition counts and sums, one row per partition,
+    *      prefix-summed in one task and broadcast back as offsets.
+    * The materialization is for correctness: a range exchange samples
+    * its boundaries with an RDD-id-seeded sampler, so two readers of
+    * one unmaterialized `repartitionByRange` see the same boundaries
+    * only while the engine reuses the exchange; with
+    * `spark.sql.exchange.reuse=false` most `assign_dense_ids` ids came
+    * out wrong. Neither path depends on where the boundaries land, so
+    * both give the same rows. */
+  def globalOrder(df: DataFrame, order: Seq[Column], sums: String*): DataFrame = {
+    val limit = Hints.broadcastThresholdBytes(df.sparkSession)
+    if (limit > 0 && df.queryExecution.analyzed.stats.sizeInBytes <= limit) {
+      val w = Window.orderBy(order: _*)
+      val upTo = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val all = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+      df.select(col("*") +: row_number().over(upTo).cast("long").as("rank") +:
+        count(lit(1)).over(all).as("n") +: sums.flatMap(s =>
+          Seq(sum(col(s)).over(upTo).as(s"cum_$s"), sum(col(s)).over(all).as(s"tot_$s"))): _*)
+    } else {
+      val pid = "range_pid"
+      val totals = count(lit(1)).as("n") +: sums.map(s => sum(col(s)).as(s"tot_$s"))
+      val (ranged, m) = Materialize(df.repartitionByRange(order: _*).withColumn(pid, spark_partition_id()),
+        totals.head, totals.tail: _*)
+      val local = Window.partitionBy(pid).orderBy(order: _*)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val prior = Window.orderBy(pid).rowsBetween(Window.unboundedPreceding, -1)
+      val offsets = ranged.groupBy(pid).agg(totals.head, totals.tail: _*)
+        .select(col(pid) +: m.schema.fieldNames.toSeq.map(t =>
+          coalesce(sum(col(t)).over(prior), lit(0)).as(s"off_$t")): _*)
+      ranged.join(broadcast(offsets), pid).select(df.columns.map(col) ++
+        Seq((col("off_n") + row_number().over(local)).as("rank"), Materialize.lit(m, "n").as("n")) ++
+        sums.flatMap(s => Seq(
+          (col(s"off_tot_$s") + sum(col(s)).over(local)).cast(m.schema(s"tot_$s").dataType).as(s"cum_$s"),
+          Materialize.lit(m, s"tot_$s").as(s"tot_$s"))): _*)
+    }
+  }
+
+  /** SQL `ntile(k)` of the row with 1-based `rank` among `n` rows: the
+    * first `n % k` tiles hold one row more than the rest. */
+  def ntile(k: Int, rank: Column, n: Column): Column = {
+    val div = (a: Column, b: Column) => call_function("div", a, b)
+    val q = div(n, lit(k))
+    val big = (q + 1) * (n % k) // rows in the larger tiles
+    val i = rank - 1
+    (when(i < big, div(i, q + 1)).otherwise(n % k + div(i - big, q)) + 1).cast("int")
+  }
 
   /** G18+: write `df` as a bucketed, per-bucket-sorted parquet table —
     * the persisted form of a co-located join side. Two tables bucketed
@@ -206,36 +273,13 @@ object Physical {
           FirstCharPartitioner(col("word"), 7).as("expected_pid"))
     },
 
-    // X58: dense global id assignment — ids 1..N in doc_id order WITHOUT
-    // a single-partition global window (the `row_number() OVER (ORDER
-    // BY ...)` a naive port would write funnels the corpus through one
-    // task). Two-phase, the distributed zipWithIndex:
-    //   1. range-partition by key; rank WITHIN each partition (the
-    //      window partitions by spark_partition_id, so every task ranks
-    //      only its own slice);
-    //   2. cumulative per-partition row counts — a #partitions-row
-    //      table, windowed on ONE tiny partition (bounded by the
-    //      partition count, never the data) — broadcast back as
-    //      offsets; id = offset + local rank.
-    // Ids depend only on the global key order, NOT on where the sampled
-    // range boundaries land, so the result is deterministic and matches
-    // the oracle's global row_number exactly.
+    // X58: dense global ids 1..N in doc_id order, through
+    // [[globalOrder]], never a single-task `row_number()` at scale.
     Q("assign_dense_ids",
       """SELECT doc_id, row_number() OVER (ORDER BY doc_id) AS id
         |FROM documents ORDER BY doc_id""".stripMargin) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      val ranged = Tables.documents(s, d).select(col("doc_id"))
-        .repartitionByRange(8, col("doc_id"))
-        .withColumn("pid", spark_partition_id())
-      val local = ranged.withColumn("rn",
-        row_number().over(Window.partitionBy("pid").orderBy("doc_id")))
-      val offsets = local.groupBy("pid").agg(count(lit(1)).as("n"))
-        .withColumn("offset",
-          coalesce(sum(col("n")).over(Window.orderBy("pid")
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .select("pid", "offset")
-      local.join(broadcast(offsets), "pid")
-        .select(col("doc_id"), (col("offset") + col("rn")).as("id"))
+      globalOrder(Tables.documents(s, d).select(col("doc_id")), Seq(col("doc_id")))
+        .select(col("doc_id"), col("rank").as("id"))
         .orderBy("doc_id")
     }
   )

@@ -164,7 +164,7 @@ object Ranking {
         .select(col("doc_id"), coalesce(col("h"), lit(0L)).as("h"))
         .orderBy(col("h").desc, col("doc_id")).limit(FuseK)
         .select(col("doc_id"),
-          row_number().over(Window.orderBy(col("h").desc, col("doc_id"))).as("r_lex"))
+          row_number().over(Window.orderBy(col("h").desc, col("doc_id"))).as("r_lex")) // bounded: FuseK rows
       val v = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
         .withColumn("n2", Similarity.norm2(col("v")))
@@ -176,7 +176,7 @@ object Ranking {
           round(Similarity.dot(col("qv"), col("v")) / (sqrt(col("n2")) * sqrt(col("qn2"))), 6).as("cos"))
         .orderBy(col("cos").desc, col("doc_id")).limit(FuseK)
         .select(col("doc_id"),
-          row_number().over(Window.orderBy(col("cos").desc, col("doc_id"))).as("r_sem"))
+          row_number().over(Window.orderBy(col("cos").desc, col("doc_id"))).as("r_sem")) // bounded: FuseK rows
       lexr.join(semr, Seq("doc_id"), "full_outer")
         .select(col("doc_id"),
           coalesce(col("r_lex"), lit(0)).as("r_lex"),

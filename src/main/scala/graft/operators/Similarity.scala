@@ -92,7 +92,8 @@ object Similarity {
     // nested-HOF "matrix" form kept the plan small but evaluated
     // lambda-in-lambda per row, ~10× slower. The native expression is
     // both small-plan AND tight-loop, which also frees the config to
-    // use more tables for recall (defaults tuned by RecallSweep).
+    // use more tables for recall (defaults tuned by a recall sweep over
+    // plane/table counts and seeds at sf0.001: see SimilaritySpec).
     val flatPlanes = hyperplanes(nPlanes * nTables, 64, seed).flatten.toArray
     val v = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("n2", norm2(col("v")))
@@ -283,7 +284,7 @@ object Similarity {
     // rows in physical partition order, making centroids (and thus ANN
     // results) depend on thread count / file splits
     var cents = Materialize(v.orderBy(col("vec_id")).limit(k)
-      .select(row_number().over(Window.orderBy(col("vec_id"))).as("cluster"),
+      .select(row_number().over(Window.orderBy(col("vec_id"))).as("cluster"), // bounded: k seeds
         col("v").as("c"), col("n2").as("cn2")))
     for (_ <- 1 to iters) {
       cents = Materialize(assignClusters(v, cents)

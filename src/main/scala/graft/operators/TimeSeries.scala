@@ -77,7 +77,7 @@ object TimeSeries {
         .groupBy(col("o_orderdate").cast("date").as("d"),
           pmod(datediff(col("o_orderdate").cast("date"), lit("1995-01-01").cast("date")), lit(7)).as("dow"))
         .agg(sum(col("o_totalprice").cast(DecimalType(38, 4))).cast("double").as("total"))
-      val w = Window.orderBy(col("d")).rowsBetween(-3, 3)
+      val w = Window.orderBy(col("d")).rowsBetween(-3, 3) // bounded: one row per calendar day
       val tr = daily.select(col("d"), col("dow"), col("total"),
         round(sum(col("total").cast(DecimalType(28, 4))).over(w).cast("double")
           / count(lit(1)).over(w), 6).as("trend"))
@@ -299,7 +299,7 @@ object TimeSeries {
         |  round((revenue - lag(revenue, 12) OVER w) / lag(revenue, 12) OVER w, 9) AS yoy
         |FROM m WINDOW w AS (ORDER BY month)
         |ORDER BY month""".stripMargin) { (s, d) =>
-      val w = Window.orderBy("month")
+      val w = Window.orderBy("month") // bounded: one row per month
       Tables.orders(s, d)
         .groupBy(date_trunc("month", col("o_orderdate")).as("month"))
         .agg(sum(col("o_totalprice").cast(DecimalType(38, 4)))

@@ -43,9 +43,9 @@ class EventsEncodingSpec extends AnyFunSuite {
   }
 
   test("Tables.events loads nanos-encoded and micros-encoded fixtures identically") {
-    val nanosDir = Files.createTempDirectory("events-nanos").toString
+    val nanosDir = SparkTestSession.tempDir("events-nanos").toString
     writeNanosFile(s"$nanosDir/events.parquet")
-    val microsDir = Files.createTempDirectory("events-micros").toString
+    val microsDir = SparkTestSession.tempDir("events-micros").toString
     writeMicrosDir(microsDir)
 
     val expected = wall.map { case (id, ts, _, _, _, _) => (id, ts) }
@@ -76,7 +76,7 @@ class EventsEncodingSpec extends AnyFunSuite {
     assert(Tables.lineitem(spark, SparkTestSession.sf0001)
       .schema("l_shipdate").dataType === TimestampType)
     // DATE-typed branch: a date-encoded regen loads as midnight timestamps
-    val dir = Files.createTempDirectory("orders-date").toString
+    val dir = SparkTestSession.tempDir("orders-date").toString
     spark.sql("SELECT 1L AS o_orderkey, DATE'2026-03-05' AS o_orderdate")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
     val viaDate = Tables.orders(spark, dir)
@@ -86,7 +86,7 @@ class EventsEncodingSpec extends AnyFunSuite {
   }
 
   test("registerViews isolates one unreadable table from the rest of the SQL surface") {
-    val dir = Files.createTempDirectory("views-isolated")
+    val dir = SparkTestSession.tempDir("views-isolated")
     Tables.names.filterNot(_ == "events").foreach { n =>
       Files.createSymbolicLink(
         dir.resolve(s"$n.parquet"),
@@ -108,9 +108,9 @@ class EventsEncodingSpec extends AnyFunSuite {
   }
 
   test("mixed-encoding directory: merged read rejected, per-file adaptive union works") {
-    val dir = Files.createTempDirectory("events-mixed").toString
+    val dir = SparkTestSession.tempDir("events-mixed").toString
     writeNanosFile(s"$dir/part-nanos.parquet")
-    val microsStage = Files.createTempDirectory("events-mixed-stage").toString
+    val microsStage = SparkTestSession.tempDir("events-mixed-stage").toString
     writeMicrosDir(microsStage)
     val microsPart = {
       import scala.jdk.CollectionConverters._
@@ -154,7 +154,7 @@ class EventsEncodingSpec extends AnyFunSuite {
         |  required double value;
         |  required binary props (STRING);
         |}""".stripMargin)
-    val dir = Files.createTempDirectory("events-micros-as-long").toString
+    val dir = SparkTestSession.tempDir("events-micros-as-long").toString
     val conf = new Configuration()
     GroupWriteSupport.setSchema(schema, conf)
     val writer = ExampleParquetWriter
@@ -189,7 +189,7 @@ class EventsEncodingSpec extends AnyFunSuite {
     // confs itself (same pattern as G31). Pin that the pushdown rule
     // really accepts a TIMESTAMP(NANOS)-annotated int64 read as long:
     // the probe plan must carry PushedAggregation, i.e. no data pages.
-    val dir = Files.createTempDirectory("events-nanos-probe").toString
+    val dir = SparkTestSession.tempDir("events-nanos-probe").toString
     writeNanosFile(s"$dir/events.parquet")
     val files = spark.read.parquet(s"$dir/events.parquet").inputFiles.toSeq
     Sessions.withConf(spark,
@@ -208,7 +208,7 @@ class EventsEncodingSpec extends AnyFunSuite {
     // with writeStream.start()' when the streaming path hit the LongType
     // branch — exactly the nanos-fixture-regen case the guard exists
     // for. The streaming branch now keeps the per-row CASE+raise_error.
-    val dir = Files.createTempDirectory("events-stream-nanos").toString
+    val dir = SparkTestSession.tempDir("events-stream-nanos").toString
     writeNanosFile(s"$dir/events.parquet")
     val stream = graft.streaming.StreamingOps.readEventsStream(spark, dir.toString)
     assert(stream.isStreaming)
@@ -230,7 +230,7 @@ class EventsEncodingSpec extends AnyFunSuite {
     // file had landed yet — the production ingest shape the doc comment
     // advertises. Pin the declared-schema fallback: definition succeeds,
     // and the surfaced schema matches the batch loader's (normalized ts).
-    val dir = Files.createTempDirectory("events-stream-empty").toString
+    val dir = SparkTestSession.tempDir("events-stream-empty").toString
     val stream = graft.streaming.StreamingOps.readEventsStream(spark, dir)
     assert(stream.isStreaming)
     assert(stream.schema("ts").dataType === TimestampType)

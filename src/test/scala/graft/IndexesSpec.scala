@@ -128,7 +128,7 @@ class IndexesSpec extends AnyFunSuite {
     // artifact's rows, the spread row-group gate and the skew branch.
     import java.nio.file.{Files, StandardCopyOption}
     import scala.jdk.CollectionConverters._
-    val dir = Files.createTempDirectory("graft-regen")
+    val dir = SparkTestSession.tempDir("graft-regen")
     val d = dir.toString
     // `rows` rows of (k, pad) in ONE file; `hot` puts every even id on
     // key 0; `rowGroupBytes` is the parquet block size

@@ -138,7 +138,7 @@ class PhysicalSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val spark2 = spark
     import spark2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-dpp")
+    val dir = SparkTestSession.tempDir("graft-dpp")
     // fact partitioned by order status (3 dirs); dim filtered to ONE
     // status — DPP should inject the dim's build-side values as a
     // runtime partition filter so the fact scan reads 1 of 3 partitions

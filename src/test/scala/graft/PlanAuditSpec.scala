@@ -14,6 +14,28 @@ class PlanAuditSpec extends AnyFunSuite {
     SparkEntry.queries(name)(spark, SparkTestSession.sf001)
       .queryExecution.executedPlan.toString
 
+  /** `name`'s plan on [[graft.operators.Physical.globalOrder]]'s
+    * distributed path, which broadcast off (-1) always takes. */
+  private def distributedPlan(name: String): String =
+    Sessions.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1")(plan(name))
+
+  /** A globalOrder plan: every window partitioned by the range partition
+    * id, except the offsets' prefix sum over one row per partition, the
+    * only `SinglePartition` exchange; offsets broadcast back. */
+  private def assertGlobalOrder(p: String, name: String): Unit = {
+    val specs = "windowspecdefinition\\(([^,]*),".r.findAllMatchIn(p).map(_.group(1)).toSeq
+    assert(specs.nonEmpty && specs.forall(_.startsWith("range_pid#")),
+      s"$name: every window must be keyed on the range partition id, saw ${specs.distinct}")
+    val offsets = "windowspecdefinition\\(range_pid#\\d+ ASC NULLS FIRST, specifiedwindowframe\\(RowFrame, unboundedpreceding\\$\\(\\), -1\\)\\)".r
+    val offsetWindows = p.linesIterator.count(l => l.contains("Window [") && offsets.findFirstIn(l).isDefined)
+    val partitioned = p.linesIterator.count(l => l.contains("Window [") && "\\], \\[range_pid#\\d+\\], \\[".r.findFirstIn(l).isDefined)
+    assert(partitioned >= 1, s"$name: the data-sized rank must be a window partitioned by the range partition id")
+    assert("Exchange SinglePartition".r.findAllIn(p).size == offsetWindows,
+      s"$name: the only single-partition exchanges must feed the per-partition offsets")
+    assert(p.contains("hashpartitioning(range_pid"), s"$name: rows must be ranked per range partition")
+    assert(p.contains("BroadcastHashJoin [range_pid"), s"$name: offsets must broadcast back, not reshuffle the data")
+  }
+
   test("ngram flagship: column-pruned scan, generate, partial+final agg, range sort") {
     val p = plan("ngram_count")
     assert(p.contains("ReadSchema: struct<text:string>"), "scan must read ONLY text")
@@ -414,13 +436,10 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("assign_dense_ids: data ranked per range-partition, offsets broadcast") {
-    val p = plan("assign_dense_ids")
-    assert(p.contains("hashpartitioning(pid"),
-      "the data-sized rank window must partition by spark_partition_id")
-    assert(p.contains("rangepartitioning(doc_id"),
-      "phase 1 must be a range repartition on the key")
-    assert(p.contains("BroadcastHashJoin"),
-      "offsets must broadcast back, not shuffle the data again")
+    val p = distributedPlan("assign_dense_ids")
+    assertGlobalOrder(p, "assign_dense_ids")
+    assert(p.contains("Scan ExistingRDD[doc_id"),
+      "ranks and offsets must both read the one materialized range partitioning")
   }
 
   test("anomaly_rolling_z: one customer-keyed window, never a single partition") {
@@ -505,29 +524,28 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("ks_test_purchase: CDF is two-phase per deterministic bucket, never a global window") {
-    // VERDICT r13 task 3 + r14 ADVICE: `value` is a continuous double,
-    // so at scale |distinct values| ≈ |purchase rows| and a bare ORDER
-    // BY value window is a single-task sort of the table. The shipped
-    // form is the X58 two-phase pattern, with the bucket id a
-    // DETERMINISTIC function of (value, broadcast min/max) — NOT
-    // spark_partition_id over a repartitionByRange, whose sampled
-    // boundaries are RDD-id-seeded and therefore correct only while
-    // both consumers read one materialized exchange. Correctness must
-    // not rest on exchange reuse.
-    val p = plan("ks_test_purchase")
-    assert(!p.contains("SPARK_PARTITION_ID") && !p.contains("spark_partition_id"),
-      "bucket id must be a pure function of value, never a physical partition id")
-    assert(p.contains("hashpartitioning(pid"),
-      "the data-sized CDF window must partition by the bucket id")
-    assert(p.contains("BroadcastHashJoin"),
-      "per-bucket offsets must broadcast back, not reshuffle the data")
-    // the only permissible SinglePartition consumers: the 64-row offsets
-    // window and the single-row totals/final aggs — the data-sized
-    // running-sum window spec must lead with pid, never bare value
-    assert(p.contains("windowspecdefinition(pid"),
-      "the CDF running sums must be windowed per bucket")
-    assert(!p.contains("windowspecdefinition(value"),
-      "no unpartitioned running-sum window over the value table")
+    // VERDICT r13 task 3: `value` is a continuous double, so at scale
+    // |distinct values| ≈ |purchase rows| and a bare ORDER BY value
+    // window is a single-task sort of the table. Correctness must not
+    // rest on exchange reuse: GlobalOrderSpec runs it with reuse off.
+    val p = distributedPlan("ks_test_purchase")
+    assertGlobalOrder(p, "ks_test_purchase")
+    assert(p.contains("windowspecdefinition(range_pid#") && p.contains("sum(ca#"),
+      "the CDF running sums must be windowed per range partition")
+  }
+
+  test("customer_rfm: quintiles ranked per range-partition, never over every customer in one task") {
+    val p = distributedPlan("customer_rfm")
+    assertGlobalOrder(p, "customer_rfm")
+    assert(p.contains(" div "), "the quintile must come from the rank and the row count")
+    assert(!p.contains("ntile("), "no ntile window over every customer")
+  }
+
+  test("abc_pareto_parts: revenue rank and running share per range-partition, total a literal") {
+    val p = distributedPlan("abc_pareto_parts")
+    assertGlobalOrder(p, "abc_pareto_parts")
+    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
+      "the revenue total must ride the materialization, not a cross join")
   }
 
   test("embedding_near_dup_by_label: pair stream folds through map-side bounded heaps") {

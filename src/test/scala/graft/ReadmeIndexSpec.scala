@@ -204,4 +204,30 @@ class ReadmeIndexSpec extends AnyFunSuite {
     assert(confSets.isEmpty,
       s"session conf writes in src/main outside Sessions: $confSets — scope them with Sessions.withConf")
   }
+
+  test("unpartitioned windows in src/main are Physical.globalOrder's or say why they are bounded") {
+    // an unpartitioned window sorts its whole input in one task: a side
+    // that grows with the data is ordered by globalOrder, and any other
+    // such window carries a `// bounded:` reason on its line
+    val window = "Window\\.orderBy\\(|Window\\.partitionBy\\(\\)".r
+    val found = mainCode.toSeq.flatMap { case (f, code) =>
+      val from = code.indexWhere(_.startsWith("def globalOrder("))
+      val helper = if (from < 0) Range(0, 0)
+        else from until Some(code.indexWhere(_.startsWith("def "), from + 1)).filter(_ > 0).getOrElse(code.size)
+      code.indices.filter(i => window.findFirstIn(code(i)).isDefined &&
+        !helper.contains(i) && !code(i).contains("// bounded:")).map(i => s"$f: ${code(i)}")
+    }.sorted
+    assert(found.isEmpty,
+      s"unpartitioned windows outside Physical.globalOrder with no bounded: reason: ${found.mkString("; ")}")
+  }
+
+  test("test temp dirs are made only by SparkTestSession.tempDir") {
+    // one helper deletes every test dir when the JVM exits
+    val create = "createTempDirectory\\(".r
+    val found = codeUnder("src").collect {
+      case (f, code) if f != "test/scala/graft/SparkTestSession.scala" &&
+        code.exists(create.findFirstIn(_).isDefined) => f
+    }.toSeq.sorted
+    assert(found.isEmpty, s"createTempDirectory outside SparkTestSession.tempDir: ${found.mkString(", ")}")
+  }
 }

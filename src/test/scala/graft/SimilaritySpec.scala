@@ -37,7 +37,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("ANN LSH top-k: mean recall vs brute force >= 0.5 at the defaults") {
-    // Defaults (6 planes × 24 tables) picked by RecallSweep: mean
+    // Defaults (6 planes × 24 tables) picked by a recall sweep: mean
     // top-10 recall 0.66–0.70 across hyperplane seeds at sf0.001, so
     // the 0.5 bound binds with margin but without seed-flakiness.
     val mean = meanRecall(6, 24)
@@ -237,10 +237,11 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("recall CI pins at sf0.1: LSH/IVF floors + SQ8 rank-error bound") {
-    // VERDICT r04 task 5: the RecallSweep and ivfTopK sweep findings promoted to
+    // VERDICT r04 task 5: the LSH and ivfTopK recall sweep findings promoted to
     // asserted thresholds at the BENCH scale, so a silent config
     // regression (plane/table count, probe width, quantizer damage)
-    // red-lines here. Measured on this corpus (RecallPinProbe):
+    // red-lines here. Measured on this corpus (mean top-10 recall
+    // against cosineTopK, and SQ8 rank displacement over shared ids):
     // lsh 0.700, ivf 0.563, sq8 0.988 / max rank displacement 1 — the
     // floors leave margin for ulp-level k-means tie flips, nothing more.
     val d = SparkTestSession.sf01

@@ -15,7 +15,7 @@ class SinkSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(name: String) =
-    Files.createTempDirectory(s"graft-$name").resolve("out").toString
+    SparkTestSession.tempDir(s"graft-$name").resolve("out").toString
 
   import SparkTestSession.partLines
 

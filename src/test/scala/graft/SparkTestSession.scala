@@ -10,6 +10,14 @@ object SparkTestSession {
   val sf001 = "/root/testdata/sf0.01"
   val sf01 = "/root/testdata/sf0.1"
 
+  /** A new directory under the temp root named `prefix…`, deleted with
+    * its contents when the JVM exits. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile))
+    dir
+  }
+
   /** Lines of each `part-*` file in `dir`, in filename order — the
     * "concatenate the reducer outputs" view both sink suites assert on. */
   def partLines(dir: String): Seq[Seq[String]] = {

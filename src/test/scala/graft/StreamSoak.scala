@@ -33,7 +33,7 @@ object StreamSoak {
 
   def main(args: Array[String]): Unit = {
     val fixtureDir = args.headOption.getOrElse("/tmp/graft_sf1")
-    val work = java.nio.file.Files.createTempDirectory("graft-soak").toString
+    val work = SparkTestSession.tempDir("graft-soak").toString
     val spark = Sessions.local(Sessions.cpus,
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")

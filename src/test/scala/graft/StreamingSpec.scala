@@ -71,7 +71,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   }
 
   test("X36+ streaming CDC apply: per-batch merge, later batch wins, replay idempotent") {
-    val base = java.nio.file.Files.createTempDirectory("graft-cdc-stream")
+    val base = SparkTestSession.tempDir("graft-cdc-stream")
     val snap = base.resolve("snapshot").toString
     val ckpt = base.resolve("ckpt").toString
     def t(s: String) = Timestamp.valueOf(s)
@@ -116,7 +116,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     // batch onto the already-merged snapshot. Reproduced deterministically
     // by applying the batch through the identical code path while leaving
     // the checkpoint untouched, then restarting the stream.
-    val base = java.nio.file.Files.createTempDirectory("graft-cdc-crash")
+    val base = SparkTestSession.tempDir("graft-cdc-crash")
     val snap = base.resolve("snapshot").toString
     val ckpt = base.resolve("ckpt").toString
     def t(s: String) = Timestamp.valueOf(s)
@@ -150,7 +150,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   }
 
   test("G21+ rate-source soak: stateful agg makes progress and evicts state") {
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-soak-ckpt").toString
+    val ckpt = SparkTestSession.tempDir("graft-soak-ckpt").toString
     val src = StreamingOps.rateEvents(spark, rowsPerSecond = 400, nUsers = 32)
     val agg = src.withWatermark("ts", "2 seconds")
       .groupBy(window(col("ts"), "1 second"), col("user_id"))
@@ -204,7 +204,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   }
 
   test("G21+G24 streaming parquet sink: checkpointed append equals batch read") {
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-sink")
+    val base = SparkTestSession.tempDir("graft-stream-sink")
     val out = base.resolve("data").toString
     val ckpt = base.resolve("ckpt").toString
     val q = StreamingOps.writeStreamParquet(
@@ -219,7 +219,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   }
 
   test("G24 checkpoint-restart: kill mid-stream, resume, output is exactly-once") {
-    val base = java.nio.file.Files.createTempDirectory("graft-stream-restart")
+    val base = SparkTestSession.tempDir("graft-stream-restart")
     val in = base.resolve("in").toString
     val out = base.resolve("data").toString
     val ckpt = base.resolve("ckpt").toString
@@ -567,7 +567,7 @@ class StreamingSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   }
 
   test("X81 streaming near-dup screen: verdicts == brute force over the evolving index; replay idempotent") {
-    val base = java.nio.file.Files.createTempDirectory("graft-neardup-stream")
+    val base = SparkTestSession.tempDir("graft-neardup-stream")
     val idx = base.resolve("index").toString
     val vd = base.resolve("verdicts").toString
     val ckpt = base.resolve("ckpt").toString

@@ -47,7 +47,7 @@ class TablesSchemaSpec extends AnyFunSuite {
     // part of the schema key: the window's loads hit the warm schemas. A
     // private copy of the tables is an input version no earlier load in
     // this JVM has seen inside the window.
-    val d = Files.createTempDirectory("schema-pushdown").toString
+    val d = SparkTestSession.tempDir("schema-pushdown").toString
     Tables.names.foreach(n => Files.copy(
       Paths.get(s"${SparkTestSession.sf0001}/$n.parquet"), Paths.get(s"$d/$n.parquet")))
     val s = spark.newSession()
@@ -58,7 +58,7 @@ class TablesSchemaSpec extends AnyFunSuite {
 
   test("a parquet file rewritten in place with an added column loads the new column") {
     import scala.jdk.CollectionConverters._
-    val dir = Files.createTempDirectory("schema-regen")
+    val dir = SparkTestSession.tempDir("schema-regen")
     def write(df: DataFrame): Unit = {
       val tmp = dir.resolve("tmp")
       df.coalesce(1).write.parquet(tmp.toString)
@@ -77,7 +77,7 @@ class TablesSchemaSpec extends AnyFunSuite {
   }
 
   test("a schema memoized under one parquet conf is not served under another") {
-    val dir = Files.createTempDirectory("schema-nanos").toString
+    val dir = SparkTestSession.tempDir("schema-nanos").toString
     val file = s"$dir/events.parquet"
     EventsEncodingSpec.writeNanosFile(file)
     val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"

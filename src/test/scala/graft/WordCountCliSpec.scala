@@ -16,8 +16,8 @@ class WordCountCliSpec extends AnyFunSuite {
 
   test("CLI replays the reference's clam/cram example byte-for-byte") {
     spark // force session init before main()'s getOrCreate
-    val in = Files.createTempDirectory("graft-cli-in")
-    val out = Files.createTempDirectory("graft-cli-out").resolve("run").toString
+    val in = SparkTestSession.tempDir("graft-cli-in")
+    val out = SparkTestSession.tempDir("graft-cli-out").resolve("run").toString
     Files.write(in.resolve("input.txt"),
       "How can a clam cram in a clean cream can?".getBytes)
     WordCount.main(Array(in.toString, out, "3", "7"))
@@ -36,8 +36,8 @@ class WordCountCliSpec extends AnyFunSuite {
 
   test("n-grams span line breaks within a file (reference mapper queue)") {
     spark
-    val in = Files.createTempDirectory("graft-cli-inml")
-    val out = Files.createTempDirectory("graft-cli-outml").resolve("run").toString
+    val in = SparkTestSession.tempDir("graft-cli-inml")
+    val out = SparkTestSession.tempDir("graft-cli-outml").resolve("run").toString
     // reference/WordCount.java:68-91 keeps a queue across readLine()
     // calls so "b c" exists even though b and c sit on different lines
     Files.write(in.resolve("book.txt"), "a b\nc d".getBytes)
@@ -48,8 +48,8 @@ class WordCountCliSpec extends AnyFunSuite {
 
   test("malformed n falls back to 3 like the reference CLI") {
     spark
-    val in = Files.createTempDirectory("graft-cli-inbad")
-    val out = Files.createTempDirectory("graft-cli-outbad").resolve("run").toString
+    val in = SparkTestSession.tempDir("graft-cli-inbad")
+    val out = SparkTestSession.tempDir("graft-cli-outbad").resolve("run").toString
     Files.write(in.resolve("input.txt"), "x y z w".getBytes)
     // reference/WordCount.java:129-136 catches the parse failure → n=3
     WordCount.main(Array(in.toString, out, "not-a-number"))
@@ -60,7 +60,7 @@ class WordCountCliSpec extends AnyFunSuite {
     * `splitBytes` when given, and the run's [[Trace]]. */
   private def run(in: java.nio.file.Path, args: String*)(
       splitBytes: Option[Long] = None): (Seq[Seq[String]], Trace.Run) = {
-    val dir = Files.createTempDirectory("graft-cli-out")
+    val dir = SparkTestSession.tempDir("graft-cli-out")
     val out = dir.resolve("run").toString
     val conf = splitBytes.map("spark.sql.files.maxPartitionBytes" -> _.toString).toSeq
     try {
@@ -86,7 +86,7 @@ class WordCountCliSpec extends AnyFunSuite {
         case _ => (1 to rnd.nextInt(5)).map(_ => words(rnd.nextInt(words.length))).mkString(" ")
       }
     }
-    val in = Files.createTempDirectory("graft-cli-insplit")
+    val in = SparkTestSession.tempDir("graft-cli-insplit")
     Files.write(in.resolve("big.txt"), lines.mkString("\n").getBytes("UTF-8"))
     Files.write(in.resolve("small file.txt"), "alpha beta gamma".getBytes("UTF-8"))
     in
@@ -119,7 +119,7 @@ class WordCountCliSpec extends AnyFunSuite {
     // spark.read.text keeps malformed bytes, which normalization strips
     // like any other non-alphanumeric: a Latin-1 'café' must not abort
     // the run, and a split run counts what the default run counts
-    val in = Files.createTempDirectory("graft-cli-inlatin")
+    val in = SparkTestSession.tempDir("graft-cli-inlatin")
     val latin1Line = "café au lait ".getBytes("ISO-8859-1") // 0xE9 = malformed in UTF-8
     val body = new java.io.ByteArrayOutputStream()
     (1 to 500).foreach { _ => body.write(latin1Line); body.write('\n') }
@@ -132,8 +132,8 @@ class WordCountCliSpec extends AnyFunSuite {
 
   test("a gzip file, one unsplittable split, gives its plain twin's part files") {
     spark
-    val plainIn = Files.createTempDirectory("graft-cli-inplain")
-    val gzIn = Files.createTempDirectory("graft-cli-ingz")
+    val plainIn = SparkTestSession.tempDir("graft-cli-inplain")
+    val gzIn = SparkTestSession.tempDir("graft-cli-ingz")
     val text = Files.readAllBytes(splitInput.resolve("big.txt"))
     Files.write(plainIn.resolve("big.txt"), text)
     val gz = new java.util.zip.GZIPOutputStream(Files.newOutputStream(gzIn.resolve("big.txt.gz")))
@@ -148,9 +148,9 @@ class WordCountCliSpec extends AnyFunSuite {
 
   test("the removed --max-file-bytes flag fails before any write") {
     spark
-    val in = Files.createTempDirectory("graft-cli-inflag")
+    val in = SparkTestSession.tempDir("graft-cli-inflag")
     Files.write(in.resolve("input.txt"), "x y z w".getBytes)
-    val out = Files.createTempDirectory("graft-cli-outflag").resolve("run")
+    val out = SparkTestSession.tempDir("graft-cli-outflag").resolve("run")
     // the flag shifts the positionals: output would be <in>, which the
     // sink's overwrite mode would delete. Both spellings fail first: the
     // `=` form reads the flag as a missing input path, the spaced form
@@ -168,8 +168,8 @@ class WordCountCliSpec extends AnyFunSuite {
 
   test("CLI n=1 word-count fast path with default partitioning") {
     spark
-    val in = Files.createTempDirectory("graft-cli-in1")
-    val out = Files.createTempDirectory("graft-cli-out1").resolve("run").toString
+    val in = SparkTestSession.tempDir("graft-cli-in1")
+    val out = SparkTestSession.tempDir("graft-cli-out1").resolve("run").toString
     Files.write(in.resolve("a.txt"), "b a a\nc b a".getBytes)
     WordCount.main(Array(in.toString, out, "1"))
     assert(partLines(out).flatten == Seq("a\t3", "b\t2", "c\t1"))

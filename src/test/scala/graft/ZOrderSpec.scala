@@ -38,7 +38,7 @@ class ZOrderSpec extends AnyFunSuite {
 
   test("2-D box query prunes z-clustered files but not unclustered ones") {
     val events = sources.Tables.events(spark, sf001)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-zorder").toString
+    val tmp = SparkTestSession.tempDir("graft-zorder").toString
     try {
       Physical.zorderEvents(events, 8)
         .select("event_id", "user_id", "value")
