@@ -82,8 +82,8 @@ object Cohorts {
     // literal date (no "now()" — determinism is a registry invariant);
     // every ntile orders with a c_custkey tiebreak so the quintile
     // boundaries are engine-deterministic (SQL-standard ntile
-    // remainder-to-front semantics, [[Physical.ntile]] over the rank
-    // [[Physical.globalOrder]] gives). Monetary sums as DECIMAL then
+    // remainder-to-front semantics, [[Physical.ntile]] over the ranks
+    // [[Physical.globalRanks]] gives). Monetary sums as DECIMAL then
     // casts once. One customer-keyed aggregation + three global orders
     // over its |customers| rows: hash-shaped, no per-order windows.
     Q("customer_rfm",
@@ -117,13 +117,11 @@ object Cohorts {
             .cast("long").as("recency_days"),
           count(lit(1)).as("frequency"),
           sum(col("o_totalprice").cast(DecimalType(38, 4))).cast("double").as("monetary"))
-      val scored = Seq(
-        "r_score" -> col("recency_days").desc,
-        "f_score" -> col("frequency").asc,
-        "m_score" -> col("monetary").asc).foldLeft(base) { case (df, (score, by)) =>
-        Physical.globalOrder(df, Seq(by, col("o_custkey")))
-          .select(df.columns.map(col) :+ Physical.ntile(5, col("rank"), col("n")).as(score): _*)
-      }
+      val scores = Seq("r_score" -> col("recency_days").desc,
+        "f_score" -> col("frequency").asc, "m_score" -> col("monetary").asc)
+      val scored = Physical.globalRanks(base, scores.map { case (s, by) => s -> Seq(by, col("o_custkey")) }: _*)
+        .select(base.columns.map(col) ++ scores.map { case (s, _) =>
+          Physical.ntile(5, col(s), col("n")).as(s) }: _*)
       scored.select(
         col("o_custkey"), col("recency_days"), col("frequency"), col("monetary"),
         col("r_score"), col("f_score"), col("m_score"),

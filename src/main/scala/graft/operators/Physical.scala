@@ -64,43 +64,31 @@ object Physical {
   def referencePlacement(keyCol: org.apache.spark.sql.Column, n: Int): org.apache.spark.sql.Column =
     sentinelOf(FirstCharPartitioner(keyCol, n), n)
 
-  /** `df` in one global order without one task holding it (the
-    * distributed zipWithIndex; the reference's WCPartitioner, PAPER.md
-    * §0), plus `rank` (1-based, long) in `order`, the row count `n`,
-    * and for each integral or decimal column `s` of `sums` its running
-    * sum `cum_s` through the row and its total `tot_s`. `order` must be
-    * total, so a row's rank depends on the data alone.
+  /** `df` plus `rank` (1-based, long) in `order`, which must be total,
+    * the row count `n`, and for each integral or decimal column `s` of
+    * `sums` its running sum `cum_s` (nulls count as 0) and total `tot_s`
+    * (null only if every `s` is).
     *
-    * An input whose Catalyst size estimate fits the session's
-    * broadcast threshold ([[Hints.broadcastThresholdBytes]]) is ordered
-    * by one unpartitioned window in one task; its totals are frames of
-    * that same window, which buffers the whole partition anyway (a
-    * `count(*) OVER ()` is a second window, and a 1-row aggregate a
-    * second scan). Otherwise, and always when the threshold is -1:
-    *   1. range-partition over `spark.sql.shuffle.partitions` and tag
-    *      each row with its partition id;
-    *   2. one [[Materialize]], whose job also carries `n` and the
-    *      totals;
-    *   3. rank and running sums within each partition (a window
-    *      partitioned by the id, so every task orders only its slice);
-    *   4. per-partition counts and sums, one row per partition,
-    *      prefix-summed in one task and broadcast back as offsets.
-    * The materialization is for correctness: a range exchange samples
-    * its boundaries with an RDD-id-seeded sampler, so two readers of
-    * one unmaterialized `repartitionByRange` see the same boundaries
-    * only while the engine reuses the exchange; with
-    * `spark.sql.exchange.reuse=false` most `assign_dense_ids` ids came
-    * out wrong. Neither path depends on where the boundaries land, so
-    * both give the same rows. */
+    * An input [[oneTask]] admits is ordered by one window in one task,
+    * its totals frames of that window (not a second window or scan).
+    * Any other is never held by one task (the distributed zipWithIndex;
+    * the reference's WCPartitioner, PAPER.md §0): range partitions
+    * tagged with their id, one [[Materialize]] whose job also carries
+    * `n` and the totals, per-partition ranks and running sums, and
+    * per-partition offsets prefix-summed over one row per partition and
+    * broadcast back. Materializing keeps one set of boundaries: each
+    * range exchange samples its own, so two readers of one
+    * `repartitionByRange` agree only while the engine reuses it (with
+    * reuse off most `assign_dense_ids` ids came out wrong). Neither
+    * path depends on where the boundaries land. */
   def globalOrder(df: DataFrame, order: Seq[Column], sums: String*): DataFrame = {
-    val limit = Hints.broadcastThresholdBytes(df.sparkSession)
-    if (limit > 0 && df.queryExecution.analyzed.stats.sizeInBytes <= limit) {
+    if (oneTask(df)) {
       val w = Window.orderBy(order: _*)
       val upTo = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val all = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
       df.select(col("*") +: row_number().over(upTo).cast("long").as("rank") +:
         count(lit(1)).over(all).as("n") +: sums.flatMap(s =>
-          Seq(sum(col(s)).over(upTo).as(s"cum_$s"), sum(col(s)).over(all).as(s"tot_$s"))): _*)
+          Seq(coalesce(sum(col(s)).over(upTo), lit(0)).as(s"cum_$s"), sum(col(s)).over(all).as(s"tot_$s"))): _*)
     } else {
       val pid = "range_pid"
       val totals = count(lit(1)).as("n") +: sums.map(s => sum(col(s)).as(s"tot_$s"))
@@ -115,10 +103,29 @@ object Physical {
       ranged.join(broadcast(offsets), pid).select(df.columns.map(col) ++
         Seq((col("off_n") + row_number().over(local)).as("rank"), Materialize.lit(m, "n").as("n")) ++
         sums.flatMap(s => Seq(
-          (col(s"off_tot_$s") + sum(col(s)).over(local)).cast(m.schema(s"tot_$s").dataType).as(s"cum_$s"),
+          (col(s"off_tot_$s") + coalesce(sum(col(s)).over(local), lit(0)))
+            .cast(m.schema(s"tot_$s").dataType).as(s"cum_$s"),
           Materialize.lit(m, s"tot_$s").as(s"tot_$s"))): _*)
     }
   }
+
+  /** [[globalOrder]]'s `rank` in each of `orders`, named beside it,
+    * plus `n`: one select in one task, where a `globalOrder` per order
+    * made `customer_rfm` about 1.5× slower in `graft.Bench` at sf0.001. */
+  def globalRanks(df: DataFrame, orders: (String, Seq[Column])*): DataFrame =
+    if (oneTask(df)) df.select(col("*") +: orders.map { case (r, order) =>
+      row_number().over(Window.orderBy(order: _*)).cast("long").as(r) } :+ count(lit(1)).over(
+      Window.orderBy(orders.head._2: _*).rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)).as("n"): _*)
+    else orders.foldLeft(df) { case (acc, (r, order)) =>
+      globalOrder(acc.drop("n"), order).withColumnRenamed("rank", r) }
+
+  /** One task orders `df` while broadcasts are on (-1: nothing may be
+    * gathered in one place) and its estimate is at most 512 MB: on 4
+    * cores the distributed path lost at every size measured, up to
+    * 295 MB (`abc_pareto_parts`, 100× sf0.1: 40.9 s against 29.1 s). */
+  private def oneTask(df: DataFrame): Boolean =
+    Hints.broadcastThresholdBytes(df.sparkSession) > 0 &&
+      df.queryExecution.analyzed.stats.sizeInBytes <= (512L << 20)
 
   /** SQL `ntile(k)` of the row with 1-based `rank` among `n` rows: the
     * first `n % k` tiles hold one row more than the rest. */

@@ -37,6 +37,33 @@ class GlobalOrderSpec extends AnyFunSuite {
     assert(types(oneTask.head) == types(Sessions.withConf(spark, off)(run()).head))
   }
 
+  test("globalOrder: a null in a sum column counts as 0 in its running sum on both paths") {
+    // the lowest 300 keys, which open the first range partitions, hold nulls
+    val df = spark.range(0, 1000).select(col("id").as("k"),
+      when(col("id") >= 300 && col("id") % 5 =!= 0, col("id")).as("a"),
+      lit(null).cast("long").as("z"))
+    def run() = Physical.globalOrder(df, Seq(col("k")), "a", "z").orderBy("rank").collect().toSeq
+    val oneTask = run()
+    val cumA = (0L until 1000L).scanLeft(0L)((c, k) => if (k >= 300 && k % 5 != 0) c + k else c).tail
+    assert(oneTask.map(_.getAs[Long]("cum_a")) == cumA)
+    assert(oneTask.forall(r => r.getAs[Long]("tot_a") == cumA.last && r.getAs[Long]("cum_z") == 0L && r.isNullAt(r.fieldIndex("tot_z"))))
+    for (parts <- Seq("1", "4", "200"))
+      assert(Sessions.withConf(spark, off, "spark.sql.shuffle.partitions" -> parts)(run()) == oneTask,
+        s"range partitions ($parts shuffle partitions) differ from one task")
+  }
+
+  test("globalRanks gives each order's globalOrder rank and n on both paths") {
+    val df = spark.range(0, 1000).select(col("id").as("id"), (col("id") * 7919 % 1000).as("k"))
+    val orders = Seq("up" -> Seq(col("k")), "down" -> Seq(col("id") % 10, col("k").desc))
+    def run() = Physical.globalRanks(df, orders: _*).orderBy("id").collect().toSeq
+    val want = orders.map { case (r, order) =>
+      Physical.globalOrder(df, order).orderBy("id").select("rank").collect().map(_.getLong(0)).toSeq }
+    val oneTask = run()
+    for ((r, i) <- orders.map(_._1).zipWithIndex) assert(oneTask.map(_.getAs[Long](r)) == want(i), r)
+    assert(oneTask.forall(_.getAs[Long]("n") == 1000L))
+    assert(Sessions.withConf(spark, off)(run()) == oneTask)
+  }
+
   test("globalOrder: an empty input gives no rows on both paths") {
     val empty = spark.range(0).select(col("id").as("k"), col("id").as("a"))
     def run() = Physical.globalOrder(empty, Seq(col("k")), "a").collect()

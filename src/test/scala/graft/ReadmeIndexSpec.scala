@@ -207,18 +207,20 @@ class ReadmeIndexSpec extends AnyFunSuite {
 
   test("unpartitioned windows in src/main are Physical.globalOrder's or say why they are bounded") {
     // an unpartitioned window sorts its whole input in one task: a side
-    // that grows with the data is ordered by globalOrder, and any other
-    // such window carries a `// bounded:` reason on its line
+    // that grows with the data is ordered by globalOrder or globalRanks,
+    // and any other such window carries a `// bounded:` reason on its line
     val window = "Window\\.orderBy\\(|Window\\.partitionBy\\(\\)".r
     val found = mainCode.toSeq.flatMap { case (f, code) =>
-      val from = code.indexWhere(_.startsWith("def globalOrder("))
-      val helper = if (from < 0) Range(0, 0)
+      val helper = Seq("def globalOrder(", "def globalRanks(").flatMap { h =>
+        val from = code.indexWhere(_.startsWith(h))
+        if (from < 0) Nil
         else from until Some(code.indexWhere(_.startsWith("def "), from + 1)).filter(_ > 0).getOrElse(code.size)
+      }.toSet
       code.indices.filter(i => window.findFirstIn(code(i)).isDefined &&
         !helper.contains(i) && !code(i).contains("// bounded:")).map(i => s"$f: ${code(i)}")
     }.sorted
     assert(found.isEmpty,
-      s"unpartitioned windows outside Physical.globalOrder with no bounded: reason: ${found.mkString("; ")}")
+      s"unpartitioned windows outside Physical.globalOrder and globalRanks with no bounded: reason: ${found.mkString("; ")}")
   }
 
   test("test temp dirs are made only by SparkTestSession.tempDir") {
