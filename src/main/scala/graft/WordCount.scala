@@ -7,7 +7,7 @@ import scala.collection.mutable.ArrayBuffer
 
 import graft.functions.NGramsEval
 import graft.operators.{Physical, TextPipeline}
-import graft.sources.Sinks
+import graft.plans.OneShuffleCount
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.TaskAttemptID
@@ -15,7 +15,7 @@ import org.apache.hadoop.mapreduce.lib.input.{FileSplit, LineRecordReader}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.SerializableWritable
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, concat_ws}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Drop-in CLI for the reference job (reference/WordCount.java:129-160,
@@ -26,15 +26,24 @@ import org.apache.spark.unsafe.types.UTF8String
   *     <input-text-dir> <output-dir> [n=3] [numParts=7]
   * }}}
   *
-  * Same lifecycle, Spark-native: text splits in, their lines folded into
-  * documents ([[splitDocs]]) → normalize → tokenize → n-gram windows (the
-  * codegen'd [[graft.functions.NGramsExpr]], n=1 is the word-count fast
-  * path) → partial+final count (Spark's map-side combine = the
-  * reference's combiner) → first-char range placement
-  * ([[Physical.referencePlacement]], bit-faithful to WCPartitioner's
-  * integer-division math) → per-partition sort → `key\tcount` TSV part
-  * files, one per bucket, which concatenate to a globally sorted file —
-  * byte-compatible with the reference's reducer outputs.
+  * Same lifecycle, as the reference's one MapReduce job: text splits in,
+  * their lines folded into documents ([[splitDocs]]) → normalize →
+  * tokenize → n-gram windows (the codegen'd [[graft.functions.NGramsExpr]],
+  * n=1 is the word-count fast path) → the combiner (Spark's partial count)
+  * and a map-side sort on the n-gram → one shuffle by first-char range
+  * placement ([[Physical.referencePlacement]], bit-faithful to
+  * WCPartitioner's integer-division math) → a reduce-side sort and the
+  * reducer, which sums each n-gram's partial counts once, in order →
+  * `key\tcount` part files, one per bucket, which concatenate to a
+  * globally sorted file. [[plans.OneShuffleCount]] plans that shape; the
+  * result does not depend on it (without it Spark plans a second shuffle
+  * on the n-gram for the final count).
+  *
+  * The lines are written by the text source as `concat_ws("\t", ngram,
+  * cnt)`, byte-compatible with the reference's reducer outputs and with a
+  * tab-separated CSV write of the same rows: an n-gram holds only
+  * `[a-z0-9 ]`, never starts or ends with a space and is never empty, so
+  * CSV's quoting, whitespace-trimming and empty-value rules never fire.
   *
   * G33: a user of the reference switches by replacing the `hadoop jar`
   * invocation; input/output dirs and the optional n keep their meaning
@@ -61,13 +70,17 @@ object WordCount {
     val spark = SparkSession.builder()
       .appName(s"graft-wordcount-n$n")
       .getOrCreate()
-    val counts = TextPipeline.ngramCountUnsorted(splitDocs(spark, input, n), "value", n)
-    Sinks.writeTsv(
-      counts
-        .repartition(numParts, Physical.referencePlacement(col("ngram"), numParts))
-        .sortWithinPartitions("ngram"),
-      output)
+    OneShuffleCount.install(spark)
+    lines(spark, input, n, numParts).write.mode("overwrite").text(output)
   }
+
+  /** The job's `ngram\tcount` lines: partition i holds first-char bucket
+    * i, sorted. */
+  private[graft] def lines(spark: SparkSession, input: String, n: Int, numParts: Int): DataFrame =
+    TextPipeline.ngramCountUnsorted(splitDocs(spark, input, n), "value", n)
+      .repartition(numParts, Physical.referencePlacement(col("ngram"), numParts))
+      .sortWithinPartitions("ngram")
+      .select(concat_ws("\t", col("ngram"), col("cnt").cast("string")))
 
   /** `value` documents over the line scan: a split's lines in order,
     * joined by `\n`, so n-grams span line breaks as the reference mapper's

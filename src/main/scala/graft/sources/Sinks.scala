@@ -17,14 +17,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Sinks {
 
-  /** Plain TSV (no header, tab separator, no quoting of simple values):
-    * the reference's `key\tvalue` line format. */
-  def writeTsv(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite")
-      .option("sep", "\t")
-      .option("header", "false")
-      .csv(path)
-
   /** The reference's full sink contract: `numParts` range-partitioned,
     * in-partition-sorted TSV part files (reference/WordCount.java:32-62 +
     * 158: WCPartitioner + TextOutputFormat). */

@@ -1,14 +1,19 @@
 package graft
 
 import graft.functions.GraftFunctions
-import graft.plans.ApproxDistinctRewrite
+import graft.operators.Physical
+import graft.plans.{ApproxDistinctRewrite, MergeCountExec, OneShuffleCount}
+import org.apache.spark.sql.ExtendedSession
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** SQL-surface + optimizer-extension tests (SURVEY.md §3.3 / §4.3(4)):
   * registered native functions callable from SQL, and the opt-in
-  * count(DISTINCT) → HLL rewrite. */
-class ExtensionsSpec extends AnyFunSuite {
+  * count(DISTINCT) → HLL rewrite, and the one-shuffle count strategy that
+  * a session started with [[GraftExtensions]] plans with. */
+class ExtensionsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -60,5 +65,20 @@ class ExtensionsSpec extends AnyFunSuite {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations.filterNot(_ == ApproxDistinctRewrite)
     }
+  }
+
+  test("a session started with GraftExtensions plans the WordCount shape with one exchange") {
+    val s = ExtendedSession(spark, new GraftExtensions)
+    assert(!s.experimental.extraStrategies.contains(OneShuffleCount))
+    val df = s.range(500)
+      .select(concat(lit("w"), col("id").bitwiseAND(31).cast("string")).as("k"))
+      .groupBy("k").agg(count(lit(1)).as("c"))
+      .repartition(3, Physical.referencePlacement(col("k"), 3))
+      .sortWithinPartitions("k")
+    val rows = df.collect()
+    val plan = df.queryExecution.executedPlan
+    assert(collect(plan) { case e: ShuffleExchangeExec => e }.size == 1, plan)
+    assert(collect(plan) { case m: MergeCountExec => m }.size == 1, plan)
+    assert(rows.length == 32 && rows.map(_.getLong(1)).sum == 500)
   }
 }

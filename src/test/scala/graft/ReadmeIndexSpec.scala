@@ -130,6 +130,14 @@ class ReadmeIndexSpec extends AnyFunSuite {
     finally walk.close()
   }
 
+  /** Indices of the lines of the first definition in `code` that starts
+    * with `header`, up to the next `def` (empty when there is none). */
+  private def defLines(code: Seq[String], header: String): Range = {
+    val from = code.indexWhere(_.startsWith(header))
+    if (from < 0) Range(0, 0)
+    else from until Some(code.indexWhere(_.startsWith("def "), from + 1)).filter(_ > 0).getOrElse(code.size)
+  }
+
   /** src/main's files, paths relative to src/main/scala. */
   private lazy val mainCode = codeUnder("src/main/scala")
 
@@ -211,11 +219,7 @@ class ReadmeIndexSpec extends AnyFunSuite {
     // and any other such window carries a `// bounded:` reason on its line
     val window = "Window\\.orderBy\\(|Window\\.partitionBy\\(\\)".r
     val found = mainCode.toSeq.flatMap { case (f, code) =>
-      val helper = Seq("def globalOrder(", "def globalRanks(").flatMap { h =>
-        val from = code.indexWhere(_.startsWith(h))
-        if (from < 0) Nil
-        else from until Some(code.indexWhere(_.startsWith("def "), from + 1)).filter(_ > 0).getOrElse(code.size)
-      }.toSet
+      val helper = Seq("def globalOrder(", "def globalRanks(").flatMap(defLines(code, _)).toSet
       code.indices.filter(i => window.findFirstIn(code(i)).isDefined &&
         !helper.contains(i) && !code(i).contains("// bounded:")).map(i => s"$f: ${code(i)}")
     }.sorted
@@ -231,5 +235,19 @@ class ReadmeIndexSpec extends AnyFunSuite {
         code.exists(create.findFirstIn(_).isDefined) => f
     }.toSeq.sorted
     assert(found.isEmpty, s"createTempDirectory outside SparkTestSession.tempDir: ${found.mkString(", ")}")
+  }
+
+  test("planner strategies are put on a session only by OneShuffleCount.install") {
+    // one install path: GraftExtensions injects the strategy and the CLI
+    // calls install; any other `extraStrategies =` fails here
+    val owner = "main/scala/graft/plans/OneShuffleCount.scala"
+    val assign = "extraStrategies\\s*=(?!=)".r
+    val sites = codeUnder("src").toSeq.flatMap { case (f, code) =>
+      val helper = if (f == owner) defLines(code, "def install(").toSet else Set.empty[Int]
+      code.indices.filter(i => assign.findFirstIn(code(i)).isDefined).map(i => (helper(i), s"$f: ${code(i)}"))
+    }
+    assert(sites.exists(_._1), s"no strategy assignment found in $owner's install")
+    val found = sites.filterNot(_._1).map(_._2).sorted
+    assert(found.isEmpty, s"extraStrategies assigned outside OneShuffleCount.install: ${found.mkString("; ")}")
   }
 }

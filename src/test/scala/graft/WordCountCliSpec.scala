@@ -2,6 +2,15 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
+import graft.functions.FirstCharPartitionExpr
+import graft.plans.{MergeCountExec, OneShuffleCount}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.expressions.aggregate.Final
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, SortAggregateExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** G33: end-to-end test of the [[WordCount]] CLI — the reference's
@@ -9,7 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * through spark-submit semantics: raw text in, `key\tcount` TSV part
   * files out, concatenating (in part order) to a global sort; the
   * golden clam/cram example is byte-compared. */
-class WordCountCliSpec extends AnyFunSuite {
+class WordCountCliSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   // the CLI's getOrCreate() must find the shared test session
   lazy val spark = SparkTestSession.spark
   import SparkTestSession.partLines
@@ -112,6 +121,58 @@ class WordCountCliSpec extends AnyFunSuite {
     // the equality is not vacuous: the scan really ran as many splits
     val scanTasks = trace.stages.filter(_.inputBytes > 0).map(_.tasks).max
     assert(scanTasks > 5, s"expected many scan tasks, got $scanTasks")
+  }
+
+  test("n=3 plans the reference's one MapReduce job: one placement shuffle, two stages") {
+    spark
+    val (_, trace) = run(splitInput, "3", "7")()
+    assert(trace.stages.size == 2 && trace.jobs == 2, trace.json)
+    val df = WordCount.lines(spark, splitInput.toString, 3, 7)
+    df.collect() // finalizes this QueryExecution's adaptive plan
+    val plan = df.queryExecution.executedPlan
+    val keys = collect(plan) { case s: ShuffleExchangeExec => s.outputPartitioning }
+    assert(keys match {
+      case Seq(HashPartitioning(Seq(e), 7)) =>
+        e.find { case FirstCharPartitionExpr(a: Attribute, 7) => a.name == "ngram"; case _ => false }.isDefined
+      case _ => false
+    }, s"one exchange keyed by the placement expression: $plan")
+    assert(collect(plan) { case s: SortExec => s }.size == 2, plan)
+    assert(collect(plan) { case m: MergeCountExec => m }.size == 1, plan)
+    assert(collect(plan) {
+      case a: BaseAggregateExec if a.aggregateExpressions.exists(_.mode == Final) => a
+      case a: SortAggregateExec => a
+    }.isEmpty, plan)
+  }
+
+  /** The `part-*` files of `dir` in part order, as bytes. */
+  private def partBytes(dir: java.nio.file.Path): Seq[Seq[Byte]] =
+    Files.list(dir).iterator().asScala.toSeq
+      .filter(_.getFileName.toString.startsWith("part-"))
+      .sortBy(_.getFileName.toString)
+      .map(p => Files.readAllBytes(p).toSeq)
+
+  for (n <- Seq(1, 3)) test(s"n=$n: part files do not depend on the plan") {
+    spark
+    val settings = Seq(
+      "AQE off" -> ("spark.sql.adaptive.enabled" -> "false"),
+      "1 shuffle partition" -> ("spark.sql.shuffle.partitions" -> "1"),
+      "200 shuffle partitions" -> ("spark.sql.shuffle.partitions" -> "200"),
+      "no broadcast" -> ("spark.sql.autoBroadcastJoinThreshold" -> "-1"),
+      "redundant sorts kept" -> ("spark.sql.execution.removeRedundantSorts" -> "false"))
+    val dir = SparkTestSession.tempDir("graft-cli-plan")
+    try for (((name, conf), i) <- settings.zipWithIndex) Sessions.withConf(spark, conf) {
+      val (cli, without) = (dir.resolve(s"cli-$i"), dir.resolve(s"without-$i"))
+      val (_, oneShuffle) = Trace(spark)(WordCount.main(Array(splitInput.toString, cli.toString, n.toString, "7")))
+      OneShuffleCount.install(spark, on = false)
+      val (_, twoShuffles) = try Trace(spark)(
+        WordCount.lines(spark, splitInput.toString, n, 7).write.text(without.toString))
+      finally OneShuffleCount.install(spark)
+      val parts = partBytes(cli)
+      assert(parts.size > 1 && parts == partBytes(without),
+        s"$name: part files differ with the strategy removed")
+      assert(oneShuffle.stages.size == 2 && twoShuffles.stages.size == 3,
+        s"$name: ${oneShuffle.json} with the strategy, ${twoShuffles.json} without")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
   test("non-UTF-8 bytes are tolerated under small splits") {
