@@ -19,7 +19,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * string's UTF-8 bytes with no intermediate regex match, token array,
   * sliced sub-arrays, or per-window `array_join`. The HOF chain
   * allocates a token array plus one slice + one join per window per
-  * document; this allocates the output n-grams only.
+  * document; this allocates the output n-grams only, their bytes in one
+  * array per document (the normalized text itself when n = 1).
   *
   * Byte-level processing is exact: every code point outside ASCII has
   * all UTF-8 bytes >= 0x80 and is stripped by the regex (Java `\s` is
@@ -110,21 +111,32 @@ object NGramsEval {
         t += 1
       }
     } else {
-      var g = 0
+      // every window, space-joined, back to back in one array: window g
+      // holds tokens g until g+n plus n-1 spaces
+      var window = n - 1
+      var t = 0
+      while (t < n) { window += lens(t); t += 1 }
+      var total = window.toLong
+      var g = 1
       while (g < out.length) {
-        var tot = n - 1 // n-1 separator spaces
+        window += lens(g + n - 1) - lens(g - 1)
+        total += window
+        g += 1
+      }
+      require(total <= Int.MaxValue, s"the ${n}-grams of one document take $total bytes, over 2 GiB")
+      val grams = new Array[Byte](total.toInt)
+      var p = 0
+      g = 0
+      while (g < out.length) {
+        val start = p
         var j = 0
-        while (j < n) { tot += lens(g + j); j += 1 }
-        val gb = new Array[Byte](tot)
-        var p = 0
-        j = 0
         while (j < n) {
-          System.arraycopy(buf, starts(g + j), gb, p, lens(g + j))
+          if (j > 0) { grams(p) = ' '; p += 1 }
+          System.arraycopy(buf, starts(g + j), grams, p, lens(g + j))
           p += lens(g + j)
-          if (p < tot) { gb(p) = ' '; p += 1 }
           j += 1
         }
-        out(g) = UTF8String.fromBytes(gb)
+        out(g) = UTF8String.fromBytes(grams, start, p - start)
         g += 1
       }
     }

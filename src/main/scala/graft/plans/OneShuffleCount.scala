@@ -9,7 +9,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, RepartitionByExpression, Sort}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{SortExec, SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.execution.aggregate.AggUtils
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.types.{IntegerType, StringType}
 
@@ -22,15 +21,17 @@ import org.apache.spark.sql.types.{IntegerType, StringType}
   *     RepartitionByExpression(e(k), Aggregate([k], [k, count(1) AS c]), Some(n)))
   * }}}
   *
-  * — plans as the combiner, one shuffle and the reducer: partial count →
-  * map-side sort on `k` → the repartition's own hash exchange → reduce-side
-  * sort on `k` → [[MergeCountExec]]. Spark's own plan shuffles twice, on
-  * `k` for the final count and on `e` for the repartition: it cannot see
-  * that `e` depends on `k` only, so that every row of a key already meets
-  * in one partition. The reduce-side sort is what makes adjacent keys
-  * equal; the map-side sort only hands it presorted runs, which its
-  * TimSort merges in close to linear time, and moves that work off the
-  * skew-bound write stage onto the balanced map stage.
+  * — plans as the reference's map side, one shuffle and the reducer:
+  * [[SortCountExec]] (sort the map output, then combine each sorted run,
+  * as Hadoop runs the combiner over each sorted spill) → the
+  * repartition's own hash exchange → reduce-side sort on `k` →
+  * [[MergeCountExec]]. Spark's own plan shuffles twice, on `k` for the
+  * final count and on `e` for the repartition: it cannot see that `e`
+  * depends on `k` only, so that every row of a key already meets in one
+  * partition. The reduce-side sort stays, and is what makes equal keys
+  * adjacent: a map task's output is sorted run by run, not as a whole,
+  * and a reducer reads many map tasks' outputs. Those presorted runs let
+  * its TimSort merge in close to linear time.
   *
   * Anything else plans as Spark plans it: a partition expression that is
   * nondeterministic or reads another column, range or round-robin
@@ -49,13 +50,10 @@ object OneShuffleCount extends SparkStrategy {
           k.dataType == StringType && !k.nullable &&
           r.partitioning.isInstanceOf[HashPartitioning] &&
           es.forall(_.deterministic) && es.forall(_.references.subsetOf(AttributeSet(k))) =>
-      val partial = AggUtils.planAggregateWithoutDistinct(Seq(g), Seq(count),
-        Seq(g, Alias(count.resultAttribute, c.name)(c.exprId)), planLater(child)).head.children.head
-      val byKey = Seq(SortOrder(k, Ascending))
-      val shuffled = ShuffleExchangeExec(r.partitioning, SortExec(byKey, global = false, partial),
-        REPARTITION_BY_NUM)
-      MergeCountExec(k, partial.output.last, Seq(out, c.toAttribute),
-        SortExec(byKey, global = false, shuffled)) :: Nil
+      val combined = SortCountExec(k, count.resultAttribute, planLater(child))
+      val shuffled = ShuffleExchangeExec(r.partitioning, combined, REPARTITION_BY_NUM)
+      MergeCountExec(k, combined.count, Seq(out, c.toAttribute),
+        SortExec(Seq(SortOrder(k, Ascending)), global = false, shuffled)) :: Nil
     case _ => Nil
   }
 

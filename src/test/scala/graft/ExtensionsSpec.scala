@@ -2,9 +2,11 @@ package graft
 
 import graft.functions.GraftFunctions
 import graft.operators.Physical
-import graft.plans.{ApproxDistinctRewrite, MergeCountExec, OneShuffleCount}
+import graft.plans.{ApproxDistinctRewrite, MergeCountExec, OneShuffleCount, SortCountExec}
 import org.apache.spark.sql.ExtendedSession
+import org.apache.spark.sql.execution.SortExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -75,10 +77,14 @@ class ExtensionsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .groupBy("k").agg(count(lit(1)).as("c"))
       .repartition(3, Physical.referencePlacement(col("k"), 3))
       .sortWithinPartitions("k")
-    val rows = df.collect()
+    val (rows, trace) = Trace(s)(df.collect())
     val plan = df.queryExecution.executedPlan
+    assert(trace.stages.size == 2, trace.json)
     assert(collect(plan) { case e: ShuffleExchangeExec => e }.size == 1, plan)
+    assert(collect(plan) { case s: SortCountExec => s }.size == 1, plan)
+    assert(collect(plan) { case s: SortExec => s }.size == 1, plan)
     assert(collect(plan) { case m: MergeCountExec => m }.size == 1, plan)
+    assert(collect(plan) { case a: BaseAggregateExec => a }.isEmpty, plan)
     assert(rows.length == 32 && rows.map(_.getLong(1)).sum == 500)
   }
 }

@@ -45,6 +45,14 @@ class NGramsExprSpec extends AnyFunSuite {
     assert(evalNative("汉字 mixed 汉 text", 1) == Seq("mixed", "text"))
   }
 
+  test("a document's n-grams are views into one byte array") {
+    for (n <- Seq(1, 2, 3)) {
+      val grams = NGramsEval.eval(UTF8String.fromString("The cat, the HAT and the bat."), n)
+      val bases = (0 until grams.numElements()).map(grams.getUTF8String(_).getBaseObject)
+      assert(bases.size > 1 && bases.forall(_ eq bases.head), s"n=$n")
+    }
+  }
+
   test("property: native eval == JVM reference model on arbitrary strings") {
     val weird = Gen.listOf(Gen.frequency(
       5 -> Gen.alphaNumChar, 3 -> Gen.const(' '), 1 -> Gen.oneOf('\t', '\n', '\r'),

@@ -1,9 +1,11 @@
 package graft
 
 import graft.operators.Physical
-import graft.plans.{MergeCountExec, OneShuffleCount}
+import graft.plans.{MergeCountExec, OneShuffleCount, SortCountExec}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -27,14 +29,18 @@ class OneShuffleCountSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   /** `df`'s rows, its exchanges and its [[MergeCountExec]]s, run with the
     * strategy on or off; the session's own setting is put back after. */
   private def run(on: Boolean)(df: => DataFrame): (Seq[Row], Int, Int) = {
+    val (rows, plan, _) = traced(on)(df)
+    (rows, collect(plan) { case s: ShuffleExchangeExec => s }.size,
+      collect(plan) { case m: MergeCountExec => m }.size)
+  }
+
+  private def traced(on: Boolean)(df: => DataFrame): (Seq[Row], SparkPlan, Trace.Run) = {
     val was = spark.sessionState.planner.strategies.contains(OneShuffleCount)
     OneShuffleCount.install(spark, on)
     try {
       val d = df
-      val rows = d.collect().toSeq
-      val plan = d.queryExecution.executedPlan
-      (rows, collect(plan) { case s: ShuffleExchangeExec => s }.size,
-        collect(plan) { case m: MergeCountExec => m }.size)
+      val (rows, trace) = Trace(spark)(d.collect().toSeq)
+      (rows, d.queryExecution.executedPlan, trace)
     } finally OneShuffleCount.install(spark, was)
   }
 
@@ -42,8 +48,14 @@ class OneShuffleCountSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     def df = words.groupBy("k").agg(count(lit(1)).as("c"))
       .repartition(5, placement).sortWithinPartitions("k")
     val (off, offExchanges, _) = run(on = false)(df)
-    val (on, onExchanges, merges) = run(on = true)(df)
-    assert((offExchanges, onExchanges, merges) == ((2, 1, 1)))
+    val (on, plan, trace) = traced(on = true)(df)
+    assert(offExchanges == 2 && collect(plan) { case s: ShuffleExchangeExec => s }.size == 1, plan)
+    // the map side sorts and combines in one operator; the one sort left is the reducer's
+    assert(collect(plan) { case s: SortCountExec => s }.size == 1, plan)
+    assert(collect(plan) { case s: SortExec => s }.size == 1, plan)
+    assert(collect(plan) { case m: MergeCountExec => m }.size == 1, plan)
+    assert(collect(plan) { case a: BaseAggregateExec => a }.isEmpty, plan)
+    assert(trace.stages.size == 2, trace.json)
     assert(on == off && on.size == 32)
   }
 

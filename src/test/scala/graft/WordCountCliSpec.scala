@@ -3,13 +3,12 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import graft.functions.FirstCharPartitionExpr
-import graft.plans.{MergeCountExec, OneShuffleCount}
+import graft.plans.{MergeCountExec, OneShuffleCount, SortCountExec}
 import org.apache.spark.sql.catalyst.expressions.Attribute
-import org.apache.spark.sql.catalyst.expressions.aggregate.Final
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.SortExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, SortAggregateExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -136,12 +135,11 @@ class WordCountCliSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         e.find { case FirstCharPartitionExpr(a: Attribute, 7) => a.name == "ngram"; case _ => false }.isDefined
       case _ => false
     }, s"one exchange keyed by the placement expression: $plan")
-    assert(collect(plan) { case s: SortExec => s }.size == 2, plan)
+    // the map side sorts and combines in one operator; the one sort left is the reducer's
+    assert(collect(plan) { case s: SortCountExec => s }.size == 1, plan)
+    assert(collect(plan) { case s: SortExec => s }.size == 1, plan)
     assert(collect(plan) { case m: MergeCountExec => m }.size == 1, plan)
-    assert(collect(plan) {
-      case a: BaseAggregateExec if a.aggregateExpressions.exists(_.mode == Final) => a
-      case a: SortAggregateExec => a
-    }.isEmpty, plan)
+    assert(collect(plan) { case a: BaseAggregateExec => a }.isEmpty, plan)
   }
 
   /** The `part-*` files of `dir` in part order, as bytes. */
@@ -158,6 +156,7 @@ class WordCountCliSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       "1 shuffle partition" -> ("spark.sql.shuffle.partitions" -> "1"),
       "200 shuffle partitions" -> ("spark.sql.shuffle.partitions" -> "200"),
       "no broadcast" -> ("spark.sql.autoBroadcastJoinThreshold" -> "-1"),
+      "no whole-stage codegen" -> ("spark.sql.codegen.wholeStage" -> "false"),
       "redundant sorts kept" -> ("spark.sql.execution.removeRedundantSorts" -> "false"))
     val dir = SparkTestSession.tempDir("graft-cli-plan")
     try for (((name, conf), i) <- settings.zipWithIndex) Sessions.withConf(spark, conf) {
@@ -173,6 +172,31 @@ class WordCountCliSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(oneShuffle.stages.size == 2 && twoShuffles.stages.size == 3,
         s"$name: ${oneShuffle.json} with the strategy, ${twoShuffles.json} without")
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  for (n <- Seq(1, 3)) test(s"n=$n: many map-side runs per task give the default run's part files") {
+    spark
+    val dir = SparkTestSession.tempDir("graft-cli-runs")
+    def job(out: String): Trace.Run =
+      Trace(spark)(WordCount.main(Array(splitInput.toString, dir.resolve(out).toString, n.toString, "7")))._2
+    val was = SortCountExec.runBytes
+    try {
+      val plain = job("plain")
+      SortCountExec.runBytes = 1 // each run ends once its first allocation is full
+      val runs = job("runs")
+      val parts = partBytes(dir.resolve("runs"))
+      assert(parts.size > 1 && parts == partBytes(dir.resolve("plain")),
+        "part files differ when every map task emits many runs")
+      // not vacuous: a key leaves a map task once per run it is in, so one
+      // reduce task read more records than any part has lines, and more
+      // than with one run per task
+      val lines = parts.map(_.count(_ == '\n')).max
+      assert(runs.total.maxShuffleRecords > lines, runs.json)
+      assert(runs.total.maxShuffleRecords > plain.total.maxShuffleRecords, s"${plain.json} ${runs.json}")
+    } finally {
+      SortCountExec.runBytes = was
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
   }
 
   test("non-UTF-8 bytes are tolerated under small splits") {
