@@ -42,40 +42,7 @@ case class SortCountExec(key: Attribute, count: Attribute, child: SparkPlan) ext
       })
       def free(): Unit = { memory.freeMemory(arena.heldBytes); arena.clear() }
       task.addTaskCompletionListener[Unit](_ => free())
-      val writer = new UnsafeRowWriter(2)
-      var refused: UTF8String = null // the key the last run had no room for
-
-      def fill(): Unit = {
-        if (refused != null && arena.add(refused)) refused = null
-        while (refused == null && rows.hasNext) {
-          val s = rows.next().getUTF8String(k)
-          if (!arena.add(s)) {
-            if (arena.size == 0) throw new SparkOutOfMemoryError("UNABLE_TO_ACQUIRE_MEMORY",
-              java.util.Map.of("requestedBytes", s.numBytes.toString, "receivedBytes", "0"))
-            refused = s.clone()
-          }
-        }
-        arena.sort()
-      }
-
-      new Iterator[InternalRow] {
-        private var ready = false
-        override def hasNext: Boolean = ready || {
-          ready = arena.nextRun() || {
-            free()
-            (refused != null || rows.hasNext) && { fill(); arena.nextRun() }
-          }
-          ready
-        }
-        override def next(): InternalRow = {
-          if (!hasNext) throw new NoSuchElementException
-          ready = false
-          writer.reset()
-          writer.write(0, arena.runKey)
-          writer.write(1, arena.runCount)
-          writer.getRow
-        }
-      }
+      SortCountExec.counts(rows.map(_.getUTF8String(k)), arena, () => free())
     }
   }
 
@@ -83,9 +50,51 @@ case class SortCountExec(key: Attribute, count: Attribute, child: SparkPlan) ext
 }
 
 object SortCountExec {
-  /** Arena bytes at which a run ends if no grant was refused first;
-    * tests lower it to force many runs per task. */
+  /** Arena bytes at which a run ends if no grant was refused first. Not
+    * measured: a map task of the benchmark corpus holds a few MB of keys.
+    * Tests lower it to force many runs per task. */
   @volatile private[graft] var runBytes: Long = 256L << 20
+
+  /** One task's output: `keys` added to `arena` until it refuses one, then
+    * that run sorted and emitted as `(key, count)` rows, `release` called
+    * to empty the arena, and the refused key carried into the next run.
+    * An empty arena that refuses a key, fresh or carried, cannot make room
+    * by ending a run, so the task fails rather than drop the key. */
+  private[graft] def counts(keys: Iterator[UTF8String], arena: KeyArena, release: () => Unit): Iterator[InternalRow] =
+    new Iterator[InternalRow] {
+      private val writer = new UnsafeRowWriter(2)
+      private var refused: UTF8String = null // the key the last run had no room for
+      private var ready = false
+
+      private def add(s: UTF8String): Unit = if (!arena.add(s)) {
+        if (arena.size == 0) throw new SparkOutOfMemoryError("UNABLE_TO_ACQUIRE_MEMORY",
+          java.util.Map.of("requestedBytes", s.numBytes.toString, "receivedBytes", "0"))
+        refused = s.clone()
+      }
+
+      private def fill(): Unit = {
+        if (refused != null) { val s = refused; refused = null; add(s) }
+        while (refused == null && keys.hasNext) add(keys.next())
+        arena.sort()
+      }
+
+      override def hasNext: Boolean = ready || {
+        ready = arena.nextRun() || {
+          release()
+          (refused != null || keys.hasNext) && { fill(); arena.nextRun() }
+        }
+        ready
+      }
+
+      override def next(): InternalRow = {
+        if (!hasNext) throw new NoSuchElementException
+        ready = false
+        writer.reset()
+        writer.write(0, arena.runKey)
+        writer.write(1, arena.runCount)
+        writer.getRow
+      }
+    }
 }
 
 /** Byte strings in one heap arena, sorted in place into the order of

@@ -2,7 +2,8 @@ package graft
 
 import scala.collection.mutable.ArrayBuffer
 
-import graft.plans.KeyArena
+import graft.plans.{KeyArena, SortCountExec}
+import org.apache.spark.memory.SparkOutOfMemoryError
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
@@ -73,5 +74,30 @@ class KeyArenaSpec extends AnyFunSuite {
     // a 1-byte cap still fills the first allocation, then ends each run
     val capped = runs(Seq.fill(1000)("0123456789".getBytes.toSeq), 1L)
     assert(capped.size > 1 && capped.forall(_.size == 1) && capped.map(_.head._2).sum == 1000)
+  }
+
+  /** The operator's per-task output over `keys`, the arena's `grant` asked
+    * as the task's memory manager would be. */
+  private def counts(keys: Seq[String], grant: Long => Boolean): List[(String, Long)] = {
+    val arena = new KeyArena(Long.MaxValue, grant)
+    SortCountExec.counts(keys.iterator.map(UTF8String.fromString), arena, () => arena.clear())
+      .map(r => (r.getUTF8String(0).toString, r.getLong(1))).toList
+  }
+
+  private val keyList = (0 until 1000).map(i => f"key${i % 700}%06d")
+
+  test("a key refused mid-run is counted in the next run") {
+    var asks = 0
+    val got = counts(keyList, _ => { asks += 1; asks != 3 }) // the third grant, mid-run, is refused
+    assert(asks > 3, "the refusal was never reached")
+    assert(got.groupMapReduce(_._1)(_._2)(_ + _) == keyList.groupBy(identity).map { case (k, v) => k -> v.size.toLong })
+  }
+
+  test("an empty arena that refuses the carried key fails the task, not drops its rows") {
+    var asks = 0
+    // the first run's two allocations are granted, then every grant is
+    // refused, also the retry of the carried key once the run is freed
+    intercept[SparkOutOfMemoryError](counts(keyList, _ => { asks += 1; asks <= 2 }))
+    assert(asks > 3, "no run ended before the refusal")
   }
 }
